@@ -51,11 +51,6 @@ def parse_subject_header(header_raw: Column) -> Column:
     return F.regexp_replace(folded, r"\n[ \t]+", " ")
 
 
-def base64_encode(content: Column) -> Column:
-    """D6 (slackEventServer.js:174)."""
-    return F.base64(content)
-
-
 def avro_available(spark: SparkSession) -> bool:
     """Probe for the spark-avro module (not bundled in pip pyspark)."""
     try:

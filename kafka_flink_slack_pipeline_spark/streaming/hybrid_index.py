@@ -83,13 +83,13 @@ from ..operators.similarity import (
 )
 from .curation_funnel import _compact_batch_store
 from .retrieval_index import (
+    _adhoc_search,
     _alive_of,
-    _fold_horizon,
     _land_text,
     _mask_visible,
     _read_store,
-    _tail_live,
-    bm25_index_search,
+    _seed_search,
+    _serve_tail,
     compact_retrieval_store,
 )
 
@@ -339,19 +339,17 @@ def hybrid_index_search(
     the stores — bm25_index_search's lexical ranks fused with the
     list-pruned dense ranks by the same rrf_fuse, both faces under the
     update/delete tail mask."""
-    lex = bm25_index_search(spark, state_dir, query_ids=query_ids).select(
+    tail = _serve_tail(spark, state_dir)
+    lex = _seed_search(spark, state_dir, tail, query_ids).select(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
-    fold_id = _fold_horizon(state_dir)
-    tail = _tail_live(spark, state_dir, fold_id)
-
     seeds = _read_store(
         spark, f"{state_dir}/vecseeds", "dense seed sidecar dir"
     )
     if query_ids is not None:
         seeds = seeds.filter(F.col("query_id").isin(list(query_ids)))
-    seeds = _mask_visible(seeds, tail, key="query_id")
-    return _fused_over(spark, state_dir, codebook, lex, seeds, tail)
+    seeds = _mask_visible(seeds, tail.frame, key="query_id")
+    return _fused_over(spark, state_dir, codebook, lex, seeds, tail.frame)
 
 
 def hybrid_index_search_adhoc(
@@ -370,13 +368,12 @@ def hybrid_index_search_adhoc(
     rrf_fuse. A query may carry text only (vector None — lexical-only)
     or vector only (empty text is NOT allowed on the lexical side, so
     pass text='' to skip it)."""
-    from .retrieval_index import bm25_index_search_adhoc
-
+    tail = _serve_tail(spark, state_dir)
     texts = {
         qid: t for qid, (t, _) in queries.items() if t and t.strip()
     }
     if texts:
-        lex = bm25_index_search_adhoc(spark, state_dir, texts).select(
+        lex = _adhoc_search(spark, state_dir, tail, texts).select(
             "query_id", "doc_id", F.col("rank").alias("lex_rank")
         )
     else:
@@ -388,12 +385,10 @@ def hybrid_index_search_adhoc(
         for qid, (_, v) in queries.items()
         if v is not None
     ]
-    fold_id = _fold_horizon(state_dir)
-    tail = _tail_live(spark, state_dir, fold_id)
     seeds = spark.createDataFrame(
         vec_rows, "query_id bigint, qe array<double>"
     )
-    return _fused_over(spark, state_dir, codebook, lex, seeds, tail)
+    return _fused_over(spark, state_dir, codebook, lex, seeds, tail.frame)
 
 
 def _fused_over(

@@ -40,10 +40,9 @@ afford it:
       only (docmeta batches newer than the last fold): a posting/seed
       row is visible iff its doc has no tail version, or its ts equals
       the tail winner's ts and that winner is not a tombstone. The
-      tail frame is bounded by compaction cadence (compact_every), so
-      the mask join is broadcast-sized and serving stays FLAT in
-      corpus size — the folded store needs no mask because compaction
-      already applied one.
+      folded store needs no mask because compaction already applied
+      one, and the tail holds at most compact_every batches, so the
+      mask stays small and serving stays FLAT in corpus size.
     compaction — compact_retrieval_store computes the global LWW
       winner per doc over the folded range, physically DROPS
       superseded postings/seeds and tombstoned docs' rows, folds
@@ -66,17 +65,40 @@ point lookup, bounded by the tail's dp spread), plus the tail winners'
 contribution. dl values are integers, so double summation is
 order-independent and avgdl reconstructs EXACTLY.
 
-bm25_index_search then serves the landed horizon: corpus constants as
-above, df/tf/dl from the pruned + tail-masked postings scan, and the
-batch op's scoring expressions VERBATIM (one-IEEE-op rational idf,
-decimal-accumulated term scores, round 6, (score DESC, doc_id) top-k)
-— so the PARITY CONTRACT holds exactly: search-over-the-store equals
+SERVING. One request (bm25_index_search, bm25_index_search_adhoc)
+computes each piece of per-request state once and runs these Spark
+actions:
+
+    1. the tail collect: the tail's LWW winners, at most
+       _STATS_LOOKUP_CAP + 1 rows, with ts carried as epoch micros so
+       the round trip through the driver is exact in any time zone;
+    2. seed path only: the masked seed rows of the requested queries
+       (<= _BM25_MAX_QUERIES * slice terms);
+    3. the stats aggregate: the snapshot totals minus the fold-side
+       contribution of the tail's docs (a dp- and doc_id-IN-pruned
+       point lookup) in one aggregate; the tail's own contribution is
+       added on the driver from the collected rows;
+    4. the scoring query, when the caller collects the result.
+
+The tail winners and the request's (query_id, term) pairs go back to
+Spark as local relations built from Arrow tables: they run no job when
+used, and caller strings travel as data, never as SQL text. Every store
+read declares its schema, so no read runs a parquet footer-inference
+job. A tail above _STATS_LOOKUP_CAP docs (a fold cadence far above the
+default) keeps the distributed path: the tail frame is recomputed at
+each use and the stats correction falls back to a dp-pruned scan.
+
+Scoring uses the batch op's expressions VERBATIM (one-IEEE-op rational
+idf, exact term-score sums, round 6, (score DESC, doc_id) top-k), so
+the PARITY CONTRACT holds exactly: search-over-the-store equals
 bm25_keyword_search over the LWW-current corpus (updated texts in,
 tombstoned docs out), across a checkpoint restart, pre- and
 post-compaction (tests/test_streaming_index.py). Unlike the dedup
 stores there is no bucket-cap caveat — BM25 has no candidate cap — so
 parity is unconditional given idempotent replay (batch_id-scoped
 overwrite, the shared store contract) and the ordering contract above.
+A returned frame serves the store as of the call: collect it before
+landing more batches.
 
 100 TB/day shape: the per-batch work is one tokenize pass + one
 shuffle to (term, doc) groups; the store write appends only the
@@ -100,7 +122,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import reduce
+from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -158,14 +183,18 @@ def _layout_now() -> dict:
 
 
 def _land_layout(state_dir: str) -> None:
-    """First land writes the manifest; later lands assert it."""
+    """First land writes the manifest; later lands assert it. The write
+    goes to a temp file that replaces the manifest in one step, so a
+    crash never leaves a truncated manifest behind."""
     path = os.path.join(state_dir, _LAYOUT_FILE)
     if os.path.exists(path):
         _assert_layout(state_dir)
         return
     os.makedirs(state_dir, exist_ok=True)
-    with open(path, "w") as f:
+    tmp = f"{path}.tmp.{os.getpid()}"
+    with open(tmp, "w") as f:
         json.dump(_layout_now(), f)
+    os.replace(tmp, path)
 
 
 def _assert_layout(state_dir: str) -> None:
@@ -175,7 +204,15 @@ def _assert_layout(state_dir: str) -> None:
     if not os.path.exists(path):
         return
     with open(path) as f:
-        got = json.load(f)
+        try:
+            got = json.load(f)
+        except json.JSONDecodeError as e:
+            raise ValueError(
+                f"store layout manifest {path!r} is unreadable ({e}): "
+                "rewrite it as the JSON object of the moduli the store "
+                "was landed with, e.g. "
+                f"{json.dumps(_layout_now())}"
+            ) from None
     want = _layout_now()
     if got != want:
         raise ValueError(
@@ -185,11 +222,15 @@ def _assert_layout(state_dir: str) -> None:
             "the landed values (changing a store's fan requires a "
             "rewrite, not an env change)"
         )
-# stats-correction point-lookup cap: tails up to this many touched docs
-# resolve their fold-side lookups via a doc_id IN literal pushed into
-# the doc_id-sorted folded docmeta (row-group skipping); larger tails
-# fall back to the dp-pruned scan. Sized to keep the literal list and
-# the driver round-trip trivial at streaming cadence.
+
+
+# tail collect and stats-correction point-lookup cap: tails up to this
+# many touched docs are collected once per request, served back as a
+# local relation, and resolve their fold-side lookups via a doc_id IN
+# literal pushed into the doc_id-sorted folded docmeta (row-group
+# skipping); larger tails stay distributed and fall back to the
+# dp-pruned scan. Sized to keep the literal list and the driver
+# round-trip trivial at streaming cadence.
 #
 # Measured-and-DECLINED retune (r13, SCALE_PROBE_COMPACTION's
 # reproducible bm25 tail=16 bump): at a ~2.5k-doc tail over a 10k-doc
@@ -203,9 +244,29 @@ def _assert_layout(state_dir: str) -> None:
 # exponent (SCALE_PROBE_INDEX) depends on. The bump is bounded by the
 # cap and vanishes at the compaction cadences the stores default to.
 _STATS_LOOKUP_CAP = 8192
-_POSTING_COLS = ["term", "doc_id", "tf", "dl", "ts"]
-_DOCMETA_COLS = ["doc_id", "ts", "deleted", "dl", "dp"]
-_SEED_COLS = ["query_id", "term", "tp", "ts"]
+# Declared store schemas: a read that names its schema runs no parquet
+# footer-inference job. Partition columns keep the types Spark infers
+# from their directory names (batch_id, tp, dp: int); the seeds' tp is a
+# data column (bigint).
+_POSTING_SCHEMA = (
+    "term string, doc_id bigint, tf bigint, dl bigint, ts timestamp, "
+    "tp int, batch_id int"
+)
+_DOCMETA_SCHEMA = (
+    "doc_id bigint, ts timestamp, deleted boolean, dl bigint, dp int, "
+    "batch_id int"
+)
+_SEED_SCHEMA = (
+    "query_id bigint, term string, tp bigint, ts timestamp, batch_id int"
+)
+_STATSNAP_SCHEMA = "dp bigint, n_docs bigint, n_len bigint, sum_dl bigint"
+
+
+def _cols(schema: str) -> list[str]:
+    """A store's columns as landed within one batch: its declared
+    schema less the batch_id partition."""
+    names = [c.split()[0] for c in schema.split(",")]
+    return [c for c in names if c != "batch_id"]
 
 
 def _tp_col(term_col="term"):
@@ -216,19 +277,15 @@ def _dp_col(doc_col="doc_id"):
     return F.pmod(F.xxhash64(F.col(doc_col)), F.lit(_DOC_PREFIXES))
 
 
-def _toked_of(batch: DataFrame) -> DataFrame:
-    """The batch op's exact tokenization: trimmed whitespace split,
-    empty tokens dropped BEFORE length stats."""
-    return batch.select(
-        "doc_id", F.filter(tokens_col(), lambda t: t != "").alias("toks")
-    )
-
-
-def _read_store(spark: SparkSession, store_dir: str, what: str):
+def _read_store(
+    spark: SparkSession, store_dir: str, what: str, schema: str | None = None
+):
     """Guarded store read: loud on remote URIs (os.path probes would
     misread them), loud when nothing has landed, loud on interrupted-
     compaction leftovers — the cdfe06a discipline, applied uniformly to
-    every store and sidecar this module reads."""
+    every store and sidecar this module reads. `schema` (a declared
+    store schema) spares the read its footer-inference job; callers
+    reading another store's layout leave it None."""
     _assert_local_dir(store_dir, what)
     if not os.path.isdir(store_dir):
         raise ValueError(
@@ -236,7 +293,19 @@ def _read_store(spark: SparkSession, store_dir: str, what: str):
             "(run bm25_index_stream / hybrid_index_stream first)"
         )
     _assert_no_compact_leftover(store_dir)
-    return spark.read.option("basePath", store_dir).parquet(store_dir)
+    reader = spark.read.option("basePath", store_dir)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(store_dir)
+
+
+def _local_frame(spark: SparkSession, **cols: pa.Array) -> DataFrame:
+    """Driver-side columns as a Spark local relation. Built from an
+    Arrow table, the frame runs no Spark job to build, collect or join
+    against (a Python list given to createDataFrame becomes an RDD, and
+    each use of it runs a job), and strings travel as data, never as
+    SQL text."""
+    return spark.createDataFrame(pa.table(cols))
 
 
 def _lww(docmeta: DataFrame) -> DataFrame:
@@ -319,7 +388,7 @@ def _land_text(batch: DataFrame, batch_id: int, state_dir: str) -> None:
             ).alias("term"),
         )
         .withColumn("tp", _tp_col())
-        .select(*_SEED_COLS)
+        .select(*_cols(_SEED_SCHEMA))
         .write.mode("overwrite")
         .parquet(f"{state_dir}/seeds/batch_id={batch_id}")
     )
@@ -371,80 +440,129 @@ def _mask_visible(rows: DataFrame, tail: DataFrame, key: str = "doc_id"):
     )
 
 
-def _stats_triplet(docmeta_live: DataFrame) -> tuple[int, int, int]:
-    """(n_docs, n_len, sum_dl) integer contribution of live winner rows
-    — tombstones excluded, null-text docs count toward N but not avgdl
-    (the batch op's count(*) vs avg(len) split)."""
-    r = (
-        docmeta_live.filter(~F.col("deleted"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.count("dl").cast("long").alias("n_len"),
-            F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
-        )
-        .collect()[0]
+class _Tail(NamedTuple):
+    """One request's view of the uncompacted tail (docmeta batches
+    newer than the last fold)."""
+
+    fold_id: int  # the last fold's batch id; -1 before the first fold
+    docmeta: DataFrame  # the docmeta store, read once per request
+    frame: DataFrame  # LWW winners: doc_id, ts, deleted, dl
+    # the collected winners (doc_id, ts_us, deleted, dl, dp); None above
+    # _STATS_LOOKUP_CAP, where `frame` is the distributed LWW instead
+    rows: list | None
+
+
+def _serve_tail(spark: SparkSession, state_dir: str) -> _Tail:
+    """Collect the tail's LWW winners once per request and serve them
+    back as a local relation. The tail is bounded by the fold cadence;
+    above _STATS_LOOKUP_CAP docs the frame stays the distributed LWW,
+    recomputed at each use."""
+    _assert_layout(state_dir)
+    fold_id = _fold_horizon(state_dir)
+    dm = _read_store(
+        spark, f"{state_dir}/docmeta", "docmeta store dir", _DOCMETA_SCHEMA
     )
-    return (r["n_docs"], r["n_len"], r["sum_dl"])
+    tail = _lww(dm.filter(F.col("batch_id") > fold_id))
+    rows = (
+        tail.select(
+            "doc_id",
+            F.unix_micros("ts").alias("ts_us"),
+            "deleted",
+            "dl",
+            _dp_col().alias("dp"),
+        )
+        .limit(_STATS_LOOKUP_CAP + 1)
+        .collect()
+    )
+    if len(rows) > _STATS_LOOKUP_CAP:
+        return _Tail(fold_id, dm, tail, None)
+    local = _local_frame(
+        spark,
+        doc_id=pa.array([r["doc_id"] for r in rows], pa.int64()),
+        ts_us=pa.array([r["ts_us"] for r in rows], pa.int64()),
+        deleted=pa.array([r["deleted"] for r in rows], pa.bool_()),
+        dl=pa.array([r["dl"] for r in rows], pa.int64()),
+    ).select(
+        "doc_id", F.timestamp_micros("ts_us").alias("ts"), "deleted", "dl"
+    )
+    return _Tail(fold_id, dm, local, rows)
 
 
-def _live_stats(spark: SparkSession, state_dir: str) -> tuple[float, float]:
+_TRIPLET = ("n_docs", "n_len", "sum_dl")
+
+
+def _contrib(winners: DataFrame, sign: int) -> DataFrame:
+    """Each live winner row's (n_docs, n_len, sum_dl) contribution,
+    times `sign`: tombstones excluded, null-text docs count toward N
+    but not avgdl (the batch op's count(*) vs avg(len) split)."""
+    return winners.filter(~F.col("deleted")).select(
+        F.lit(sign).cast("long").alias("n_docs"),
+        (F.col("dl").isNotNull().cast("long") * sign).alias("n_len"),
+        (F.coalesce(F.col("dl"), F.lit(0)) * sign)
+        .cast("long")
+        .alias("sum_dl"),
+    )
+
+
+def _fold_touched(tail: _Tail) -> DataFrame | None:
+    """Fold-side LWW winners of the docs the tail touched. Below the
+    cap the fold read carries dp and doc_id IN literals that
+    row-group-skip inside the doc_id-sorted folded files (the LSM
+    point-lookup shape — about one row group per touched doc, so
+    serving stays flat in corpus size); above it, a dp-pruned scan
+    semi-joined to the tail."""
+    fold = tail.docmeta.filter(F.col("batch_id") <= tail.fold_id)
+    if tail.rows is not None:
+        if not tail.rows:
+            return None
+        dps = sorted({r["dp"] for r in tail.rows})
+        docs = sorted({r["doc_id"] for r in tail.rows})
+        return _lww(
+            fold.filter(F.col("dp").isin(dps)).filter(
+                F.col("doc_id").isin(docs)
+            )
+        )
+    tdps = [
+        r["dp"]
+        for r in tail.frame.select(_dp_col().alias("dp")).distinct().collect()
+    ]
+    return _lww(fold.filter(F.col("dp").isin(sorted(tdps)))).join(
+        tail.frame.select("doc_id"), "doc_id", "left_semi"
+    )
+
+
+def _live_stats(
+    spark: SparkSession, state_dir: str, tail: _Tail
+) -> tuple[float, float]:
     """Exact (N, avgdl) over the LWW-current corpus, without an
     O(corpus) pass: last snapshot totals, minus the fold-live
-    contribution of tail-touched docs (dp-pruned point lookup), plus
-    the tail winners' contribution. All arithmetic on integer
-    triplets; the final division is the batch op's one IEEE divide."""
-    dm_dir = f"{state_dir}/docmeta"
-    fold_id = _fold_horizon(state_dir)
-    if fold_id < 0:
-        n_docs, n_len, sum_dl = _stats_triplet(
-            _lww(_read_store(spark, dm_dir, "docmeta store dir"))
-        )
+    contribution of tail-touched docs, plus the tail winners'
+    contribution. All arithmetic on integer triplets; the final
+    division is the batch op's one IEEE divide. Below the cap the tail
+    part is summed on the driver and the rest is one aggregate."""
+    parts = []
+    total = (0, 0, 0)
+    if tail.rows is None:
+        parts.append(_contrib(tail.frame, 1))
     else:
-        snap = spark.read.parquet(
-            f"{state_dir}/statsnap/batch_id={fold_id}"
+        dls = [r["dl"] for r in tail.rows if not r["deleted"]]
+        kept = [d for d in dls if d is not None]
+        total = (len(dls), len(kept), sum(kept))
+    if tail.fold_id >= 0:
+        parts.append(
+            spark.read.schema(_STATSNAP_SCHEMA)
+            .parquet(f"{state_dir}/statsnap/batch_id={tail.fold_id}")
+            .select(*_TRIPLET)
         )
-        tot = snap.agg(
-            F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
-            F.coalesce(F.sum("n_len"), F.lit(0)).alias("n_len"),
-            F.coalesce(F.sum("sum_dl"), F.lit(0)).alias("sum_dl"),
+        touched = _fold_touched(tail)
+        if touched is not None:
+            parts.append(_contrib(touched, -1))
+    if parts:
+        r = reduce(DataFrame.unionByName, parts).agg(
+            *[F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in _TRIPLET]
         ).collect()[0]
-        n_docs, n_len, sum_dl = tot["n_docs"], tot["n_len"], tot["sum_dl"]
-        tail = _tail_live(spark, state_dir, fold_id).withColumn(
-            "dp", _dp_col()
-        )
-        # point-lookup collect, capped: below the cap the fold read
-        # carries a doc_id IN literal list that row-group-skips inside
-        # the doc_id-sorted folded files (the LSM point-lookup shape —
-        # the correction then reads ~one row group per touched doc, so
-        # serving stays flat in corpus size); above it, fall back to
-        # the dp-pruned scan (bounded collect: <= _DOC_PREFIXES + cap)
-        probe = tail.select("doc_id", "dp").limit(_STATS_LOOKUP_CAP + 1)
-        trows = probe.collect()
-        if trows:
-            dm = _read_store(spark, dm_dir, "docmeta store dir")
-            fold = dm.filter(F.col("batch_id") <= fold_id)
-            if len(trows) <= _STATS_LOOKUP_CAP:
-                fold = fold.filter(
-                    F.col("dp").isin(sorted({r["dp"] for r in trows}))
-                ).filter(
-                    F.col("doc_id").isin(
-                        sorted({r["doc_id"] for r in trows})
-                    )
-                )
-            else:
-                tdps = [
-                    r["dp"]
-                    for r in tail.select("dp").distinct().collect()
-                ]
-                fold = fold.filter(F.col("dp").isin(sorted(tdps)))
-            fold_touched = _lww(fold).join(
-                tail.select("doc_id"), "doc_id", "left_semi"
-            )
-            sub = _stats_triplet(fold_touched)
-            add = _stats_triplet(tail)
-            n_docs = n_docs - sub[0] + add[0]
-            n_len = n_len - sub[1] + add[1]
-            sum_dl = sum_dl - sub[2] + add[2]
+        total = tuple(t + r[c] for t, c in zip(total, _TRIPLET))
+    n_docs, n_len, sum_dl = total
     n = float(n_docs)
     avgdl = float(sum_dl) / float(n_len) if n_len else float("nan")
     return n, avgdl
@@ -523,7 +641,7 @@ def _fold_ledger(
         spark,
         f"{state_dir}/docmeta",
         upto,
-        cols=_DOCMETA_COLS,
+        cols=_cols(_DOCMETA_SCHEMA),
         partition_cols=["dp"],
         what="docmeta store dir",
         checkpoint_dir=checkpoint_dir,
@@ -564,7 +682,7 @@ def compact_retrieval_store(
         spark,
         f"{state_dir}/postings",
         upto,
-        cols=[*_POSTING_COLS, "tp"],
+        cols=_cols(_POSTING_SCHEMA),
         partition_cols=["tp"],
         what="postings index store dir",
         checkpoint_dir=checkpoint_dir,
@@ -575,7 +693,7 @@ def compact_retrieval_store(
         spark,
         f"{state_dir}/seeds",
         upto,
-        cols=_SEED_COLS,
+        cols=_cols(_SEED_SCHEMA),
         partition_cols=[],
         what="seed sidecar dir",
         checkpoint_dir=checkpoint_dir,
@@ -655,12 +773,14 @@ def _pruned_postings(
     files). `terms` is bounded (the seed workload), so both predicates
     are static literals. Rows are version-stamped; callers mask
     visibility with _mask_visible."""
-    store = _read_store(spark, postings_dir, "postings index store dir")
+    store = _read_store(
+        spark, postings_dir, "postings index store dir", _POSTING_SCHEMA
+    )
     tps = sorted({tp for _, tp in terms})
     return (
         store.filter(F.col("tp").isin(tps))
         .filter(F.col("term").isin(sorted({t for t, _ in terms})))
-        .select(*_POSTING_COLS)
+        .select(*_cols(_POSTING_SCHEMA))
     )
 
 
@@ -673,20 +793,28 @@ def bm25_index_search(
     the update/delete tail mask applied to seeds and candidates.
     Output schema == bm25_keyword_search's: (query_id, rank, doc_id,
     score, n_matched_terms)."""
-    fold_id = _fold_horizon(state_dir)
-    tail = _tail_live(spark, state_dir, fold_id)
+    tail = _serve_tail(spark, state_dir)
+    return _seed_search(spark, state_dir, tail, query_ids)
 
-    seeds = _read_store(spark, f"{state_dir}/seeds", "seed sidecar dir")
+
+def _seed_search(
+    spark: SparkSession, state_dir: str, tail: _Tail, query_ids
+) -> DataFrame:
+    seeds = _read_store(
+        spark, f"{state_dir}/seeds", "seed sidecar dir", _SEED_SCHEMA
+    )
     if query_ids is not None:
         seeds = seeds.filter(F.col("query_id").isin(list(query_ids)))
-    seeds = _mask_visible(seeds, tail, key="query_id")
     # bounded model-state collect: <= _BM25_MAX_QUERIES * slice terms
-    terms = [
-        (r["term"], r["tp"])
-        for r in seeds.select("term", "tp").distinct().collect()
-    ]
-    queries = seeds.select("query_id", "term").distinct()
-    return _serve_workload(spark, state_dir, tail, queries, terms)
+    rows = {
+        (r["query_id"], r["term"], r["tp"])
+        for r in _mask_visible(seeds, tail.frame, key="query_id")
+        .select("query_id", "term", "tp")
+        .collect()
+    }
+    pairs = sorted((q, t) for q, t, _ in rows)
+    terms = sorted({(t, tp) for _, t, tp in rows})
+    return _serve_workload(spark, state_dir, tail, pairs, terms)
 
 
 def bm25_index_search_adhoc(
@@ -706,6 +834,13 @@ def bm25_index_search_adhoc(
     postings read exactly as the seed path does, and the same
     update/delete tail mask applies. Same output schema as
     bm25_index_search."""
+    tail = _serve_tail(spark, state_dir)
+    return _adhoc_search(spark, state_dir, tail, queries)
+
+
+def _adhoc_search(
+    spark: SparkSession, state_dir: str, tail: _Tail, queries: dict[int, str]
+) -> DataFrame:
     import re
 
     pairs = sorted(
@@ -718,30 +853,35 @@ def bm25_index_search_adhoc(
     )
     if not pairs:
         raise ValueError("no non-empty query terms in the ad-hoc workload")
-    qdf = spark.createDataFrame(
-        pairs, "query_id bigint, term string"
-    ).withColumn("tp", _tp_col())
-    # bounded collect: the caller's own workload, terms -> (term, tp)
+    # term -> tp through the engine's own hash, over a local relation of
+    # the distinct terms: the collect runs no job
+    distinct = sorted({t for _, t in pairs})
     terms = [
         (r["term"], r["tp"])
-        for r in qdf.select("term", "tp").distinct().collect()
+        for r in _local_frame(spark, term=pa.array(distinct, pa.string()))
+        .select("term", _tp_col().alias("tp"))
+        .collect()
     ]
-    fold_id = _fold_horizon(state_dir)
-    tail = _tail_live(spark, state_dir, fold_id)
-    return _serve_workload(
-        spark, state_dir, tail, qdf.select("query_id", "term"), terms
-    )
+    return _serve_workload(spark, state_dir, tail, pairs, terms)
 
 
 def _serve_workload(
-    spark: SparkSession, state_dir: str, tail, queries, terms
+    spark: SparkSession,
+    state_dir: str,
+    tail: _Tail,
+    pairs: list[tuple[int, str]],
+    terms: list[tuple[str, int]],
 ) -> DataFrame:
     """The shared serving stage: snapshot-corrected corpus constants,
     tp-pruned + term-IN-pushed postings read, tail visibility mask,
-    and the batch op's scoring expressions verbatim over the given
-    (query_id, term) workload frame."""
-    _assert_layout(state_dir)
-    n, avgdl = _live_stats(spark, state_dir)
+    and the batch op's scoring expressions verbatim over the request's
+    (query_id, term) pairs."""
+    n, avgdl = _live_stats(spark, state_dir, tail)
+    queries = _local_frame(
+        spark,
+        query_id=pa.array([q for q, _ in pairs], pa.int64()),
+        term=pa.array([t for _, t in pairs], pa.string()),
+    )
     cand = _pruned_postings(spark, f"{state_dir}/postings", terms)
     # r14: ONE pinned-width exchange by term feeds the df window (the
     # scoring pipeline previously ran single-task: AQE coalesced the
@@ -750,7 +890,7 @@ def _serve_workload(
     # measured in bm25_keyword_search, fixed the same way).
     matched = (
         spread(
-            _mask_visible(cand, tail).select(
+            _mask_visible(cand, tail.frame).select(
                 "doc_id",
                 F.col("dl").cast("double").alias("dl"),
                 "term",

@@ -104,25 +104,22 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
 def _env_width(var: str) -> int:
     """Parse a width/fan env override. 0 or unset means "use the
     default" (documented convention — widths are never legitimately 0);
-    a non-integer value fails loudly naming the variable instead of
-    surfacing as a bare ValueError from deep inside a plan build."""
+    a non-integer or negative value fails loudly naming the variable
+    instead of surfacing as a bare error from deep inside a plan build
+    (or, for a store's prefix modulus, as a negative pmod divisor
+    persisted into its layout manifest)."""
     raw = os.environ.get(var, "0")
     try:
-        return int(raw)
+        value = int(raw)
     except ValueError:
+        value = -1
+    if value < 0:
         raise ValueError(
-            f"${var} must be an integer (got {raw!r}); "
+            f"${var} must be a non-negative integer (got {raw!r}); "
             "0 or unset selects the built-in default"
-        ) from None
+        )
+    return value
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view (for spark.sql paths)."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

@@ -7,6 +7,11 @@ mismatch would silently prune the wrong partitions)."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 
 from kafka_flink_slack_pipeline_spark import tables
@@ -40,10 +45,30 @@ def test_media_width_env_is_read(spark, sf_dir, monkeypatch):
     assert out.rdd.getNumPartitions() == 3
 
 
+def test_env_width_rejects_negative_loudly(monkeypatch):
+    # a negative prefix modulus would reach pmod and the layout manifest
+    monkeypatch.setenv("SPARK_GRAFT_TERM_PREFIXES", "-16")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_TERM_PREFIXES"):
+        tables._env_width("SPARK_GRAFT_TERM_PREFIXES")
+
+
 def test_prefix_envs_are_read():
-    # module constants resolve through the shared parser with 0=default
-    assert ri._TERM_PREFIXES == (ri._env_int("SPARK_GRAFT_TERM_PREFIXES") or 16)
-    assert ri._DOC_PREFIXES == (ri._env_int("SPARK_GRAFT_DOC_PREFIXES") or 8)
+    # a fresh interpreter with the env set must pick it up at import
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "from kafka_flink_slack_pipeline_spark.streaming import "
+            "retrieval_index as ri; print(ri._TERM_PREFIXES)",
+        ],
+        cwd=root,
+        env={**os.environ, "SPARK_GRAFT_TERM_PREFIXES": "32"},
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert int(out.stdout.split()[-1]) == 32
 
 
 def test_layout_manifest_roundtrip(tmp_path):
@@ -66,3 +91,28 @@ def test_layout_manifest_mismatch_fails_loudly(tmp_path, monkeypatch):
 def test_layout_manifest_absent_is_trusted(tmp_path):
     # pre-manifest stores (no file) are served as-is
     ri._assert_layout(str(tmp_path / "never-landed"))
+
+
+def test_layout_manifest_written_atomically(tmp_path, monkeypatch):
+    # the manifest appears in one os.replace step, from a temp file
+    state = str(tmp_path / "store")
+    calls = []
+    real = os.replace
+    monkeypatch.setattr(
+        ri.os, "replace", lambda a, b: (calls.append((a, b)), real(a, b))
+    )
+    ri._land_layout(state)
+    path = os.path.join(state, ri._LAYOUT_FILE)
+    assert [b for _, b in calls] == [path]
+    assert not os.path.exists(calls[0][0])
+    with open(path) as f:
+        assert json.load(f) == ri._layout_now()
+    assert os.listdir(state) == [ri._LAYOUT_FILE]
+
+
+def test_layout_manifest_truncated_names_repair(tmp_path):
+    state = tmp_path / "store"
+    state.mkdir()
+    (state / ri._LAYOUT_FILE).write_text('{"term_prefixes": 1')
+    with pytest.raises(ValueError, match="manifest .* is unreadable"):
+        ri._assert_layout(str(state))

@@ -12,8 +12,10 @@ the postings store.
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,7 +23,10 @@ from pyspark.sql import functions as F
 from kafka_flink_slack_pipeline_spark.operators.curation import (
     bm25_keyword_search,
 )
+from kafka_flink_slack_pipeline_spark.streaming import retrieval_index as ri
 from kafka_flink_slack_pipeline_spark.streaming.retrieval_index import (
+    INDEX_DROP_SCHEMA,
+    _land_text,
     _pruned_postings,
     _read_store,
     bm25_index_search,
@@ -301,6 +306,46 @@ def test_index_update_delete_parity_precompaction(spark, lww_dirs):
     )
 
 
+def test_index_above_cap_path_serves_identically(
+    spark, lww_dirs, tmp_path, monkeypatch
+):
+    """A tail above _STATS_LOOKUP_CAP keeps the distributed path (tail
+    frame recomputed per use, dp-pruned stats correction): both search
+    faces serve the same rows as the collected-tail path, before and
+    after a fold. Runs on a copy, so the shared fixture stays as is."""
+    state = str(tmp_path / "state")
+    shutil.copytree(lww_dirs["state"], state)
+    words = lww_dirs["texts"][1].split()
+    adhoc = {0: "juliett kilo lima", 1: " ".join(words[:3]), 2: "revised"}
+
+    def serve():
+        return (
+            [tuple(r) for r in bm25_index_search(spark, state).collect()],
+            [
+                tuple(r)
+                for r in bm25_index_search_adhoc(spark, state, adhoc).collect()
+            ],
+        )
+
+    for fold in (False, True):
+        if fold:  # fold all but the newest batch, which stays the tail
+            newest = max(
+                int(e.split("=", 1)[1])
+                for e in os.listdir(f"{state}/docmeta")
+                if e.startswith("batch_id=")
+            )
+            compact_retrieval_store(spark, state, upto=newest)
+            assert ri._fold_horizon(state) >= 0
+        want = serve()
+        assert want[0] and want[1], "empty workload — comparison vacuous"
+        with monkeypatch.context() as m:
+            m.setattr(ri, "_STATS_LOOKUP_CAP", 1)
+            assert ri._serve_tail(spark, state).rows is None, (
+                "tail within the patched cap — branch not exercised"
+            )
+            assert serve() == want
+
+
 def test_index_update_delete_parity_postcompaction(spark, lww_dirs):
     """Compaction physically drops superseded and tombstoned rows;
     serving is unchanged; a post-compaction wave then serves through
@@ -491,3 +536,78 @@ def test_index_out_of_order_version_repaired_at_fold(spark, sf_dir, tmp_path):
     assert repaired == [
         tuple(r) for r in _batch_rows(spark, corpus_with(v2_text), d["docs"])
     ]
+
+
+# tokens a request frame must carry verbatim: SQL quote and escape
+# characters, a named-parameter marker, a positional marker, non-ASCII
+_ODD_QUERIES = {
+    0: "it's back\\slash :p0_0",
+    100: "what? naïve 東京",
+    200: "''quoted'' \\' ?:p0_0",
+}
+
+
+def _odd_docs() -> list[tuple[int, str]]:
+    """Seed docs whose query slice (tokens 10..12) is the odd query,
+    and non-seed docs sharing some of its tokens at varied tf/dl."""
+    pad = "p1 p2 p3 p4 p5 p6 p7 p8 p9"
+    docs = [(q, f"{pad} {text} tail") for q, text in _ODD_QUERIES.items()]
+    toks = [t for text in _ODD_QUERIES.values() for t in text.split()]
+    for i in range(1, 60):
+        picked = [toks[(i * k) % len(toks)] for k in range(1, 1 + i % 4)]
+        docs.append((i, " ".join(["filler"] * (i % 5) + picked)))
+    return sorted(docs)
+
+
+def _land_rows(spark, state, batch_id, recs):
+    _land_text(spark.createDataFrame(recs, INDEX_DROP_SCHEMA), batch_id, state)
+
+
+def test_adhoc_request_frame_odd_tokens_and_job_budget(spark, tmp_path):
+    """Ad-hoc terms carrying SQL metacharacters and non-ASCII serve
+    exactly (equal to the batch op over the LWW-current docs), and an
+    ad-hoc serve over a store with a non-empty tail stays within its
+    Spark job budget: the tail, the stats and the request frame are
+    each computed once."""
+    state = str(tmp_path / "state")
+    docs = _odd_docs()
+    t0 = dt.datetime(2025, 1, 1)
+    _land_rows(spark, state, 0, [(i, t, t0, False) for i, t in docs])
+    compact_retrieval_store(spark, state, upto=1)
+    # the tail: one update (non-seed) and one tombstone
+    t1 = dt.datetime(2025, 2, 1)
+    current = dict(docs)
+    current[7] = "what? what? naïve filler"
+    del current[11]
+    _land_rows(
+        spark,
+        state,
+        1,
+        [(7, current[7], t1, False), (11, None, t1, True)],
+    )
+
+    sc = spark.sparkContext
+    sc.setJobGroup("adhoc_budget", "adhoc serve job budget")
+    try:
+        got = [
+            tuple(r)
+            for r in bm25_index_search_adhoc(
+                spark, state, _ODD_QUERIES
+            ).collect()
+        ]
+        jobs = sc.statusTracker().getJobIdsForGroup("adhoc_budget")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    want = [
+        tuple(r)
+        for r in _batch_rows(
+            spark, sorted(current.items()), tmp_path / "docs"
+        )
+    ]
+    assert got == want
+    assert {q for q, *_ in got} == set(_ODD_QUERIES)
+    # measured 13 at 2, 4 and 8 cores: the tail collect (2 jobs), the
+    # stats aggregate (3) and the scoring query (8); one reintroduced
+    # recomputation of the tail, a store read without its schema or a
+    # request frame that is an RDD adds a job
+    assert len(jobs) <= 13, f"ad-hoc serve ran {len(jobs)} Spark jobs"

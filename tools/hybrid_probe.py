@@ -57,18 +57,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql.window import Window  # noqa: E402
 
 import index_probe as ip  # noqa: E402  (shared lexical-face builders)
 
-from kafka_flink_slack_pipeline_spark.operators.curation import (  # noqa: E402
-    _RRF_TOPK,
-    rrf_fuse,
-)
 from kafka_flink_slack_pipeline_spark.operators.similarity import (  # noqa: E402
     _centroid_model,
     _centroid_sims,
-    cosine,
     norm,
 )
 from kafka_flink_slack_pipeline_spark.session import get_spark  # noqa: E402
@@ -132,65 +126,22 @@ def _serve_flat(spark, state_dir, flat_vectors_dir, codebook, qids):
     flat layout — the lexical side, probe branch, tail mask, re-rank,
     and fusion are the module's real code, so the delta is pure dense
     layout."""
-    lex = ri.bm25_index_search(spark, state_dir, query_ids=qids).select(
-        "query_id", "doc_id", F.col("rank").alias("lex_rank")
-    )
-    fold_id = ri._fold_horizon(state_dir)
-    tail = ri._tail_live(spark, state_dir, fold_id)
-    seeds = ri._mask_visible(
-        ri._read_store(
-            spark, f"{state_dir}/vecseeds", "dense seed sidecar dir"
-        ).filter(F.col("query_id").isin(qids)),
-        tail,
-        key="query_id",
-    )
-    probes = (
-        seeds.select("query_id", "qe", norm(F.col("qe")).alias("nrm"))
-        .select(
-            "query_id",
-            "qe",
-            _centroid_sims(codebook, F.col("qe"), F.col("nrm")).alias(
-                "csims"
-            ),
+
+    def flat_vectors(spark, _vectors_dir, cids):
+        return (
+            spark.read.option("basePath", flat_vectors_dir)
+            .parquet(flat_vectors_dir)
+            .filter(F.col("cid").isin(sorted(set(cids))))
         )
-        .select(
-            "query_id",
-            "qe",
-            F.explode(
-                hi._ranked_probe_cids(codebook, F.col("csims"))
-            ).alias("probe"),
+
+    real = hi._pruned_vectors
+    hi._pruned_vectors = flat_vectors  # the plan is built in the call
+    try:
+        return hi.hybrid_index_search(
+            spark, state_dir, codebook, query_ids=qids
         )
-        .select("query_id", "qe", F.col("probe.cid").alias("cid"))
-    )
-    cids = [r["cid"] for r in probes.select("cid").distinct().collect()]
-    cand = ri._mask_visible(
-        spark.read.option("basePath", flat_vectors_dir)
-        .parquet(flat_vectors_dir)
-        .filter(F.col("cid").isin(sorted(set(cids)))),
-        tail,
-    ).select(
-        F.col("doc_id").alias("neighbor_id"),
-        F.col("emb").alias("ne"),
-        "cid",
-    )
-    rescored = (
-        cand.join(F.broadcast(probes), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", cosine(F.col("qe"), F.col("ne")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    dense = (
-        rescored.withColumn("dense_rank", F.row_number().over(w))
-        .filter(F.col("dense_rank") <= _RRF_TOPK)
-        .select(
-            "query_id",
-            F.col("neighbor_id").alias("doc_id"),
-            "dense_rank",
-        )
-    )
-    return rrf_fuse(lex, dense)
+    finally:
+        hi._pruned_vectors = real
 
 
 def _serve(spark, state_dir, flat_vectors_dir, codebook, qids, pruned):

@@ -54,15 +54,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql.window import Window  # noqa: E402
 
 from kafka_flink_slack_pipeline_spark.operators.curation import (  # noqa: E402
-    _BM25_B,
     _BM25_EVERY,
-    _BM25_K1,
     _BM25_MAX_QUERIES,
     _BM25_QSLICE,
-    _BM25_TOPK,
 )
 from kafka_flink_slack_pipeline_spark.session import get_spark  # noqa: E402
 from kafka_flink_slack_pipeline_spark.streaming import retrieval_index as ri  # noqa: E402
@@ -184,7 +180,7 @@ def _build_base(spark, corpus_dir, state_dir, flat_postings_dir=None) -> int:
         ),
         _TS1,
     ).withColumn("tp", ri._tp_col())
-    seeds.select(*ri._SEED_COLS).write.mode("overwrite").parquet(
+    seeds.select(*ri._cols(ri._SEED_SCHEMA)).write.mode("overwrite").parquet(
         f"{state_dir}/seeds/batch_id=0"
     )
     return batch_id
@@ -257,65 +253,31 @@ def _add_tail(spark, corpus_dir, state_dir, flat_postings_dir, tail_id):
     )
 
 
+# the flat layout lands tp as a data column, so it reads back as bigint
+_FLAT_SCHEMA = ri._POSTING_SCHEMA.replace("tp int", "tp bigint")
+
+
 def _serve_flat(spark, state_dir, flat_postings_dir):
     """bm25_index_search with ONLY the postings read swapped for the
     flat layout (no tp pruning, nothing sorted) — every other stage
     (seed mask, snapshot-corrected stats, tail mask, scoring) is the
     module's real code, so the delta is pure postings layout."""
-    fold_id = ri._fold_horizon(state_dir)
-    tail = ri._tail_live(spark, state_dir, fold_id)
-    seeds = ri._mask_visible(
-        ri._read_store(spark, f"{state_dir}/seeds", "seed sidecar dir"),
-        tail,
-        key="query_id",
-    )
-    terms = sorted(
-        {r["term"] for r in seeds.select("term").distinct().collect()}
-    )
-    queries = seeds.select("query_id", "term").distinct()
-    n, avgdl = ri._live_stats(spark, state_dir)
-    cand = (
-        spark.read.option("basePath", flat_postings_dir)
-        .parquet(flat_postings_dir)
-        .filter(F.col("term").isin(terms))
-        .select(*ri._POSTING_COLS)
-    )
-    matched = (
-        ri._mask_visible(cand, tail)
-        .select(
-            "doc_id",
-            F.col("dl").cast("double").alias("dl"),
-            "term",
-            F.col("tf").cast("double").alias("tf"),
+
+    def flat_postings(spark, _postings_dir, terms):
+        return (
+            spark.read.option("basePath", flat_postings_dir)
+            .schema(_FLAT_SCHEMA)
+            .parquet(flat_postings_dir)
+            .filter(F.col("term").isin(sorted({t for t, _ in terms})))
+            .select(*ri._cols(ri._POSTING_SCHEMA))
         )
-        .withColumn(
-            "df",
-            F.count(F.lit(1))
-            .over(Window.partitionBy("term"))
-            .cast("double"),
-        )
-    )
-    idf = (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    tf_norm = (F.col("tf") * (_BM25_K1 + 1)) / (
-        F.col("tf")
-        + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.lit(avgdl))
-    )
-    term_score = F.round(idf * tf_norm, 9).cast("decimal(25,12)")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        matched.join(F.broadcast(queries), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(F.sum(term_score).cast("double"), 6).alias("score"),
-            F.count(F.lit(1)).alias("n_matched_terms"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _BM25_TOPK)
-        .select("query_id", "rank", "doc_id", "score", "n_matched_terms")
-        .orderBy("query_id", "rank")
-    )
+
+    real = ri._pruned_postings
+    ri._pruned_postings = flat_postings  # the plan is built in the call
+    try:
+        return ri.bm25_index_search(spark, state_dir)
+    finally:
+        ri._pruned_postings = real
 
 
 def _serve(spark, state_dir, flat_postings_dir, pruned):
