@@ -192,10 +192,12 @@ CURRENT run's replay window).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
+from pyspark.util import inheritable_thread_target
 
 from ..operators.dedup import (
     MINHASH_K,
@@ -283,6 +285,22 @@ def _committed_horizon(checkpoint_dir: str) -> int:
     return max(ids) + 1 if ids else 0
 
 
+def _run_concurrently(spark: SparkSession, *thunks) -> list:
+    """Run independent store writes at the same time, one thread per
+    thunk, and return their results in order. Each thread carries the
+    caller's Spark local properties (job group, streaming query ids,
+    job description), so a StreamingQuery.stop() cancels these jobs
+    like any other of the batch and their jobs are attributed to the
+    caller. Waits for EVERY thunk before returning or re-raising the
+    first failure (in thunk order): no write outlives the caller's
+    frame, e.g. a persisted micro-batch it unpersists next."""
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
+        ]
+    return [f.result() for f in futures]
+
+
 def _compact_batch_store(
     spark: SparkSession,
     store_dir: str,
@@ -293,6 +311,7 @@ def _compact_batch_store(
     checkpoint_dir: str | None = None,
     transform=None,
     force: bool = False,
+    schema: str | None = None,
 ) -> int:
     """Shared compaction kernel for the batch_id-scoped parquet stores
     (signature store: (band, bprefix) layout; semantic vector store:
@@ -308,6 +327,8 @@ def _compact_batch_store(
     `force=True` rewrites even a single batch directory — a no-op fold
     for the identity transform, but required when the transform itself
     changes rows (retrain, first masked fold after a tombstone).
+    `schema` (the store's declared schema) spares the read its parquet
+    footer-inference job; stores without one leave it None.
 
     Safety rails (both loud, per ADVICE r8):
       - `upto` must not exceed the store's own id horizon (max existing
@@ -356,11 +377,12 @@ def _compact_batch_store(
     tmp = os.path.join(
         store_dir, f"{_COMPACT_TMP_PREFIX}batch_id={upto - 1}"
     )
-    folded = (
-        spark.read.option("basePath", store_dir)
-        .parquet(*[os.path.join(store_dir, e) for e in olds])
-        .select(*cols)
-    )
+    reader = spark.read.option("basePath", store_dir)
+    if schema is not None:
+        reader = reader.schema(schema)
+    folded = reader.parquet(
+        *[os.path.join(store_dir, e) for e in olds]
+    ).select(*cols)
     if transform is not None:
         folded = transform(folded).select(*cols)
     (

@@ -17,6 +17,10 @@ drops lands BOTH index faces:
       store partitioned by cid, plus a bounded dense seed sidecar (the
       seed docs' query vectors, version-stamped).
 
+All five writes of a batch run at the same time, and a fold folds the
+four data stores at the same time before the ledger (the landing and
+fold-order contract of retrieval_index).
+
 UPDATE/DELETE: the retrieval_index LWW-by-ingest_ts + tombstone
 semantics apply to both faces — a re-ingested doc's new embedding may
 land in a DIFFERENT cid than its old version; the old vector is masked
@@ -63,7 +67,9 @@ SCALE_PROBE_HYBRID.json and the IVF probe family.
 from __future__ import annotations
 
 import os
+from functools import partial
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -83,22 +89,37 @@ from ..operators.similarity import (
 )
 from .curation_funnel import _compact_batch_store
 from .retrieval_index import (
+    _TEXT_STORES,
     _adhoc_search,
     _alive_of,
+    _cols,
+    _compact_lww_stores,
     _land_text,
+    _local_frame,
+    _LwwStore,
     _mask_visible,
     _read_store,
     _seed_search,
     _serve_tail,
-    compact_retrieval_store,
 )
 
 HYBRID_DROP_SCHEMA = (
     "doc_id bigint, text string, embedding array<double>, "
     "ingest_ts timestamp, deleted boolean"
 )
-_VECTOR_COLS = ["doc_id", "emb", "ts", "cid"]
-_VECSEED_COLS = ["query_id", "qe", "ts"]
+_VECTOR_SCHEMA = (
+    "doc_id bigint, emb array<double>, ts timestamp, cid int, batch_id int"
+)
+_VECSEED_SCHEMA = "query_id bigint, qe array<double>, ts timestamp, batch_id int"
+_DENSE_STORES = (
+    _LwwStore(
+        "vectors", _VECTOR_SCHEMA, ["cid"], "hybrid vector store dir",
+        "doc_id",
+    ),
+    _LwwStore(
+        "vecseeds", _VECSEED_SCHEMA, [], "dense seed sidecar dir", "query_id"
+    ),
+)
 
 
 def _ranked_probe_cids(model, csims_col):
@@ -148,41 +169,17 @@ def compact_hybrid_store(
     checkpoint_dir: str | None = None,
 ) -> int:
     """Fold batches [0, upto) of ALL SIX hybrid stores: the four
-    text-face stores (compact_retrieval_store: postings, seeds,
-    docmeta, stats snapshot) plus the cid-partitioned vector store and
-    the dense seed sidecar — each through the shared crash-staged
-    rails, with superseded-version and tombstoned-doc rows physically
-    dropped (the LWW mask). Returns directories removed."""
-    removed = compact_retrieval_store(
-        spark, state_dir, upto, checkpoint_dir=checkpoint_dir
+    text-face stores (postings, seeds, docmeta, stats snapshot, as
+    compact_retrieval_store folds them) plus the cid-partitioned vector
+    store and the dense seed sidecar — each through the shared
+    crash-staged rails, with superseded-version and tombstoned-doc rows
+    physically dropped (the LWW mask). The four data-store folds run at
+    the same time, and the ledger folds only after all of them, so the
+    fold horizon never moves ahead of an unfolded vector batch
+    (_compact_lww_stores). Returns directories removed."""
+    return _compact_lww_stores(
+        spark, state_dir, upto, checkpoint_dir, _TEXT_STORES + _DENSE_STORES
     )
-    alive = _alive_of(spark, state_dir, upto)
-    removed += _compact_batch_store(
-        spark,
-        f"{state_dir}/vectors",
-        upto,
-        cols=_VECTOR_COLS,
-        partition_cols=["cid"],
-        what="hybrid vector store dir",
-        checkpoint_dir=checkpoint_dir,
-        transform=lambda df: df.join(alive, ["doc_id", "ts"]),
-        force=True,
-    )
-    removed += _compact_batch_store(
-        spark,
-        f"{state_dir}/vecseeds",
-        upto,
-        cols=_VECSEED_COLS,
-        partition_cols=[],
-        what="dense seed sidecar dir",
-        checkpoint_dir=checkpoint_dir,
-        transform=lambda df: df.join(
-            alive.select(F.col("doc_id").alias("query_id"), "ts"),
-            ["query_id", "ts"],
-        ),
-        force=True,
-    )
-    return removed
 
 
 def retrain_hybrid_vector_store(
@@ -216,7 +213,7 @@ def retrain_hybrid_vector_store(
         spark,
         vectors_dir,
         upto,
-        cols=_VECTOR_COLS,
+        cols=_cols(_VECTOR_SCHEMA),
         partition_cols=["cid"],
         what="hybrid vector store dir",
         checkpoint_dir=checkpoint_dir,
@@ -225,6 +222,7 @@ def retrain_hybrid_vector_store(
             codebook,
         ),
         force=True,
+        schema=_VECTOR_SCHEMA,
     )
 
 
@@ -239,8 +237,7 @@ def _land_hybrid(
     and the bounded dense seed sidecar. Shared VERBATIM by the
     checkpointed stream and the registered serving certificate
     (hybrid_index_served_lww) — stream/certificate parity by
-    construction."""
-    _land_text(batch, batch_id, state_dir)
+    construction. All five writes run at the same time."""
     live = batch.filter(~F.coalesce(F.col("deleted"), F.lit(False)))
     vecs = _assigned(
         live.filter(F.col("embedding").isNotNull()).select(
@@ -250,25 +247,28 @@ def _land_hybrid(
         ),
         codebook,
     )
-    (
-        vecs.write.mode("overwrite")
-        .partitionBy("cid")
-        .parquet(f"{state_dir}/vectors/batch_id={batch_id}")
-    )
     # bounded dense seed sidecar: the seed docs' query vectors
-    (
-        live.filter(
-            (F.col("doc_id") % _BM25_EVERY == 0)
-            & (F.col("doc_id") < _BM25_EVERY * _BM25_MAX_QUERIES)
-            & F.col("embedding").isNotNull()
-        )
-        .select(
-            F.col("doc_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.col("ingest_ts").alias("ts"),
-        )
-        .write.mode("overwrite")
-        .parquet(f"{state_dir}/vecseeds/batch_id={batch_id}")
+    vecseeds = live.filter(
+        (F.col("doc_id") % _BM25_EVERY == 0)
+        & (F.col("doc_id") < _BM25_EVERY * _BM25_MAX_QUERIES)
+        & F.col("embedding").isNotNull()
+    ).select(
+        F.col("doc_id").alias("query_id"),
+        F.col("embedding").alias("qe"),
+        F.col("ingest_ts").alias("ts"),
+    )
+    _land_text(
+        batch,
+        batch_id,
+        state_dir,
+        partial(
+            vecs.write.mode("overwrite").partitionBy("cid").parquet,
+            f"{state_dir}/vectors/batch_id={batch_id}",
+        ),
+        partial(
+            vecseeds.write.mode("overwrite").parquet,
+            f"{state_dir}/vecseeds/batch_id={batch_id}",
+        ),
     )
 
 
@@ -324,7 +324,9 @@ def _pruned_vectors(
     """Landed vectors pruned to the probed cid partitions (bounded:
     <= min(|queries| * nprobe, k) cids — a static literal predicate).
     Rows are version-stamped; callers mask visibility."""
-    store = _read_store(spark, vectors_dir, "hybrid vector store dir")
+    store = _read_store(
+        spark, vectors_dir, "hybrid vector store dir", _VECTOR_SCHEMA
+    )
     return store.filter(F.col("cid").isin(sorted(set(cids))))
 
 
@@ -344,7 +346,8 @@ def hybrid_index_search(
         "query_id", "doc_id", F.col("rank").alias("lex_rank")
     )
     seeds = _read_store(
-        spark, f"{state_dir}/vecseeds", "dense seed sidecar dir"
+        spark, f"{state_dir}/vecseeds", "dense seed sidecar dir",
+        _VECSEED_SCHEMA,
     )
     if query_ids is not None:
         seeds = seeds.filter(F.col("query_id").isin(list(query_ids)))
@@ -377,16 +380,20 @@ def hybrid_index_search_adhoc(
             "query_id", "doc_id", F.col("rank").alias("lex_rank")
         )
     else:
-        lex = spark.createDataFrame(
-            [], "query_id bigint, doc_id bigint, lex_rank int"
+        lex = _local_frame(
+            spark,
+            query_id=pa.array([], pa.int64()),
+            doc_id=pa.array([], pa.int64()),
+            lex_rank=pa.array([], pa.int32()),
         )
-    vec_rows = [
-        (int(qid), [float(x) for x in v])
-        for qid, (_, v) in queries.items()
-        if v is not None
-    ]
-    seeds = spark.createDataFrame(
-        vec_rows, "query_id bigint, qe array<double>"
+    vecs = {qid: v for qid, (_, v) in queries.items() if v is not None}
+    seeds = _local_frame(
+        spark,
+        query_id=pa.array([int(q) for q in vecs], pa.int64()),
+        qe=pa.array(
+            [[float(x) for x in v] for v in vecs.values()],
+            pa.list_(pa.float64()),
+        ),
     )
     return _fused_over(spark, state_dir, codebook, lex, seeds, tail.frame)
 

@@ -28,6 +28,12 @@ ingest_ts[, deleted]) drops:
        version-stamped with ts and carrying each term's tp so the
        search face never rehashes.
 
+The three writes are independent and run at the same time
+(_run_concurrently, the shared store rails): each reads the persisted
+micro-batch and writes its own batch_id directory. Their order carries
+no crash meaning, because a batch that did not commit replays and
+overwrites every one of its directories.
+
 UPDATE/DELETE SEMANTICS (last-write-wins by ingest_ts + tombstones):
 re-ingesting doc_id 42 with new text supersedes every older version —
 its old postings stop matching, df/N/avgdl reflect only the new text —
@@ -114,7 +120,12 @@ Store maintenance is the shared rails: compact_retrieval_store folds
 committed batches of ALL FOUR text-face stores (postings, docmeta,
 seeds, stats snapshot) into one directory each (layouts preserved;
 id-horizon + commits-log validation; underscore-prefixed crash
-staging), invoked every `compact_every` batches by default.
+staging), invoked every `compact_every` batches by default. FOLD
+ORDER: the data stores (postings and seeds; the hybrid index adds its
+vectors and dense seeds) fold at the same time, then the stats
+snapshot, then docmeta. The snapshot is the fold horizon the tail mask
+starts after, so it moves only once no data store holds an unmasked
+row at or below it.
 """
 
 from __future__ import annotations
@@ -122,7 +133,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from functools import reduce
+from functools import partial, reduce
 from typing import NamedTuple
 
 import pyarrow as pa
@@ -145,6 +156,7 @@ from .curation_funnel import (
     _assert_local_dir,
     _assert_no_compact_leftover,
     _compact_batch_store,
+    _run_concurrently,
 )
 
 INDEX_DROP_SCHEMA = (
@@ -247,7 +259,9 @@ _STATS_LOOKUP_CAP = 8192
 # Declared store schemas: a read that names its schema runs no parquet
 # footer-inference job. Partition columns keep the types Spark infers
 # from their directory names (batch_id, tp, dp: int); the seeds' tp is a
-# data column (bigint).
+# data column (bigint). Every docmeta ledger (the funnel, media and
+# semantic stores land theirs too) has _DOCMETA_SCHEMA, so the shared
+# ledger folds declare it for all of them.
 _POSTING_SCHEMA = (
     "term string, doc_id bigint, tf bigint, dl bigint, ts timestamp, "
     "tp int, batch_id int"
@@ -322,14 +336,19 @@ def _lww(docmeta: DataFrame) -> DataFrame:
     )
 
 
-def _land_text(batch: DataFrame, batch_id: int, state_dir: str) -> None:
+def _land_text(
+    batch: DataFrame, batch_id: int, state_dir: str, *more_writes
+) -> None:
     """Land one micro-batch's lexical index state: tp-partitioned
     term-sorted version-stamped postings, the dp-partitioned docmeta
     version ledger (tombstones included), and the bounded version-
     stamped seed-query sidecar (<= _BM25_MAX_QUERIES docs ever). Shared
-    by bm25_index_stream and hybrid_index_stream. Append-only: updates
-    and deletes are resolved at serve time (tail mask) and at
-    compaction (global LWW fold), never by reading the store here."""
+    by bm25_index_stream and hybrid_index_stream, whose dense writes
+    come in as `more_writes` thunks. Append-only: updates and deletes
+    are resolved at serve time (tail mask) and at compaction (global
+    LWW fold), never by reading the store here. All writes run at the
+    same time (the module docstring says why that is safe); the streams
+    persist the batch they share, so it is computed once."""
     _land_layout(state_dir)
     deleted = F.coalesce(F.col("deleted"), F.lit(False))
     live = batch.filter(~deleted)
@@ -349,33 +368,17 @@ def _land_text(batch: DataFrame, batch_id: int, state_dir: str) -> None:
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
         .withColumn("tp", _tp_col())
     )
-    (
-        postings.repartition("tp")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .partitionBy("tp")
-        .parquet(f"{state_dir}/postings/batch_id={batch_id}")
-    )
-    (
-        batch.select(
-            "doc_id",
-            F.col("ingest_ts").alias("ts"),
-            deleted.alias("deleted"),
-            F.when(deleted, F.lit(None).cast("long"))
-            .otherwise(
-                F.size(
-                    F.filter(tokens_col(), lambda t: t != "")
-                ).cast("long")
-            )
-            .alias("dl"),
+    docmeta = batch.select(
+        "doc_id",
+        F.col("ingest_ts").alias("ts"),
+        deleted.alias("deleted"),
+        F.when(deleted, F.lit(None).cast("long"))
+        .otherwise(
+            F.size(F.filter(tokens_col(), lambda t: t != "")).cast("long")
         )
-        .withColumn("dp", _dp_col())
-        .repartition("dp")
-        .write.mode("overwrite")
-        .partitionBy("dp")
-        .parquet(f"{state_dir}/docmeta/batch_id={batch_id}")
-    )
-    (
+        .alias("dl"),
+    ).withColumn("dp", _dp_col())
+    seeds = (
         toked.filter(
             (F.col("doc_id") % _BM25_EVERY == 0)
             & (F.col("doc_id") < _BM25_EVERY * _BM25_MAX_QUERIES)
@@ -389,8 +392,29 @@ def _land_text(batch: DataFrame, batch_id: int, state_dir: str) -> None:
         )
         .withColumn("tp", _tp_col())
         .select(*_cols(_SEED_SCHEMA))
-        .write.mode("overwrite")
-        .parquet(f"{state_dir}/seeds/batch_id={batch_id}")
+    )
+    _run_concurrently(
+        batch.sparkSession,
+        partial(
+            postings.repartition("tp")
+            .sortWithinPartitions("term")
+            .write.mode("overwrite")
+            .partitionBy("tp")
+            .parquet,
+            f"{state_dir}/postings/batch_id={batch_id}",
+        ),
+        partial(
+            docmeta.repartition("dp")
+            .write.mode("overwrite")
+            .partitionBy("dp")
+            .parquet,
+            f"{state_dir}/docmeta/batch_id={batch_id}",
+        ),
+        partial(
+            seeds.write.mode("overwrite").parquet,
+            f"{state_dir}/seeds/batch_id={batch_id}",
+        ),
+        *more_writes,
     )
 
 
@@ -583,7 +607,9 @@ def _write_statsnap(spark: SparkSession, state_dir: str, upto: int) -> None:
         # prior fold preserved, so a rewrite would produce identical
         # content — skip instead of colliding on the rename (r12).
         return
-    dm = _read_store(spark, f"{state_dir}/docmeta", "docmeta store dir")
+    dm = _read_store(
+        spark, f"{state_dir}/docmeta", "docmeta store dir", _DOCMETA_SCHEMA
+    )
     live = (
         _lww(dm.filter(F.col("batch_id") < upto))
         .filter(~F.col("deleted"))
@@ -611,9 +637,11 @@ def _write_statsnap(spark: SparkSession, state_dir: str, upto: int) -> None:
 def _alive_of(spark: SparkSession, state_dir: str, upto: int):
     """(doc_id, ts) of LWW winners that are not tombstones, over
     docmeta batches [0, upto) — the physical-drop mask shared by every
-    LWW store fold (postings/seeds here, vectors/vecseeds in
-    hybrid_index, vectors/verdicts in semantic_dedup)."""
-    dm = _read_store(spark, f"{state_dir}/docmeta", "docmeta store dir")
+    LWW store fold (postings/seeds/vectors/vecseeds here, vectors/
+    verdicts in semantic_dedup, the funnel's and media's stores)."""
+    dm = _read_store(
+        spark, f"{state_dir}/docmeta", "docmeta store dir", _DOCMETA_SCHEMA
+    )
     return (
         _lww(dm.filter(F.col("batch_id") < upto))
         .filter(~F.col("deleted"))
@@ -652,7 +680,71 @@ def _fold_ledger(
         .repartition("dp")
         .sortWithinPartitions("doc_id"),
         force=True,
+        schema=_DOCMETA_SCHEMA,
     )
+
+
+class _LwwStore(NamedTuple):
+    """A version-stamped data store that folds under the ledger's LWW
+    mask: rows survive iff (key, ts) is a live winner."""
+
+    name: str  # subdirectory of the state dir
+    schema: str  # declared schema, batch_id partition included
+    partition_cols: list[str]
+    what: str
+    key: str  # the doc column: doc_id, or query_id in a seed sidecar
+
+
+_TEXT_STORES = (
+    _LwwStore(
+        "postings", _POSTING_SCHEMA, ["tp"], "postings index store dir",
+        "doc_id",
+    ),
+    _LwwStore("seeds", _SEED_SCHEMA, [], "seed sidecar dir", "query_id"),
+)
+
+
+def _compact_lww_stores(
+    spark: SparkSession,
+    state_dir: str,
+    upto: int,
+    checkpoint_dir: str | None,
+    stores: tuple[_LwwStore, ...],
+) -> int:
+    """Fold `stores` and then the ledger over batches [0, upto). The
+    data-store folds are independent and run at the same time; the
+    ledger folds only after ALL of them have succeeded. FOLD ORDER:
+    data stores -> stats snapshot -> docmeta. The snapshot is the fold
+    horizon the serve-time tail mask starts after, so it may advance
+    only once no store holds an unmasked row at or below it: a crash
+    before it leaves masked data stores beside an unfolded ledger,
+    which the tail mask re-masks harmlessly (rows it would drop are
+    already gone), while a horizon moved ahead of an unfolded store
+    would serve that store's superseded and tombstoned rows until the
+    replayed fold. Returns directories removed."""
+    _assert_layout(state_dir)
+    if not os.path.isdir(f"{state_dir}/docmeta"):
+        return 0  # nothing landed yet — nothing to fold
+    alive = _alive_of(spark, state_dir, upto)
+
+    def fold(store: _LwwStore):
+        mask = alive.withColumnRenamed("doc_id", store.key)
+        return partial(
+            _compact_batch_store,
+            spark,
+            f"{state_dir}/{store.name}",
+            upto,
+            cols=_cols(store.schema),
+            partition_cols=store.partition_cols,
+            what=store.what,
+            checkpoint_dir=checkpoint_dir,
+            transform=lambda df: df.join(mask, [store.key, "ts"]),
+            force=True,
+            schema=store.schema,
+        )
+
+    removed = sum(_run_concurrently(spark, *map(fold, stores)))
+    return removed + _fold_ledger(spark, state_dir, upto, checkpoint_dir)
 
 
 def compact_retrieval_store(
@@ -667,48 +759,17 @@ def compact_retrieval_store(
     physically dropped; docmeta folds to one winner row per doc with
     TOMBSTONES RETAINED (they must suppress any not-yet-arrived older
     version); the per-dp stats snapshot is rewritten so serve-time
-    corpus constants never rescan the corpus. Term order within folded
-    postings files follows the kernel's read order and is NOT
-    guaranteed sorted — the search face never relies on sortedness for
-    correctness (the IN predicate is exact either way; sortedness only
-    sharpens row-group skipping on freshly-landed batches). Returns
-    directories removed."""
-    _assert_layout(state_dir)
-    dm_dir = f"{state_dir}/docmeta"
-    if not os.path.isdir(dm_dir):
-        return 0  # nothing landed yet — nothing to fold
-    alive = _alive_of(spark, state_dir, upto)
-    removed = _compact_batch_store(
-        spark,
-        f"{state_dir}/postings",
-        upto,
-        cols=_cols(_POSTING_SCHEMA),
-        partition_cols=["tp"],
-        what="postings index store dir",
-        checkpoint_dir=checkpoint_dir,
-        transform=lambda df: df.join(alive, ["doc_id", "ts"]),
-        force=True,
+    corpus constants never rescan the corpus. The postings and seeds
+    folds run at the same time; the fold order is data stores -> stats
+    snapshot -> docmeta (_compact_lww_stores says why). Term order
+    within folded postings files follows the kernel's read order and is
+    NOT guaranteed sorted — the search face never relies on sortedness
+    for correctness (the IN predicate is exact either way; sortedness
+    only sharpens row-group skipping on freshly-landed batches).
+    Returns directories removed."""
+    return _compact_lww_stores(
+        spark, state_dir, upto, checkpoint_dir, _TEXT_STORES
     )
-    removed += _compact_batch_store(
-        spark,
-        f"{state_dir}/seeds",
-        upto,
-        cols=_cols(_SEED_SCHEMA),
-        partition_cols=[],
-        what="seed sidecar dir",
-        checkpoint_dir=checkpoint_dir,
-        transform=lambda df: df.join(
-            alive.select(
-                F.col("doc_id").alias("query_id"), "ts"
-            ),
-            ["query_id", "ts"],
-        ),
-        force=True,
-    )
-    removed += _fold_ledger(
-        spark, state_dir, upto, checkpoint_dir=checkpoint_dir
-    )
-    return removed
 
 
 def bm25_index_stream(
@@ -938,9 +999,15 @@ def _serve_workload(
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id")
     )
+    # the result is at most _BM25_TOPK rows per query: one partition
+    # sorted locally is the global order, without the range sort's
+    # sampling job and exchange. coalesce, not repartition: AQE already
+    # runs the window stage as one task on the bench's served rows
+    # (sf0.1), so merging into it adds no exchange and costs nothing.
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _BM25_TOPK)
         .select("query_id", "rank", "doc_id", "score", "n_matched_terms")
-        .orderBy("query_id", "rank")
+        .coalesce(1)
+        .sortWithinPartitions("query_id", "rank")
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -322,6 +323,57 @@ def test_hybrid_update_delete_parity(spark, hybrid_lww_dirs):
     assert not {doc for _, _, doc, *_ in got} & d["dels"]
 
 
+def test_hybrid_fold_crash_keeps_the_horizon(
+    spark, hybrid_lww_dirs, tmp_path, monkeypatch
+):
+    """A hybrid fold whose vector-store fold fails must not move the
+    fold horizon: the ledger folds only after every data store, so the
+    tail mask still hides each superseded and tombstoned vector until
+    the re-run fold completes. Runs on a copy of the unfolded store."""
+    from kafka_flink_slack_pipeline_spark.streaming import (
+        retrieval_index as ri,
+    )
+    from kafka_flink_slack_pipeline_spark.streaming.hybrid_index import (
+        compact_hybrid_store,
+    )
+
+    d = hybrid_lww_dirs
+    state = str(tmp_path / "state")
+    shutil.copytree(d["state"], state)
+    assert ri._fold_horizon(state) == -1, "fixture already folded"
+
+    def serve():
+        return [
+            tuple(r)
+            for r in hybrid_index_search(spark, state, d["codebook"]).collect()
+        ]
+
+    want = serve()
+    assert want and not {doc for _, _, doc, *_ in want} & d["dels"]
+    fold = ri._compact_batch_store
+
+    def crashing(spark, store_dir, *args, **kwargs):
+        if store_dir.endswith("/vectors"):
+            raise RuntimeError("simulated crash in the vector fold")
+        return fold(spark, store_dir, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(ri, "_compact_batch_store", crashing)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            compact_hybrid_store(spark, state, upto=2)
+    assert ri._fold_horizon(state) == -1, "ledger folded before vectors"
+    assert os.path.isdir(f"{state}/vectors/batch_id=0"), "vectors folded"
+    got = serve()
+    assert not {doc for _, _, doc, *_ in got} & d["dels"], (
+        "tombstoned doc served after the interrupted fold"
+    )
+    assert got == want
+
+    compact_hybrid_store(spark, state, upto=2)
+    assert ri._fold_horizon(state) == 1
+    assert serve() == want
+
+
 def test_hybrid_update_delete_parity_postcompaction(spark, hybrid_lww_dirs):
     """compact_hybrid_store folds all six stores; superseded vectors
     are physically dropped (doc 7 keeps ONE version, in the cid its
@@ -409,7 +461,8 @@ def test_hybrid_adhoc_query_serving(spark, sf_dir, hybrid_dirs):
     """Ad-hoc (text, vector) queries serve through the same masked
     stores: a query assembled from seed doc 0's slice terms + its own
     embedding reproduces the stored workload's rows for query 0; a
-    vector-only query returns dense-only fusions (in_lex == 0)."""
+    vector-only query returns dense-only fusions (in_lex == 0) and a
+    text-only one lexical-only fusions (in_dense == 0)."""
     from kafka_flink_slack_pipeline_spark.streaming.hybrid_index import (
         hybrid_index_search_adhoc,
     )
@@ -442,3 +495,9 @@ def test_hybrid_adhoc_query_serving(spark, sf_dir, hybrid_dirs):
         {7: ("", qvec)},
     ).collect()
     assert dense_only and all(r["in_lex"] == 0 for r in dense_only)
+
+    lex_only = hybrid_index_search_adhoc(
+        spark, hybrid_dirs["state"], hybrid_dirs["codebook"],
+        {0: (qtext, None)},
+    ).collect()
+    assert lex_only and all(r["in_dense"] == 0 for r in lex_only)

@@ -16,6 +16,7 @@ import datetime as dt
 import json
 import os
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +25,9 @@ from kafka_flink_slack_pipeline_spark.operators.curation import (
     bm25_keyword_search,
 )
 from kafka_flink_slack_pipeline_spark.streaming import retrieval_index as ri
+from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (
+    _run_concurrently,
+)
 from kafka_flink_slack_pipeline_spark.streaming.retrieval_index import (
     INDEX_DROP_SCHEMA,
     _land_text,
@@ -606,8 +610,85 @@ def test_adhoc_request_frame_odd_tokens_and_job_budget(spark, tmp_path):
     ]
     assert got == want
     assert {q for q, *_ in got} == set(_ODD_QUERIES)
-    # measured 13 at 2, 4 and 8 cores: the tail collect (2 jobs), the
-    # stats aggregate (3) and the scoring query (8); one reintroduced
-    # recomputation of the tail, a store read without its schema or a
-    # request frame that is an RDD adds a job
-    assert len(jobs) <= 13, f"ad-hoc serve ran {len(jobs)} Spark jobs"
+    # measured 11 at 2, 4 and 8 cores: the tail collect (2 jobs), the
+    # stats aggregate (3) and the scoring query (6); one reintroduced
+    # recomputation of the tail, a store read without its schema, a
+    # request frame that is an RDD or a global range sort at the end
+    # adds a job
+    assert len(jobs) <= 11, f"ad-hoc serve ran {len(jobs)} Spark jobs"
+
+
+def test_run_concurrently_reraises_after_every_write(spark):
+    """The store-write helper returns results in thunk order, and a
+    failing write is re-raised only once every other write has
+    finished, so none outlives the caller's persisted batch."""
+    assert _run_concurrently(spark, lambda: 1, lambda: 2) == [1, 2]
+    finished = []
+
+    def failing():
+        raise RuntimeError("write failed")
+
+    def slow():
+        time.sleep(0.5)
+        finished.append("slow")
+
+    with pytest.raises(RuntimeError, match="write failed"):
+        _run_concurrently(spark, failing, slow)
+    assert finished == ["slow"], "helper re-raised before a write finished"
+
+
+def test_land_and_fold_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """The concurrent writes of a land and the concurrent folds of a
+    compaction run every Spark job in the caller's job group (so a
+    StreamingQuery.stop() cancels them and per-op attribution counts
+    them); no job runs without a group."""
+    state = str(tmp_path / "state")
+    docs = _odd_docs()
+    t0, t1 = dt.datetime(2025, 1, 1), dt.datetime(2025, 2, 1)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("land_fold", "land and fold job group")
+    try:
+        _land_rows(spark, state, 0, [(i, t, t0, False) for i, t in docs])
+        _land_rows(spark, state, 1, [(7, "what? filler", t1, False)])
+        landed = set(tracker.getJobIdsForGroup("land_fold"))
+        compact_retrieval_store(spark, state, upto=2)
+        grouped = set(tracker.getJobIdsForGroup("land_fold"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert ri._fold_horizon(state) == 1
+    assert landed and grouped > landed, "land or fold ran no grouped job"
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped, (
+        "a store write or fold ran a job outside the caller's group"
+    )
+
+
+def test_land_computes_the_persisted_batch_once(spark, tmp_path):
+    """The three concurrent writers of a land read the persisted
+    micro-batch, not its source: every source row is computed exactly
+    once (a counting UDF in the batch's lineage), as the stream runs
+    it (persist, land, unpersist)."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(doc_id):
+        seen.add(1)
+        return doc_id
+
+    recs = [(i, t, dt.datetime(2025, 1, 1), False) for i, t in _odd_docs()]
+    batch = (
+        spark.createDataFrame(recs, INDEX_DROP_SCHEMA)
+        .withColumn("doc_id", F.udf(count, "bigint")("doc_id"))
+        .persist()
+    )
+    try:
+        _land_text(batch, 0, str(tmp_path / "state"))
+    finally:
+        batch.unpersist()
+    assert seen.value == len(recs), (
+        f"{seen.value} source rows computed for a {len(recs)}-row batch"
+    )
+    docmeta = _read_store(
+        spark, str(tmp_path / "state/docmeta"), "docmeta", ri._DOCMETA_SCHEMA
+    )
+    assert docmeta.count() == len(recs)

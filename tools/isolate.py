@@ -104,12 +104,16 @@ def main() -> int:
     if args.stages:
         import urllib.request
 
+        # this session's own UI (enabled above for --stages) and
+        # application, never whichever Spark app holds the default port
+        ui = spark.sparkContext.uiWebUrl
+        app_id = spark.sparkContext.applicationId
+
         def api(path: str):
-            url = f"http://localhost:4040/api/v1/{path}"
+            url = f"{ui}/api/v1/{path}"
             with urllib.request.urlopen(url) as r:
                 return json.loads(r.read())
 
-        app_id = api("applications")[0]["id"]
         jobs = api(f"applications/{app_id}/jobs?status=succeeded")
         # scrape only the LAST timed pass: one clean instance of each
         # logical stage per query (earlier passes duplicate them and the
