@@ -88,6 +88,16 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .store import (
+    _DOCMETA_SCHEMA,
+    _assert_layout,
+    _assert_local_dir,
+    _dp_col,
+    _lww,
+    _point_lookup,
+    _read_store,
+)
+
 STORE_KINDS = ("funnel", "bm25", "hybrid", "semantic", "media")
 
 # store kind -> drop-schema field order
@@ -189,22 +199,20 @@ def _hybrid_winners(
     doc_id-IN point-lookup shape, through the guarded read (loud on
     remote URIs and compaction leftovers; genuinely nothing landed
     reads as unknown: {})."""
-    from .curation_funnel import _assert_local_dir
-    from .retrieval_index import _dp_col, _lww, _read_store
-
     dm_dir = f"{state_dir}/docmeta"
     _assert_local_dir(dm_dir, "hybrid docmeta dir")
     if not os.path.isdir(dm_dir):
         return {}
+    _assert_layout(state_dir)  # the dp prune needs the landed modulus
     ids = sorted({int(d) for d in doc_ids})
     asked = spark.createDataFrame(
         [(i,) for i in ids], "doc_id bigint"
     ).withColumn("dp", _dp_col())
-    dps = sorted({r["dp"] for r in asked.collect()})  # bounded: |ids|
-    dm = (
-        _read_store(spark, dm_dir, "hybrid docmeta store dir")
-        .filter(F.col("dp").isin(dps))
-        .filter(F.col("doc_id").isin(ids))
+    dm = _point_lookup(
+        _read_store(
+            spark, dm_dir, "hybrid docmeta store dir", _DOCMETA_SCHEMA
+        ),
+        asked.collect(),  # bounded: |ids|
     )
     return {
         r["doc_id"]: {"ts": r["ts"], "deleted": r["deleted"], "dl": r["dl"]}
@@ -221,9 +229,6 @@ def _hybrid_live_vecs(
     ts). Bounded output (<= |want|); the scan filters by doc_id with no
     layout pruning (vectors shard by cid, not doc) — see
     _route_hybrid_wave's honesty note."""
-    from .curation_funnel import _assert_local_dir
-    from .retrieval_index import _read_store
-
     vec_dir = f"{state_dir}/vectors"
     _assert_local_dir(vec_dir, "hybrid vector store dir")
     if not os.path.isdir(vec_dir):
@@ -540,9 +545,6 @@ def cross_store_doc_state(
     this certificate exists to prevent. Only the genuine
     nothing-has-landed case (a local dir that does not exist) reads as
     known=False."""
-    from .curation_funnel import _assert_local_dir
-    from .retrieval_index import _dp_col, _lww, _read_store
-
     if not doc_ids:
         raise ValueError("no doc_ids given")
     unknown = sorted(set(stores) - set(STORE_KINDS))
@@ -557,16 +559,19 @@ def cross_store_doc_state(
     asked = spark.createDataFrame(
         [(i,) for i in ids], "doc_id bigint"
     ).withColumn("dp", _dp_col())
-    dps = sorted({r["dp"] for r in asked.collect()})  # bounded: |ids|
+    asked_rows = asked.collect()  # bounded: |ids|
     out = None
     for kind in sorted(stores):
         dm_dir = f"{stores[kind]['state_dir']}/docmeta"
         _assert_local_dir(dm_dir, f"{kind} docmeta dir")
         if os.path.isdir(dm_dir):
-            dm = (
-                _read_store(spark, dm_dir, f"{kind} docmeta store dir")
-                .filter(F.col("dp").isin(dps))
-                .filter(F.col("doc_id").isin(ids))
+            _assert_layout(stores[kind]["state_dir"])
+            dm = _point_lookup(
+                _read_store(
+                    spark, dm_dir, f"{kind} docmeta store dir",
+                    _DOCMETA_SCHEMA,
+                ),
+                asked_rows,
             )
             win = _lww(dm).select(
                 "doc_id",

@@ -101,10 +101,10 @@ Design decisions, in dependency order:
   ingest_land.py exactly-once-by-idempotent-replay contract): landed
   docs (lang-partitioned), the signature store, per-batch stage counts.
 
-UPDATE/DELETE (r12 — the retrieval-index LWW rails, the template's
-fourth application): drops may carry deleted=true tombstones and
-re-ingested versions of earlier doc_ids (LWW by ingest_ts; ordering
-contract as everywhere: per-doc nondecreasing DISTINCT ingest_ts).
+UPDATE/DELETE (the LWW ledger of the store rails, store.py): drops may
+carry deleted=true tombstones and re-ingested versions of earlier
+doc_ids (LWW by ingest_ts; ordering contract as everywhere: per-doc
+nondecreasing DISTINCT ingest_ts).
 
 - The VERSION LEDGER is written by the SIBLING stream (which reads the
   raw drops pre-dedup), not by foreachBatch: version and tombstone
@@ -192,15 +192,21 @@ CURRENT run's replay window).
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
-from pyspark.util import inheritable_thread_target
 
+from ..operators.curation import (
+    _FUNNEL_STAGES,
+    _SRC_DROP_DEN,
+    _SRC_DROP_NUM,
+    fuzzy_contamination,
+)
 from ..operators.dedup import (
     MINHASH_K,
+    _banded_sig_pairs,
     _minhash_sig_bands,
     _minhash_sigs,
     _sig_agree,
@@ -212,11 +218,58 @@ from ..operators.textops import (
     quality_signals_of,
     tokens_col,
 )
+from .store import (
+    _DOCMETA_SCHEMA,
+    _LOOKUP_CAP,
+    _LwwStore,
+    _alive_of,
+    _assert_layout,
+    _assert_local_dir,
+    _batch_ids,
+    _cols,
+    _committed_horizon,
+    _compact_batch_store,
+    _dp_col,
+    _fold_horizon,
+    _fold_ledger,
+    _id_horizon,
+    _ledger_write,
+    _lww,
+    _lww_fold,
+    _mask_visible,
+    _point_lookup,
+    _pruned_store,
+    _read_store,
+    _run_concurrently,
+    _tail_live,
+)
 
 DROP_SCHEMA = ("doc_id bigint, text string, lang string, "
                "source string, ingest_ts timestamp, deleted boolean")
-_SIG_COLS = ["doc_id", "sig", "band", "bkey", "ts"]
-_JUDGMENT_COLS = ["doc_id", "ts", "nd_dropped", "contaminated"]
+# The LWW-folded funnel stores (store.py). sigs and judgments land with
+# the main stream's batch ids, vermeta with the ledger sibling's.
+_SIGS = _LwwStore(
+    "sigs",
+    "doc_id bigint, sig array<bigint>, band int, bkey string, ts timestamp, "
+    "bprefix int, batch_id int",
+    ["band", "bprefix"],
+    "signature store dir",
+)
+_JUDGMENTS = _LwwStore(
+    "judgments",
+    "doc_id bigint, ts timestamp, nd_dropped boolean, contaminated boolean, "
+    "batch_id int",
+    [],
+    "judgment store dir",
+)
+_VERMETA = _LwwStore(
+    "vermeta",
+    "doc_id bigint, ts timestamp, source string, q decimal(18,6), "
+    "qk boolean, h string, dp int, batch_id int",
+    ["dp"],
+    "vermeta store dir",
+)
+_HTERM_SCHEMA = "h string, term string, batch_id int"
 _VERMETA_COLS = ["doc_id", "ts", "source", "q", "qk", "h"]
 
 # Store partition fan-out for the bkey dimension: band (BANDS values) x
@@ -230,185 +283,6 @@ _SIG_STORE_PREFIXES = 8
 
 def _bprefix_col():
     return F.pmod(F.xxhash64(F.col("bkey")), F.lit(_SIG_STORE_PREFIXES))
-
-
-def _assert_local_dir(path: str, what: str) -> None:
-    """The store-existence probe below is driver-local os.path; on a
-    non-local URI (s3://, hdfs://) isdir would silently report 'no
-    store yet' and the near-dup stage would run with an EMPTY reference
-    set — landed near-dups quietly stop being dropped. Fail loudly
-    instead; a cluster deployment swaps these probes for the Hadoop FS
-    API."""
-    if "://" in path:
-        raise ValueError(
-            f"{what} must be a driver-local path for this runner "
-            f"(got {path!r}): existence/partition probes use os.path, "
-            "which would misread a remote URI as an absent store."
-        )
-
-
-_COMPACT_TMP_PREFIX = "_compact_tmp."
-
-
-def _assert_no_compact_leftover(store_dir: str) -> None:
-    """A crashed compaction may have removed original batch dirs but not
-    yet renamed its staged output into place — reading the store in that
-    state silently LOSES the compacted history (near-dups quietly stop
-    being dropped). The staged dir is underscore-prefixed so Spark's
-    file index ignores it; this guard makes every reader fail loudly
-    instead of proceeding without the staged rows."""
-    leftovers = [
-        e
-        for e in os.listdir(store_dir)
-        if e.startswith(_COMPACT_TMP_PREFIX)
-    ]
-    if leftovers:
-        raise RuntimeError(
-            f"interrupted compaction detected in {store_dir!r}: "
-            f"{leftovers} hold(s) compacted history whose originals were "
-            "possibly already removed. Recover by renaming "
-            f"'{leftovers[0]}' to its 'batch_id=<n>' suffix (and removing "
-            "any surviving originals below that id) before reading the "
-            "store."
-        )
-
-
-def _committed_horizon(checkpoint_dir: str) -> int:
-    """Next batch id per the streaming checkpoint's commits/ log (max
-    committed id + 1; 0 when nothing committed)."""
-    commits = os.path.join(checkpoint_dir, "commits")
-    ids = [
-        int(e)
-        for e in (os.listdir(commits) if os.path.isdir(commits) else [])
-        if e.isdigit()
-    ]
-    return max(ids) + 1 if ids else 0
-
-
-def _run_concurrently(spark: SparkSession, *thunks) -> list:
-    """Run independent store writes at the same time, one thread per
-    thunk, and return their results in order. Each thread carries the
-    caller's Spark local properties (job group, streaming query ids,
-    job description), so a StreamingQuery.stop() cancels these jobs
-    like any other of the batch and their jobs are attributed to the
-    caller. Waits for EVERY thunk before returning or re-raising the
-    first failure (in thunk order): no write outlives the caller's
-    frame, e.g. a persisted micro-batch it unpersists next."""
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(spark)(t)) for t in thunks
-        ]
-    return [f.result() for f in futures]
-
-
-def _compact_batch_store(
-    spark: SparkSession,
-    store_dir: str,
-    upto: int,
-    cols: list[str],
-    partition_cols: list[str],
-    what: str,
-    checkpoint_dir: str | None = None,
-    transform=None,
-    force: bool = False,
-    schema: str | None = None,
-) -> int:
-    """Shared compaction kernel for the batch_id-scoped parquet stores
-    (signature store: (band, bprefix) layout; semantic vector store:
-    cid layout). Rewrites batches [0, upto) into ONE directory with id
-    upto - 1, preserving the partition layout. Returns directories
-    removed.
-
-    `transform` (optional) maps the folded frame before the staged
-    write — the update/delete hook: the retrieval index folds drop
-    superseded-version and tombstoned-doc rows here (and the IVF
-    retrain reassigns cids), so compaction is where logical deletes
-    become physical. It must preserve `cols` (partition cols included).
-    `force=True` rewrites even a single batch directory — a no-op fold
-    for the identity transform, but required when the transform itself
-    changes rows (retrain, first masked fold after a tombstone).
-    `schema` (the store's declared schema) spares the read its parquet
-    footer-inference job; stores without one leave it None.
-
-    Safety rails (both loud, per ADVICE r8):
-      - `upto` must not exceed the store's own id horizon (max existing
-        batch id + 1) — otherwise a FUTURE batch with id upto-1 would
-        first read none of the compacted history (its replay filter is
-        batch_id < upto-1) and then its own overwrite would destroy it;
-      - when `checkpoint_dir` is given, `upto` must also lie within the
-        checkpoint's committed horizon — a batch replays only if it
-        never committed, so only committed batches are safe to fold;
-      - the staged rewrite lives under an UNDERSCORE-prefixed temp name
-        (Spark's file index skips '_'-prefixed paths, so a crash mid-
-        compaction can never be parsed as a string-typed batch_id
-        partition), and every reader raises on such leftovers instead
-        of silently reading a store missing its folded history."""
-    import shutil
-
-    _assert_local_dir(store_dir, what)
-    if not os.path.isdir(store_dir):
-        return 0  # nothing landed yet — nothing to fold
-    _assert_no_compact_leftover(store_dir)
-    ids = [
-        int(e.split("=", 1)[1])
-        for e in os.listdir(store_dir)
-        if e.startswith("batch_id=") and e.split("=", 1)[1].isdigit()
-    ]
-    horizon = max(ids) + 1 if ids else 0
-    if upto > horizon:
-        raise ValueError(
-            f"compaction upto={upto} exceeds the {what}'s id horizon "
-            f"{horizon}: folding into batch_id={upto - 1} would collide "
-            "with a FUTURE batch (whose replay filter excludes the "
-            "compacted id and whose overwrite would then destroy it)."
-        )
-    if checkpoint_dir is not None:
-        committed = _committed_horizon(checkpoint_dir)
-        if upto > committed:
-            raise ValueError(
-                f"compaction upto={upto} exceeds the checkpoint's "
-                f"committed horizon {committed}: an uncommitted batch "
-                "below upto may replay and must still see (and "
-                "overwrite) its own pre-compaction directory."
-            )
-    olds = [f"batch_id={i}" for i in sorted(ids) if i < upto]
-    if len(olds) <= (0 if force else 1):
-        return 0
-    tmp = os.path.join(
-        store_dir, f"{_COMPACT_TMP_PREFIX}batch_id={upto - 1}"
-    )
-    reader = spark.read.option("basePath", store_dir)
-    if schema is not None:
-        reader = reader.schema(schema)
-    folded = reader.parquet(
-        *[os.path.join(store_dir, e) for e in olds]
-    ).select(*cols)
-    if transform is not None:
-        folded = transform(folded).select(*cols)
-    (
-        folded.write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .parquet(tmp)
-    )
-    for e in olds:
-        shutil.rmtree(os.path.join(store_dir, e))
-    os.rename(tmp, os.path.join(store_dir, f"batch_id={upto - 1}"))
-    return len(olds)
-
-
-def _ledger_horizon(state_dir: str) -> int:
-    """The docmeta ledger's own id horizon (max batch id + 1; 0 when
-    nothing landed) — the default fold range for the sibling-written
-    stores when no ledger checkpoint is given."""
-    dm_dir = f"{state_dir}/docmeta"
-    if not os.path.isdir(dm_dir):
-        return 0
-    ids = [
-        int(e.split("=", 1)[1])
-        for e in os.listdir(dm_dir)
-        if e.startswith("batch_id=") and e.split("=", 1)[1].isdigit()
-    ]
-    return max(ids) + 1 if ids else 0
 
 
 def compact_sig_store(
@@ -430,7 +304,7 @@ def compact_sig_store(
     hterm deduped and pruned to live contents' hashes, docmeta folded
     to one winner row per doc (tombstones RETAINED — they must suppress
     any not-yet-arrived older version) with the stats snapshot as the
-    fold-horizon marker (_fold_ledger, the shared rails).
+    fold-horizon marker (store.py's ledger fold).
 
     `upto` is the MAIN stream's horizon (guarded against
     `checkpoint_dir`'s commits log); `ledger_upto` is the SIBLING's
@@ -440,93 +314,69 @@ def compact_sig_store(
     the landed-documents PRODUCT sink under the same mask (tombstoned/
     superseded landed docs physically dropped — the
     landed_documents_current read path's physical half; the runner's
-    auto-compaction passes it). Fold order is
-    sigs/judgments/vermeta/hterm THEN ledger: a crash between them
-    leaves masked data stores beside an unfolded ledger, which the read
-    mask re-masks harmlessly (rows it would drop are already gone);
-    the reverse order would briefly serve an unfolded store against an
-    empty tail. Directory-count bounding, replay correctness
-    (batch_id < N includes the folded id), and the crash-staging rails
-    are _compact_batch_store's, unchanged. Returns directories
-    removed."""
-    from .retrieval_index import _alive_of, _fold_ledger
-
+    auto-compaction passes it). The data-store folds (sigs, judgments,
+    vermeta, landed docs) run at the same time, then hterm, whose mask
+    reads vermeta, then the ledger: store.py's fold order. Returns
+    directories removed."""
     if ledger_upto is None:
         ledger_upto = (
             _committed_horizon(ledger_checkpoint_dir)
             if ledger_checkpoint_dir is not None
-            else _ledger_horizon(state_dir)
+            else _id_horizon(f"{state_dir}/docmeta")
         )
     if not os.path.isdir(f"{state_dir}/docmeta") or ledger_upto == 0:
         return 0  # nothing landed yet — nothing to fold
-    # the MASK uses the ledger's FULL horizon (global LWW): a version
-    # newer than the fold range must keep its rows — `ledger_upto`
-    # governs only which ledger directories fold, never visibility
-    alive = _alive_of(spark, state_dir, _ledger_horizon(state_dir))
-    removed = _compact_batch_store(
-        spark,
-        f"{state_dir}/sigs",
-        upto,
-        cols=[*_SIG_COLS, "bprefix"],
-        partition_cols=["band", "bprefix"],
-        what="signature store dir",
-        checkpoint_dir=checkpoint_dir,
-        transform=lambda df: df.join(alive, ["doc_id", "ts"]),
-        force=True,
-    )
-    removed += _compact_batch_store(
-        spark,
-        f"{state_dir}/judgments",
-        upto,
-        cols=_JUDGMENT_COLS,
-        partition_cols=[],
-        what="judgment store dir",
-        checkpoint_dir=checkpoint_dir,
-        transform=lambda df: df.join(alive, ["doc_id", "ts"]),
-        force=True,
-    )
+    _assert_layout(state_dir)
+    # the mask covers the ledger's FULL horizon (global LWW): a version
+    # newer than the fold range keeps its rows; `ledger_upto` governs
+    # only which ledger directories fold, never visibility
+    alive = _alive_of(spark, state_dir, _id_horizon(f"{state_dir}/docmeta"))
+    folds = [
+        _lww_fold(
+            spark, f"{state_dir}/sigs", _SIGS, upto, checkpoint_dir, alive
+        ),
+        _lww_fold(
+            spark, f"{state_dir}/judgments", _JUDGMENTS, upto,
+            checkpoint_dir, alive,
+        ),
+        _lww_fold(
+            spark, f"{state_dir}/vermeta", _VERMETA, ledger_upto,
+            ledger_checkpoint_dir, alive,
+        ),
+    ]
     if out_dir is not None and os.path.isdir(out_dir):
-        # the PRODUCT sink folds under the same mask: tombstoned and
-        # superseded landed documents are physically dropped (the read
-        # path landed_documents_current applies the identical mask to
-        # the unfolded tail)
-        removed += _compact_batch_store(
-            spark,
-            out_dir,
-            upto,
-            cols=["doc_id", "text", "source", "ingest_ts",
-                  "n_tokens", "lang"],
-            partition_cols=["lang"],
-            what="landed documents dir",
-            checkpoint_dir=checkpoint_dir,
-            transform=lambda df: df.join(
-                alive.select("doc_id", F.col("ts").alias("ingest_ts")),
-                ["doc_id", "ingest_ts"],
-            ),
-            force=True,
+        # the product sink folds under the same mask; its version stamp
+        # is ingest_ts
+        folds.append(
+            partial(
+                _compact_batch_store,
+                spark,
+                out_dir,
+                upto,
+                cols=["doc_id", "text", "source", "ingest_ts",
+                      "n_tokens", "lang"],
+                partition_cols=["lang"],
+                what="landed documents dir",
+                checkpoint_dir=checkpoint_dir,
+                transform=lambda df: df.join(
+                    alive.withColumnRenamed("ts", "ingest_ts"),
+                    ["doc_id", "ingest_ts"],
+                ),
+                force=True,
+            )
         )
-    removed += _compact_batch_store(
-        spark,
-        f"{state_dir}/vermeta",
-        ledger_upto,
-        cols=[*_VERMETA_COLS, "dp"],
-        partition_cols=["dp"],
-        what="vermeta store dir",
-        checkpoint_dir=ledger_checkpoint_dir,
-        transform=lambda df: df.join(alive, ["doc_id", "ts"]),
-        force=True,
-    )
+    removed = sum(_run_concurrently(spark, *folds))
     if os.path.isdir(f"{state_dir}/hterm"):
-        # live contents' hashes: bounded-width (doc_id, ts, h) winner
-        # rows — computed BEFORE the hterm rewrite so the semi-join
-        # prunes hashes whose every doc is tombstoned or superseded
-        vm = (
-            spark.read.option("basePath", f"{state_dir}/vermeta")
-            .parquet(f"{state_dir}/vermeta")
-            .select("doc_id", "ts", "h")
-        )
+        # hashes of live contents, read from the folded vermeta: the
+        # semi-join prunes a hash once every doc holding it is
+        # tombstoned or superseded
         live_h = (
-            vm.join(alive, ["doc_id", "ts"]).select("h").distinct()
+            _read_store(
+                spark, f"{state_dir}/vermeta", _VERMETA.what, _VERMETA.schema
+            )
+            .join(alive, ["doc_id", "ts"])
+            .select("h")
+            .distinct()
         )
         removed += _compact_batch_store(
             spark,
@@ -538,45 +388,10 @@ def compact_sig_store(
             checkpoint_dir=ledger_checkpoint_dir,
             transform=lambda df: df.distinct().join(live_h, "h", "semi"),
             force=True,
+            schema=_HTERM_SCHEMA,
         )
-    removed += _fold_ledger(
+    return removed + _fold_ledger(
         spark, state_dir, ledger_upto, checkpoint_dir=ledger_checkpoint_dir
-    )
-    return removed
-
-
-def _pruned_store(
-    spark: SparkSession,
-    sigs_dir: str,
-    before: int,
-    touched: list[tuple[int, int]],
-):
-    """Banded store rows (doc_id, sig, band, bkey, ts) landed by
-    batches < `before`, scan-pruned to the touched (band, bprefix)
-    partitions — None when no store exists yet. batch_id < before is
-    the replay guard: a re-run batch never joins against its own failed
-    attempt's partition. `touched` is bounded (<= BANDS *
-    _SIG_STORE_PREFIXES pairs), so the literal OR-chain is a static
-    partition-pruning predicate, never a join. Rows are
-    version-stamped; callers mask visibility against the ledger
-    (_mask_visible)."""
-    _assert_local_dir(sigs_dir, "signature store dir")
-    if not os.path.isdir(sigs_dir):
-        return None
-    _assert_no_compact_leftover(sigs_dir)
-    if not any(e.startswith("batch_id=") for e in os.listdir(sigs_dir)):
-        return None
-    if not touched:
-        return None
-    store = spark.read.option("basePath", sigs_dir).parquet(sigs_dir)
-    hit = None
-    for band, bprefix in touched:
-        term = (F.col("band") == band) & (F.col("bprefix") == bprefix)
-        hit = term if hit is None else (hit | term)
-    return (
-        store.filter(F.col("batch_id") < before)
-        .filter(hit)
-        .select(*_SIG_COLS)
     )
 
 
@@ -700,18 +515,9 @@ def funnel_sigstore_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     re-tokenizing text (the reason the store exists); the INCREMENTAL
     face is the stream's per-batch judged join, which prunes to touched
     buckets and never re-sweeps."""
-    from .retrieval_index import (
-        _fold_horizon,
-        _mask_visible,
-        _read_store,
-        _tail_live,
-    )
-
-    from ..operators.dedup import _banded_sig_pairs
-
     store = _read_store(
-        spark, f"{state_dir}/sigs", "signature store dir"
-    ).select(*_SIG_COLS)
+        spark, f"{state_dir}/sigs", _SIGS.what, _SIGS.schema
+    ).select(*_cols(_SIGS.schema))
     tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
     live = _mask_visible(store, tail).select("doc_id", "sig", "band", "bkey")
     return _banded_sig_pairs(live).orderBy("doc_a", "doc_b")
@@ -730,13 +536,6 @@ def landed_documents_current(
     compact_sig_store to apply this mask PHYSICALLY at fold time — a
     training job that consumed the raw directory instead of this
     reader would train on deleted documents."""
-    from .retrieval_index import (
-        _fold_horizon,
-        _mask_visible,
-        _read_store,
-        _tail_live,
-    )
-
     landed = _read_store(spark, out_dir, "landed documents dir")
     tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
     return _mask_visible(
@@ -767,14 +566,7 @@ def funnel_neardup_probe_adhoc(
     suffices); probes never witness each other; nothing is written.
     Output: (probe_id, is_dup, n_matches, best_est) in probe_id order,
     dedup_incremental's per-arrival verdict shape."""
-    from pyspark.sql import Window
-
-    from ..operators.dedup import MINHASH_BUCKET_CAP, MINHASH_K, _sig_agree
-    from .retrieval_index import (
-        _fold_horizon,
-        _mask_visible,
-        _tail_live,
-    )
+    from ..operators.dedup import MINHASH_BUCKET_CAP
 
     if not probes:
         raise ValueError("no probe texts given")
@@ -789,11 +581,8 @@ def funnel_neardup_probe_adhoc(
         for r in bands.select("band", "bprefix").distinct().collect()
     ]  # bounded: <= |probes| * BANDS pairs
     sigs_dir = f"{state_dir}/sigs"
-    _assert_local_dir(sigs_dir, "signature store dir")
-    if not (
-        os.path.isdir(sigs_dir)
-        and any(e.startswith("batch_id=") for e in os.listdir(sigs_dir))
-    ):
+    _assert_local_dir(sigs_dir, _SIGS.what)
+    if not _batch_ids(sigs_dir):
         raise ValueError(
             f"no signature store under {state_dir!r}: nothing has "
             "landed yet (run curation_funnel_stream first)"
@@ -812,7 +601,7 @@ def funnel_neardup_probe_adhoc(
             .withColumn("best_est", F.lit(None).cast("double"))
             .orderBy("probe_id")
         )
-    store = _pruned_store(spark, sigs_dir, 1 << 62, touched)
+    store = _pruned_store(spark, sigs_dir, _SIGS, 1 << 62, touched)
     tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
     cols = ["doc_id", "sig", "band", "bkey"]
     keys = bands.select("band", "bkey").distinct()
@@ -872,14 +661,6 @@ def funnel_neardup_probe_adhoc(
     )
 
 
-# winner-h point-lookup cap (the _STATS_LOOKUP_CAP shape): batches with
-# up to this many distinct doc_ids resolve the redundant-re-send check
-# via dp + doc_id IN literals pushed into the dp-partitioned ledger
-# stores (row-group skipping on the doc_id-sorted fold); larger batches
-# fall back to the dp-pruned scan + semi join.
-_LEDGER_LOOKUP_CAP = 8192
-
-
 def _current_live_h(
     spark: SparkSession, state_dir: str, before: int, docs: DataFrame
 ):
@@ -887,36 +668,24 @@ def _current_live_h(
     ledger batches < `before` (the replay guard: a re-run sibling batch
     never consults its own failed attempt's rows) — None when no ledger
     has landed yet or `docs` is empty. Cost is the LSM read-before-
-    write shape: dp-pruned + (below _LEDGER_LOOKUP_CAP) doc_id-IN
-    point lookups against the folded doc_id-sorted docmeta/vermeta;
-    above the cap, a dp-pruned scan + semi join."""
-    from .retrieval_index import (
-        _assert_layout,
-        _dp_col,
-        _lww,
-        _read_store,
-    )
-
+    write shape: dp-pruned + (below _LOOKUP_CAP) doc_id-IN point
+    lookups against the folded doc_id-sorted docmeta/vermeta; above the
+    cap, a dp-pruned scan + semi join."""
     _assert_layout(state_dir)  # dp modulus must match the landed store
     dm_dir = f"{state_dir}/docmeta"
     vm_dir = f"{state_dir}/vermeta"
     if not (os.path.isdir(dm_dir) and os.path.isdir(vm_dir)):
         return None
     want = docs.select("doc_id").distinct().withColumn("dp", _dp_col())
-    rows = want.limit(_LEDGER_LOOKUP_CAP + 1).collect()
+    rows = want.limit(_LOOKUP_CAP + 1).collect()
     if not rows:
         return None
-    dm = _read_store(spark, dm_dir, "docmeta store dir").filter(
-        F.col("batch_id") < before
-    )
-    vm = _read_store(spark, vm_dir, "vermeta store dir").filter(
-        F.col("batch_id") < before
-    )
-    if len(rows) <= _LEDGER_LOOKUP_CAP:
-        dps = sorted({r["dp"] for r in rows})
-        idl = sorted({r["doc_id"] for r in rows})
-        dm = dm.filter(F.col("dp").isin(dps)).filter(F.col("doc_id").isin(idl))
-        vm = vm.filter(F.col("dp").isin(dps)).filter(F.col("doc_id").isin(idl))
+    dm = _read_store(spark, dm_dir, "docmeta store dir", _DOCMETA_SCHEMA)
+    vm = _read_store(spark, vm_dir, _VERMETA.what, _VERMETA.schema)
+    dm = dm.filter(F.col("batch_id") < before)
+    vm = vm.filter(F.col("batch_id") < before)
+    if len(rows) <= _LOOKUP_CAP:
+        dm, vm = _point_lookup(dm, rows), _point_lookup(vm, rows)
     else:
         dps = sorted(
             r["dp"] for r in want.select("dp").distinct().collect()
@@ -943,7 +712,7 @@ def _land_funnel_ledger(
     contract. One signal pass feeds all three writes (persisted by the
     caller when the source scan is worth sharing).
 
-    IDENTICAL-CONTENT RE-SEND = LEDGER NO-OP (ADVICE r12, medium): a
+    IDENTICAL-CONTENT RE-SEND = LEDGER NO-OP: a
     live version whose content hash equals its immediate predecessor's
     — the doc's current live LWW winner, or an earlier live version in
     this same batch — is DROPPED from all three writes. The engine's
@@ -960,12 +729,6 @@ def _land_funnel_ledger(
     a version bump (the revival must go live), and lands in the
     engine-suppression divergence (note 2) if it falls inside the
     TTL."""
-    from pyspark.sql import Window
-
-    from .retrieval_index import _dp_col, _land_layout
-
-    _land_layout(state_dir)  # persist/assert the dp modulus (ADVICE r14)
-
     deleted = F.coalesce(F.col("deleted"), F.lit(False))
     live = batch.filter(~deleted)
     sig = quality_signals_of(
@@ -1024,24 +787,19 @@ def _land_funnel_ledger(
             .filter(F.col("_r"))
             .select("doc_id", "ts")
         )
-        (
+        _ledger_write(
             sig.select(
                 "doc_id", "ts", F.lit(False).alias("deleted"),
-                F.col("n_tokens").alias("dl"),
+                F.col("n_tokens").cast("long").alias("dl"),
             )
             .join(redundant, ["doc_id", "ts"], "anti")
             .unionByName(
-                tombs.select(
-                    "doc_id", "ts", "deleted",
-                    F.lit(None).cast("long").alias("dl"),
-                )
-            )
-            .withColumn("dp", _dp_col())
-            .repartition("dp")
-            .write.mode("overwrite")
-            .partitionBy("dp")
-            .parquet(f"{state_dir}/docmeta/batch_id={batch_id}")
-        )
+                tombs.select("doc_id", "ts", "deleted"),
+                allowMissingColumns=True,
+            ),
+            state_dir,
+            batch_id,
+        )()
         (
             sig.select(*_VERMETA_COLS)
             .join(redundant, ["doc_id", "ts"], "anti")
@@ -1214,8 +972,6 @@ def curation_funnel_stream(
         # rows would be invisible under the ledger mask and physically
         # dropped at the next fold anyway. Winner = max (ts, dedup_key)
         # — deterministic even under an exact-ts contract violation.
-        from pyspark.sql import Window
-
         wdoc = Window.partitionBy("doc_id")
         batch = (
             batch.withColumn(
@@ -1260,11 +1016,6 @@ def curation_funnel_stream(
             # witness — the sibling drained first, so the mask carries
             # the invocation's full version knowledge.
             from ..operators.dedup import MINHASH_BUCKET_CAP
-            from .retrieval_index import (
-                _fold_horizon,
-                _mask_visible,
-                _tail_live,
-            )
 
             touched = [
                 (r["band"], r["bprefix"])
@@ -1272,7 +1023,7 @@ def curation_funnel_stream(
                 .distinct()
                 .collect()  # bounded: <= BANDS * _SIG_STORE_PREFIXES rows
             ]
-            store = _pruned_store(spark, sigs_dir, batch_id, touched)
+            store = _pruned_store(spark, sigs_dir, _SIGS, batch_id, touched)
             batch_keys = bands_batch.select("band", "bkey").distinct()
             cols = ["doc_id", "sig", "band", "bkey"]
             if store is None:
@@ -1322,8 +1073,6 @@ def curation_funnel_stream(
             surv3 = surv2.join(flagged_nd, "doc_id", "anti").persist()
 
             # decontamination: per-doc static-bench containment
-            from ..operators.curation import fuzzy_contamination
-
             contam = (
                 fuzzy_contamination(
                     surv3.select("doc_id", tokens_col().alias("toks")),
@@ -1475,15 +1224,6 @@ def curation_funnel_stream_report(
       doc_ids (the engine-dedup suppression class, divergence note 2,
       or a main query that crashed behind the ledger — re-ingest the
       named docs or resume the run)."""
-    from pyspark.sql import Window
-
-    from ..operators.curation import (
-        _FUNNEL_STAGES,
-        _SRC_DROP_DEN,
-        _SRC_DROP_NUM,
-    )
-    from .retrieval_index import _lww, _read_store
-
     ing = spark.read.option("basePath", f"{state_dir}/ingest").parquet(
         f"{state_dir}/ingest"
     )
@@ -1524,29 +1264,30 @@ def curation_funnel_stream_report(
             "this horizon. Re-land the drops into fresh state before "
             "requesting the report."
         )
-    dm = _read_store(spark, f"{state_dir}/docmeta", "docmeta store dir")
-    vm = _read_store(spark, f"{state_dir}/vermeta", "vermeta store dir")
-    ht = _read_store(spark, f"{state_dir}/hterm", "hterm store dir")
+    dm = _read_store(
+        spark, f"{state_dir}/docmeta", "docmeta store dir", _DOCMETA_SCHEMA
+    )
+    vm = _read_store(
+        spark, f"{state_dir}/vermeta", _VERMETA.what, _VERMETA.schema
+    )
+    ht = _read_store(
+        spark, f"{state_dir}/hterm", "hterm store dir", _HTERM_SCHEMA
+    )
     jd = _read_store(
-        spark, f"{state_dir}/judgments", "judgment store dir"
-    ).select(*_JUDGMENT_COLS)
+        spark, f"{state_dir}/judgments", _JUDGMENTS.what, _JUDGMENTS.schema
+    ).select(*_cols(_JUDGMENTS.schema))
 
-    def _ids(sub: str) -> set[int]:
-        # DIRECTORY ids, not data-row ids: a tombstone-only batch writes
-        # an EMPTY vermeta/hterm directory (zero part files), which a
-        # data read cannot see — the gate's signal is "the write
-        # happened", and the _SUCCESS-marked directory is that signal
-        return {
-            int(e.split("=", 1)[1])
-            for e in os.listdir(f"{state_dir}/{sub}")
-            if e.startswith("batch_id=") and e.split("=", 1)[1].isdigit()
-        }
-
-    dm_ids, vm_ids, ht_ids = _ids("docmeta"), _ids("vermeta"), _ids("hterm")
+    # DIRECTORY ids, not data-row ids: a tombstone-only batch writes an
+    # EMPTY vermeta/hterm directory (zero part files), which a data read
+    # cannot see — the gate's signal is "the write happened"
+    dm_ids, vm_ids, ht_ids = (
+        _batch_ids(f"{state_dir}/{sub}")
+        for sub in ("docmeta", "vermeta", "hterm")
+    )
     if not (dm_ids == vm_ids == ht_ids):
         raise ValueError(
-            f"ledger-store horizons disagree (docmeta {sorted(dm_ids)}, "
-            f"vermeta {sorted(vm_ids)}, hterm {sorted(ht_ids)}): the "
+            f"ledger-store horizons disagree (docmeta {dm_ids}, "
+            f"vermeta {vm_ids}, hterm {ht_ids}): the "
             "sibling stream crashed between its three writes — resume "
             "the run to re-align before trusting the report."
         )

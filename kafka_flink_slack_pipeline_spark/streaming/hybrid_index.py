@@ -32,7 +32,7 @@ CODEBOOK RETRAIN: retrain_hybrid_vector_store re-partitions the ENTIRE
 landed vector store under a new codebook — the fold-with-reassignment:
 every surviving (LWW-masked) vector's cid is recomputed with the new
 centroids and the store is rewritten in the new cid layout through the
-shared crash-staged rails. Resume the stream with the new codebook
+crash-staged store rails (store.py). Resume the stream with the new codebook
 afterwards (inserts must assign against the layout they land into);
 the rails' committed-horizon guard enforces that the stream is
 stopped. This is how a drifted corpus migrates without losing the
@@ -66,7 +66,6 @@ SCALE_PROBE_HYBRID.json and the IVF probe family.
 
 from __future__ import annotations
 
-import os
 from functools import partial
 
 import pyarrow as pa
@@ -87,20 +86,23 @@ from ..operators.similarity import (
     cosine,
     norm,
 )
-from .curation_funnel import _compact_batch_store
 from .retrieval_index import (
     _TEXT_STORES,
     _adhoc_search,
-    _alive_of,
-    _cols,
-    _compact_lww_stores,
     _land_text,
     _local_frame,
-    _LwwStore,
-    _mask_visible,
-    _read_store,
     _seed_search,
     _serve_tail,
+)
+from .store import (
+    _LwwStore,
+    _alive_of,
+    _cols,
+    _compact_batch_store,
+    _compact_lww_stores,
+    _id_horizon,
+    _mask_visible,
+    _read_store,
 )
 
 HYBRID_DROP_SCHEMA = (
@@ -112,10 +114,7 @@ _VECTOR_SCHEMA = (
 )
 _VECSEED_SCHEMA = "query_id bigint, qe array<double>, ts timestamp, batch_id int"
 _DENSE_STORES = (
-    _LwwStore(
-        "vectors", _VECTOR_SCHEMA, ["cid"], "hybrid vector store dir",
-        "doc_id",
-    ),
+    _LwwStore("vectors", _VECTOR_SCHEMA, ["cid"], "hybrid vector store dir"),
     _LwwStore(
         "vecseeds", _VECSEED_SCHEMA, [], "dense seed sidecar dir", "query_id"
     ),
@@ -171,8 +170,8 @@ def compact_hybrid_store(
     """Fold batches [0, upto) of ALL SIX hybrid stores: the four
     text-face stores (postings, seeds, docmeta, stats snapshot, as
     compact_retrieval_store folds them) plus the cid-partitioned vector
-    store and the dense seed sidecar — each through the shared
-    crash-staged rails, with superseded-version and tombstoned-doc rows
+    store and the dense seed sidecar — each through the crash-staged
+    store rails (store.py), with superseded-version and tombstoned-doc rows
     physically dropped (the LWW mask). The four data-store folds run at
     the same time, and the ledger folds only after all of them, so the
     fold horizon never moves ahead of an unfolded vector batch
@@ -202,12 +201,7 @@ def retrain_hybrid_vector_store(
     vectors_dir = f"{state_dir}/vectors"
     _read_store(spark, vectors_dir, "hybrid vector store dir")  # guards
     # full horizon: every landed batch must move to the new layout
-    ids = [
-        int(e.split("=", 1)[1])
-        for e in os.listdir(vectors_dir)
-        if e.startswith("batch_id=") and e.split("=", 1)[1].isdigit()
-    ]
-    upto = max(ids) + 1
+    upto = _id_horizon(vectors_dir)
     alive = _alive_of(spark, state_dir, upto)
     return _compact_batch_store(
         spark,

@@ -54,8 +54,8 @@ media_dedup_stream_report REFUSES to hand over the table while
 Σ d_capped > 0 unless the caller passes allow_capped=True (the report
 gate shape the funnel and ingest-metrics checks use).
 
-UPDATE/DELETE (r11, the retrieval-index LWW rails applied as in
-semantic_dedup): drops may carry deleted=true tombstones and
+UPDATE/DELETE (the LWW ledger of the store rails, store.py, applied
+as in semantic_dedup): drops may carry deleted=true tombstones and
 re-ingested versions of earlier doc_ids. Landing writes the
 dp-partitioned docmeta version ledger FIRST (so a batch's own
 tombstones mask the reference set its arrivals are judged against);
@@ -76,15 +76,15 @@ set past the mask (ADVICE r11); the winner-only discipline is
 observationally identical (a superseded sibling's rows would be masked
 everywhere and dropped at the next fold).
 
-Store maintenance is the shared rails: compact_media_store folds
-committed batches of all three stores into one directory each
-((modality, band, bprefix) layout preserved; id-horizon + commits-log
-validation; underscore-prefixed crash staging every reader refuses
-loudly), PHYSICALLY dropping superseded/tombstoned fingerprints and
-verdicts (the LWW mask), folding the ledger to winner rows (tombstones
-retained; stats snapshot as fold-horizon marker); the runner invokes
-it every `compact_every` batches BY DEFAULT — the auto-compaction
-policy all sibling stores ship with.
+Store maintenance goes through the store rails (store.py):
+compact_media_store folds committed batches of all three stores into one
+directory each ((modality, band, bprefix) layout preserved; id-horizon +
+commits-log validation; underscore-prefixed crash staging every reader
+refuses loudly), PHYSICALLY dropping superseded/tombstoned fingerprints
+and verdicts (the LWW mask), folding the ledger to winner rows
+(tombstones retained; stats snapshot as fold-horizon marker); the runner
+invokes it every `compact_every` batches BY DEFAULT — the
+auto-compaction policy all sibling stores ship with.
 
 100 TB/day shape: each fingerprint kernel is one Arrow map (1 row per
 image/track, 1 per video frame); the store write is BANDS rows per
@@ -108,7 +108,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.multimodal import (
@@ -120,18 +120,18 @@ from ..operators.multimodal import (
     contour_fps_of,
     phash_fps_of,
 )
-from .retrieval_index import (
-    _alive_of,
-    _dp_col,
-    _fold_horizon,
-    _fold_ledger,
-    _mask_visible,
-    _tail_live,
-)
-from .curation_funnel import (
+from .store import (
+    _LwwStore,
     _assert_local_dir,
-    _assert_no_compact_leftover,
-    _compact_batch_store,
+    _batch_ids,
+    _cols,
+    _compact_lww_stores,
+    _fold_horizon,
+    _ledger_write,
+    _mask_visible,
+    _pruned_store,
+    _read_store,
+    _tail_live,
 )
 
 MEDIA_DROP_SCHEMA = (
@@ -143,6 +143,23 @@ _STORE_COLS = [
     "modality", "doc_id", "frame_idx", "n_frames", "fp_hi", "fp_lo",
     "band", "bval",
 ]
+# The LWW-folded media stores (store.py).
+_FINGERPRINTS = _LwwStore(
+    "fingerprints",
+    "modality string, doc_id bigint, frame_idx bigint, n_frames bigint, "
+    "fp_hi bigint, fp_lo bigint, band int, bval bigint, ts timestamp, "
+    "bprefix int, batch_id int",
+    ["modality", "band", "bprefix"],
+    "media fingerprint store dir",
+)
+_VERDICTS = _LwwStore(
+    "verdicts",
+    "modality string, doc_id bigint, n_units bigint, fp_hi bigint, "
+    "fp_lo bigint, keep boolean, n_dups bigint, best_hamming bigint, "
+    "best_coverage double, ts timestamp, batch_id int",
+    [],
+    "media verdict store dir",
+)
 _BAND_CARRY = ("modality", "doc_id", "frame_idx", "n_frames")
 _BUCKET_KEY = ["modality", "band", "bval"]
 
@@ -289,8 +306,6 @@ def media_dedup_batch_of(media: DataFrame) -> DataFrame:
     modalities: keep iff no lower-id doc qualifies under the unified
     coverage rule (same kernels, same bands, same per-(modality, band,
     bval) bucket cap as the registered batch ops)."""
-    from pyspark.sql import Window
-
     from ..operators.multimodal import PHASH_BUCKET_CAP
 
     fps = _routed_fps(media)
@@ -312,79 +327,14 @@ def compact_media_store(
     (modality, band, bprefix) fingerprint layout — the signature
     store's compaction discipline applied to the media store (partition
     discovery across batch dirs is the pruned path's residual growth
-    term) — with the r11 LWW mask: superseded-version and
+    term) — with the LWW mask: superseded-version and
     tombstoned-doc fingerprints AND their verdicts are PHYSICALLY
     dropped (join against the ledger's live winners), and the docmeta
     ledger folds to one winner row per doc (tombstones retained; stats
-    snapshot as fold-horizon marker). Shares _compact_batch_store's
-    safety rails."""
-    dm_dir = f"{state_dir}/docmeta"
-    if not os.path.isdir(dm_dir):
-        return 0  # nothing landed yet — nothing to fold
-    alive = _alive_of(spark, state_dir, upto)
-    removed = _compact_batch_store(
-        spark,
-        f"{state_dir}/fingerprints",
-        upto,
-        cols=[*_STORE_COLS, "ts", "bprefix"],
-        partition_cols=["modality", "band", "bprefix"],
-        what="media fingerprint store dir",
-        checkpoint_dir=checkpoint_dir,
-        transform=lambda df: df.join(alive, ["doc_id", "ts"]),
-        force=True,
-    )
-    removed += _compact_batch_store(
-        spark,
-        f"{state_dir}/verdicts",
-        upto,
-        cols=[
-            "modality", "doc_id", "n_units", "fp_hi", "fp_lo", "keep",
-            "n_dups", "best_hamming", "best_coverage", "ts",
-        ],
-        partition_cols=[],
-        what="media verdict store dir",
-        checkpoint_dir=checkpoint_dir,
-        transform=lambda df: df.join(alive, ["doc_id", "ts"]),
-        force=True,
-    )
-    removed += _fold_ledger(
-        spark, state_dir, upto, checkpoint_dir=checkpoint_dir
-    )
-    return removed
-
-
-def _pruned_fp_store(
-    spark: SparkSession,
-    store_dir: str,
-    before: int,
-    touched: list[tuple[str, int, int]],
-):
-    """Landed band rows from batches < `before`, scan-pruned to the
-    touched (modality, band, bprefix) partitions; None when no store
-    exists yet. `touched` is bounded (<= 3 modalities x BANDS x
-    _FP_STORE_PREFIXES triples), so the literal OR-chain is a static
-    partition-pruning predicate."""
-    _assert_local_dir(store_dir, "media fingerprint store dir")
-    if not os.path.isdir(store_dir):
-        return None
-    _assert_no_compact_leftover(store_dir)
-    if not any(e.startswith("batch_id=") for e in os.listdir(store_dir)):
-        return None
-    if not touched:
-        return None
-    store = spark.read.option("basePath", store_dir).parquet(store_dir)
-    hit = None
-    for modality, band, bprefix in touched:
-        term = (
-            (F.col("modality") == modality)
-            & (F.col("band") == band)
-            & (F.col("bprefix") == bprefix)
-        )
-        hit = term if hit is None else (hit | term)
-    return (
-        store.filter(F.col("batch_id") < before)
-        .filter(hit)
-        .select(*_STORE_COLS, "ts")
+    snapshot as fold-horizon marker). The two data-store folds run at
+    the same time, then the ledger folds (store.py's fold order)."""
+    return _compact_lww_stores(
+        spark, state_dir, upto, checkpoint_dir, (_FINGERPRINTS, _VERDICTS)
     )
 
 
@@ -423,8 +373,6 @@ def media_dedup_stream(
             )
         # cap read at call time so the parity-precondition harness can
         # drive a bucket over it (the funnel's MINHASH_BUCKET_CAP shape)
-        from pyspark.sql import Window
-
         from ..operators.multimodal import PHASH_BUCKET_CAP
 
         # The raw frame is persisted so n_raw (every arrival,
@@ -436,22 +384,16 @@ def media_dedup_stream(
         batch = batch.persist()
         n_raw = batch.count()
         deleted = F.coalesce(F.col("deleted"), F.lit(False))
-        # ledger FIRST (the r11 LWW discipline, retrieval_index.py):
-        # this batch's own tombstones/updates must mask the reference
-        # set its arrivals are judged against
-        (
+        # ledger FIRST: this batch's own tombstones/updates must mask
+        # the reference set its arrivals are judged against
+        _ledger_write(
             batch.select(
-                "doc_id",
-                F.col("ingest_ts").alias("ts"),
+                "doc_id", F.col("ingest_ts").alias("ts"),
                 deleted.alias("deleted"),
-                F.lit(None).cast("long").alias("dl"),
-            )
-            .withColumn("dp", _dp_col())
-            .repartition("dp")
-            .write.mode("overwrite")
-            .partitionBy("dp")
-            .parquet(f"{state_dir}/docmeta/batch_id={batch_id}")
-        )
+            ),
+            state_dir,
+            batch_id,
+        )()
         # Per-doc BATCH-LWW winner before fingerprinting: one micro-batch
         # may legally carry several versions of a doc_id (the ordering
         # contract only demands nondecreasing distinct ts). The kernels
@@ -524,7 +466,9 @@ def media_dedup_stream(
                 .distinct()
                 .collect()  # bounded: <= 3 * BANDS * _FP_STORE_PREFIXES
             ]
-            store = _pruned_fp_store(spark, store_dir, batch_id, touched)
+            store = _pruned_store(
+                spark, store_dir, _FINGERPRINTS, batch_id, touched
+            )
             batch_keys = bands_batch.select(*_BUCKET_KEY).distinct()
             if store is None:
                 all_touched = bands_batch.select(*_STORE_COLS)
@@ -619,8 +563,6 @@ def media_dedup_probe_adhoc(
     dup of something landed". Reference anchor: the serving path
     re-reads CURRENT state per lookup
     (Slack Event Server/slackEventServer.js:187-202)."""
-    from pyspark.sql import Window
-
     from ..operators.multimodal import PHASH_BUCKET_CAP
 
     if not probes:
@@ -647,11 +589,8 @@ def media_dedup_probe_adhoc(
         .collect()  # bounded: <= probes' units * BANDS
     ]
     fp_dir = f"{state_dir}/fingerprints"
-    _assert_local_dir(fp_dir, "fingerprint store dir")
-    if not (
-        os.path.isdir(fp_dir)
-        and any(e.startswith("batch_id=") for e in os.listdir(fp_dir))
-    ):
+    _assert_local_dir(fp_dir, _FINGERPRINTS.what)
+    if not _batch_ids(fp_dir):
         raise ValueError(
             f"no fingerprint store under {state_dir!r}: nothing "
             "has landed yet (run media_dedup_stream first)"
@@ -668,7 +607,7 @@ def media_dedup_probe_adhoc(
             "keep boolean, n_dups bigint, best_hamming bigint, "
             "best_coverage double",
         )
-    store = _pruned_fp_store(spark, fp_dir, 1 << 62, touched)
+    store = _pruned_store(spark, fp_dir, _FINGERPRINTS, 1 << 62, touched)
     tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
     hist = _mask_visible(store, tail, key="doc_id").select(*_STORE_COLS)
     sized = hist.withColumn(
@@ -738,17 +677,12 @@ def media_dedup_stream_report(
                 "corpus-wide; the stream caps as-of-batch). Pass "
                 "allow_capped=True to accept the caveat."
             )
-    v = (
-        spark.read.option("basePath", f"{state_dir}/verdicts")
-        .parquet(f"{state_dir}/verdicts")
-        .select(
-            "modality", "doc_id", "n_units", "fp_hi", "fp_lo", "keep",
-            "n_dups", "best_hamming", "best_coverage", "ts",
-        )
-    )
+    v = _read_store(
+        spark, f"{state_dir}/verdicts", _VERDICTS.what, _VERDICTS.schema
+    ).select(*_cols(_VERDICTS.schema))
     # LWW-current verdicts only: superseded versions' and tombstoned
     # docs' verdicts are masked against the ledger tail here and
-    # physically dropped at compaction (the retrieval_index discipline)
+    # physically dropped at compaction
     tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
     return (
         _mask_visible(v, tail, key="doc_id")

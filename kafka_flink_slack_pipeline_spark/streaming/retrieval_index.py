@@ -29,7 +29,7 @@ ingest_ts[, deleted]) drops:
        search face never rehashes.
 
 The three writes are independent and run at the same time
-(_run_concurrently, the shared store rails): each reads the persisted
+(_run_concurrently in the store rails, store.py): each reads the persisted
 micro-batch and writes its own batch_id directory. Their order carries
 no crash meaning, because a batch that did not commit replays and
 overwrites every one of its directories.
@@ -76,7 +76,7 @@ computes each piece of per-request state once and runs these Spark
 actions:
 
     1. the tail collect: the tail's LWW winners, at most
-       _STATS_LOOKUP_CAP + 1 rows, with ts carried as epoch micros so
+       _LOOKUP_CAP + 1 rows, with ts carried as epoch micros so
        the round trip through the driver is exact in any time zone;
     2. seed path only: the masked seed rows of the requested queries
        (<= _BM25_MAX_QUERIES * slice terms);
@@ -90,7 +90,7 @@ The tail winners and the request's (query_id, term) pairs go back to
 Spark as local relations built from Arrow tables: they run no job when
 used, and caller strings travel as data, never as SQL text. Every store
 read declares its schema, so no read runs a parquet footer-inference
-job. A tail above _STATS_LOOKUP_CAP docs (a fold cadence far above the
+job. A tail above _LOOKUP_CAP docs (a fold cadence far above the
 default) keeps the distributed path: the tail frame is recomputed at
 each use and the stats correction falls back to a dp-pruned scan.
 
@@ -116,23 +116,20 @@ does not. MEASURED (tools/index_probe.py, SCALE_PROBE_INDEX.json):
 serving time is FLAT across three decades of store growth with the
 workload's own lists held fixed.
 
-Store maintenance is the shared rails: compact_retrieval_store folds
-committed batches of ALL FOUR text-face stores (postings, docmeta,
-seeds, stats snapshot) into one directory each (layouts preserved;
-id-horizon + commits-log validation; underscore-prefixed crash
-staging), invoked every `compact_every` batches by default. FOLD
-ORDER: the data stores (postings and seeds; the hybrid index adds its
-vectors and dense seeds) fold at the same time, then the stats
-snapshot, then docmeta. The snapshot is the fold horizon the tail mask
-starts after, so it moves only once no data store holds an unmasked
-row at or below it.
+Store maintenance goes through the store rails (store.py):
+compact_retrieval_store folds committed batches of ALL FOUR text-face
+stores (postings, docmeta, seeds, stats snapshot) into one directory
+each (layouts preserved; id-horizon + commits-log validation;
+underscore-prefixed crash staging), invoked every `compact_every`
+batches by default. FOLD ORDER: the data stores (postings and seeds; the
+hybrid index adds its vectors and dense seeds) fold at the same time,
+then the stats snapshot, then docmeta. The snapshot is the fold horizon
+the tail mask starts after, so it moves only once no data store holds an
+unmasked row at or below it.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
 from functools import partial, reduce
 from typing import NamedTuple
 
@@ -151,166 +148,38 @@ from ..operators.curation import (
 )
 from ..operators.textops import tokens_col
 from ..tables import spread
-from .curation_funnel import (
-    _COMPACT_TMP_PREFIX,
-    _assert_local_dir,
-    _assert_no_compact_leftover,
-    _compact_batch_store,
+from .store import (
+    _DOCMETA_SCHEMA,
+    _LOOKUP_CAP,
+    _STATSNAP_SCHEMA,
+    _LwwStore,
+    _assert_layout,
+    _cols,
+    _compact_lww_stores,
+    _dp_col,
+    _fold_horizon,
+    _ledger_write,
+    _lww,
+    _mask_visible,
+    _point_lookup,
+    _read_store,
     _run_concurrently,
+    _tp_col,
 )
 
 INDEX_DROP_SCHEMA = (
     "doc_id bigint, text string, ingest_ts timestamp, deleted boolean"
 )
-# Store-layout fan: tp/dp prefix-partition counts trade read-side
-# pruning granularity against file count (one parquet file per prefix
-# dir per landed batch — guide §6's small-files cost is paid per file
-# PER SERVE). r14: 64/32 -> 16/8 measured -18% on the four *_served_lww
-# bench rows (5.48 s -> 4.51 s within one window): at fixture scale the
-# per-file open cost dominated the pruned scans (32 one-file tasks of
-# ~65 ms fixed cost each). A production store whose per-prefix files
-# reach the 128 MB-1 GB band should RAISE these via the envs — the
-# pruning story is unchanged, only the fan width.
-from ..tables import _env_width as _env_int  # noqa: E402 (defensive env parse)
-
-_TERM_PREFIXES = _env_int("SPARK_GRAFT_TERM_PREFIXES") or 16
-_DOC_PREFIXES = _env_int("SPARK_GRAFT_DOC_PREFIXES") or 8
-# The prefix moduli are STORE state, not process config: tp/dp are
-# recomputed at serve and compaction time, so a store landed under one
-# modulus and read under another (env drift between ingest and serve
-# processes, or an old store after a default change) silently prunes to
-# the WRONG partitions — missing postings/docmeta rows, wrong scores,
-# no error (ADVICE r14, medium). Landing therefore persists the moduli
-# in a one-line manifest on first land, and every later land / serve /
-# compaction asserts against it. Pre-manifest stores (no file) are
-# trusted as-is — they were written by this process lineage.
-_LAYOUT_FILE = "store_layout.json"
-
-
-def _layout_now() -> dict:
-    return {
-        "term_prefixes": _TERM_PREFIXES,
-        "doc_prefixes": _DOC_PREFIXES,
-    }
-
-
-def _land_layout(state_dir: str) -> None:
-    """First land writes the manifest; later lands assert it. The write
-    goes to a temp file that replaces the manifest in one step, so a
-    crash never leaves a truncated manifest behind."""
-    path = os.path.join(state_dir, _LAYOUT_FILE)
-    if os.path.exists(path):
-        _assert_layout(state_dir)
-        return
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(_layout_now(), f)
-    os.replace(tmp, path)
-
-
-def _assert_layout(state_dir: str) -> None:
-    """Fail loudly when the store's persisted prefix moduli disagree
-    with this process's module/env values."""
-    path = os.path.join(state_dir, _LAYOUT_FILE)
-    if not os.path.exists(path):
-        return
-    with open(path) as f:
-        try:
-            got = json.load(f)
-        except json.JSONDecodeError as e:
-            raise ValueError(
-                f"store layout manifest {path!r} is unreadable ({e}): "
-                "rewrite it as the JSON object of the moduli the store "
-                "was landed with, e.g. "
-                f"{json.dumps(_layout_now())}"
-            ) from None
-    want = _layout_now()
-    if got != want:
-        raise ValueError(
-            f"store layout mismatch at {state_dir!r}: landed with "
-            f"{got}, this process uses {want} — set "
-            "SPARK_GRAFT_TERM_PREFIXES / SPARK_GRAFT_DOC_PREFIXES to "
-            "the landed values (changing a store's fan requires a "
-            "rewrite, not an env change)"
-        )
-
-
-# tail collect and stats-correction point-lookup cap: tails up to this
-# many touched docs are collected once per request, served back as a
-# local relation, and resolve their fold-side lookups via a doc_id IN
-# literal pushed into the doc_id-sorted folded docmeta (row-group
-# skipping); larger tails stay distributed and fall back to the
-# dp-pruned scan. Sized to keep the literal list and the driver
-# round-trip trivial at streaming cadence.
-#
-# Measured-and-DECLINED retune (r13, SCALE_PROBE_COMPACTION's
-# reproducible bm25 tail=16 bump): at a ~2.5k-doc tail over a 10k-doc
-# fold, the dp-pruned fallback served in 5.11 s vs the IN-literal
-# path's 6.30 s — thousand-element IN literals carry real driver-side
-# planning cost, which is the bump the knob table shows. Lowering the
-# cap would invert at the production target: the fallback's fold scan
-# grows with the folded corpus (a 1B-doc fold's dp slice is millions
-# of rows) while the literal's cost stays O(tail) regardless of fold
-# size — the literal is the LSM point-lookup shape the flat serving
-# exponent (SCALE_PROBE_INDEX) depends on. The bump is bounded by the
-# cap and vanishes at the compaction cadences the stores default to.
-_STATS_LOOKUP_CAP = 8192
-# Declared store schemas: a read that names its schema runs no parquet
-# footer-inference job. Partition columns keep the types Spark infers
-# from their directory names (batch_id, tp, dp: int); the seeds' tp is a
-# data column (bigint). Every docmeta ledger (the funnel, media and
-# semantic stores land theirs too) has _DOCMETA_SCHEMA, so the shared
-# ledger folds declare it for all of them.
+# Declared schemas of the text-face stores (store.py says why). The
+# postings' tp is a partition column (int); the seeds' tp is a data
+# column (bigint).
 _POSTING_SCHEMA = (
     "term string, doc_id bigint, tf bigint, dl bigint, ts timestamp, "
     "tp int, batch_id int"
 )
-_DOCMETA_SCHEMA = (
-    "doc_id bigint, ts timestamp, deleted boolean, dl bigint, dp int, "
-    "batch_id int"
-)
 _SEED_SCHEMA = (
     "query_id bigint, term string, tp bigint, ts timestamp, batch_id int"
 )
-_STATSNAP_SCHEMA = "dp bigint, n_docs bigint, n_len bigint, sum_dl bigint"
-
-
-def _cols(schema: str) -> list[str]:
-    """A store's columns as landed within one batch: its declared
-    schema less the batch_id partition."""
-    names = [c.split()[0] for c in schema.split(",")]
-    return [c for c in names if c != "batch_id"]
-
-
-def _tp_col(term_col="term"):
-    return F.pmod(F.xxhash64(F.col(term_col)), F.lit(_TERM_PREFIXES))
-
-
-def _dp_col(doc_col="doc_id"):
-    return F.pmod(F.xxhash64(F.col(doc_col)), F.lit(_DOC_PREFIXES))
-
-
-def _read_store(
-    spark: SparkSession, store_dir: str, what: str, schema: str | None = None
-):
-    """Guarded store read: loud on remote URIs (os.path probes would
-    misread them), loud when nothing has landed, loud on interrupted-
-    compaction leftovers — the cdfe06a discipline, applied uniformly to
-    every store and sidecar this module reads. `schema` (a declared
-    store schema) spares the read its footer-inference job; callers
-    reading another store's layout leave it None."""
-    _assert_local_dir(store_dir, what)
-    if not os.path.isdir(store_dir):
-        raise ValueError(
-            f"no {what} at {store_dir!r}: nothing has landed yet "
-            "(run bm25_index_stream / hybrid_index_stream first)"
-        )
-    _assert_no_compact_leftover(store_dir)
-    reader = spark.read.option("basePath", store_dir)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(store_dir)
 
 
 def _local_frame(spark: SparkSession, **cols: pa.Array) -> DataFrame:
@@ -320,20 +189,6 @@ def _local_frame(spark: SparkSession, **cols: pa.Array) -> DataFrame:
     each use of it runs a job), and strings travel as data, never as
     SQL text."""
     return spark.createDataFrame(pa.table(cols))
-
-
-def _lww(docmeta: DataFrame) -> DataFrame:
-    """One winner row per doc under last-write-wins: max (ts, deleted,
-    dl) struct — latest ts wins; an exact-ts tie (ordering-contract
-    violation) resolves delete-over-update deterministically."""
-    return docmeta.groupBy("doc_id").agg(
-        F.max(F.struct("ts", "deleted", "dl")).alias("w")
-    ).select(
-        "doc_id",
-        F.col("w.ts").alias("ts"),
-        F.col("w.deleted").alias("deleted"),
-        F.col("w.dl").alias("dl"),
-    )
 
 
 def _land_text(
@@ -349,7 +204,6 @@ def _land_text(
     LWW fold), never by reading the store here. All writes run at the
     same time (the module docstring says why that is safe); the streams
     persist the batch they share, so it is computed once."""
-    _land_layout(state_dir)
     deleted = F.coalesce(F.col("deleted"), F.lit(False))
     live = batch.filter(~deleted)
     toked = live.select(
@@ -377,7 +231,7 @@ def _land_text(
             F.size(F.filter(tokens_col(), lambda t: t != "")).cast("long")
         )
         .alias("dl"),
-    ).withColumn("dp", _dp_col())
+    )
     seeds = (
         toked.filter(
             (F.col("doc_id") % _BM25_EVERY == 0)
@@ -403,64 +257,12 @@ def _land_text(
             .parquet,
             f"{state_dir}/postings/batch_id={batch_id}",
         ),
-        partial(
-            docmeta.repartition("dp")
-            .write.mode("overwrite")
-            .partitionBy("dp")
-            .parquet,
-            f"{state_dir}/docmeta/batch_id={batch_id}",
-        ),
+        _ledger_write(docmeta, state_dir, batch_id),
         partial(
             seeds.write.mode("overwrite").parquet,
             f"{state_dir}/seeds/batch_id={batch_id}",
         ),
         *more_writes,
-    )
-
-
-def _fold_horizon(state_dir: str) -> int:
-    """Last stats-snapshot id S: docmeta batches with id <= S are
-    covered by the snapshot (and, barring a crash window that the next
-    fold repairs, physically folded). -1 when never compacted."""
-    snap_dir = f"{state_dir}/statsnap"
-    if not os.path.isdir(snap_dir):
-        return -1
-    _assert_no_compact_leftover(snap_dir)
-    ids = [
-        int(e.split("=", 1)[1])
-        for e in os.listdir(snap_dir)
-        if e.startswith("batch_id=") and e.split("=", 1)[1].isdigit()
-    ]
-    return max(ids) if ids else -1
-
-
-def _tail_live(spark: SparkSession, state_dir: str, fold_id: int):
-    """LWW winners among docmeta batches NEWER than the last fold —
-    the serve-time visibility mask. Bounded by compaction cadence
-    (everything older was already masked physically by the fold), so
-    the join against it broadcasts; before the first fold it is the
-    global LWW (exact for any arrival order)."""
-    dm = _read_store(spark, f"{state_dir}/docmeta", "docmeta store dir")
-    return _lww(dm.filter(F.col("batch_id") > fold_id))
-
-
-def _mask_visible(rows: DataFrame, tail: DataFrame, key: str = "doc_id"):
-    """Visibility under the tail mask: a version-stamped row survives
-    iff its doc has no tail version, or it IS the tail winner and that
-    winner is not a tombstone. Requires the ordering contract (per-doc
-    nondecreasing ts); compaction repairs violations globally."""
-    t = tail.select(
-        F.col("doc_id").alias(key),
-        F.col("ts").alias("_t_ts"),
-        F.col("deleted").alias("_t_del"),
-    )
-    return (
-        rows.join(t, key, "left")
-        .filter(
-            F.col("_t_ts").isNull()
-            | ((F.col("ts") == F.col("_t_ts")) & ~F.col("_t_del"))
-        )
-        .drop("_t_ts", "_t_del")
     )
 
 
@@ -472,14 +274,14 @@ class _Tail(NamedTuple):
     docmeta: DataFrame  # the docmeta store, read once per request
     frame: DataFrame  # LWW winners: doc_id, ts, deleted, dl
     # the collected winners (doc_id, ts_us, deleted, dl, dp); None above
-    # _STATS_LOOKUP_CAP, where `frame` is the distributed LWW instead
+    # _LOOKUP_CAP, where `frame` is the distributed LWW instead
     rows: list | None
 
 
 def _serve_tail(spark: SparkSession, state_dir: str) -> _Tail:
     """Collect the tail's LWW winners once per request and serve them
     back as a local relation. The tail is bounded by the fold cadence;
-    above _STATS_LOOKUP_CAP docs the frame stays the distributed LWW,
+    above _LOOKUP_CAP docs the frame stays the distributed LWW,
     recomputed at each use."""
     _assert_layout(state_dir)
     fold_id = _fold_horizon(state_dir)
@@ -495,10 +297,10 @@ def _serve_tail(spark: SparkSession, state_dir: str) -> _Tail:
             "dl",
             _dp_col().alias("dp"),
         )
-        .limit(_STATS_LOOKUP_CAP + 1)
+        .limit(_LOOKUP_CAP + 1)
         .collect()
     )
-    if len(rows) > _STATS_LOOKUP_CAP:
+    if len(rows) > _LOOKUP_CAP:
         return _Tail(fold_id, dm, tail, None)
     local = _local_frame(
         spark,
@@ -539,13 +341,7 @@ def _fold_touched(tail: _Tail) -> DataFrame | None:
     if tail.rows is not None:
         if not tail.rows:
             return None
-        dps = sorted({r["dp"] for r in tail.rows})
-        docs = sorted({r["doc_id"] for r in tail.rows})
-        return _lww(
-            fold.filter(F.col("dp").isin(dps)).filter(
-                F.col("doc_id").isin(docs)
-            )
-        )
+        return _lww(_point_lookup(fold, tail.rows))
     tdps = [
         r["dp"]
         for r in tail.frame.select(_dp_col().alias("dp")).distinct().collect()
@@ -592,159 +388,10 @@ def _live_stats(
     return n, avgdl
 
 
-def _write_statsnap(spark: SparkSession, state_dir: str, upto: int) -> None:
-    """Per-dp integer stats of the live corpus over docmeta batches
-    [0, upto), staged under the underscore crash prefix and swapped in;
-    older snapshots removed after the rename (readers take the max id,
-    so a crash between rename and removal is harmless)."""
-    snap_dir = f"{state_dir}/statsnap"
-    if os.path.isdir(os.path.join(snap_dir, f"batch_id={upto - 1}")):
-        # a snapshot at this exact horizon already exists (a re-run
-        # fold at an unchanged upto — idempotent replay of a compaction
-        # batch, or the funnel's per-main-batch fold over a sibling
-        # ledger that only grows per INVOCATION): the snapshot is a
-        # pure function of docmeta[0, upto), whose winner rows any
-        # prior fold preserved, so a rewrite would produce identical
-        # content — skip instead of colliding on the rename (r12).
-        return
-    dm = _read_store(
-        spark, f"{state_dir}/docmeta", "docmeta store dir", _DOCMETA_SCHEMA
-    )
-    live = (
-        _lww(dm.filter(F.col("batch_id") < upto))
-        .filter(~F.col("deleted"))
-        .withColumn("dp", _dp_col())
-    )
-    snap = live.groupBy("dp").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.count("dl").cast("long").alias("n_len"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
-    )
-    os.makedirs(snap_dir, exist_ok=True)
-    _assert_no_compact_leftover(snap_dir)
-    tmp = os.path.join(snap_dir, f"{_COMPACT_TMP_PREFIX}batch_id={upto - 1}")
-    snap.coalesce(1).write.mode("overwrite").parquet(tmp)
-    olds = [
-        e
-        for e in os.listdir(snap_dir)
-        if e.startswith("batch_id=") and e != f"batch_id={upto - 1}"
-    ]
-    os.rename(tmp, os.path.join(snap_dir, f"batch_id={upto - 1}"))
-    for e in olds:
-        shutil.rmtree(os.path.join(snap_dir, e))
-
-
-def _alive_of(spark: SparkSession, state_dir: str, upto: int):
-    """(doc_id, ts) of LWW winners that are not tombstones, over
-    docmeta batches [0, upto) — the physical-drop mask shared by every
-    LWW store fold (postings/seeds/vectors/vecseeds here, vectors/
-    verdicts in semantic_dedup, the funnel's and media's stores)."""
-    dm = _read_store(
-        spark, f"{state_dir}/docmeta", "docmeta store dir", _DOCMETA_SCHEMA
-    )
-    return (
-        _lww(dm.filter(F.col("batch_id") < upto))
-        .filter(~F.col("deleted"))
-        .select("doc_id", "ts")
-    )
-
-
-def _fold_ledger(
-    spark: SparkSession,
-    state_dir: str,
-    upto: int,
-    checkpoint_dir: str | None = None,
-) -> int:
-    """Fold the docmeta version ledger [0, upto) to one winner row per
-    doc (tombstones RETAINED — they must suppress any not-yet-arrived
-    older version; doc_id-sorted within dp for point lookups) and write
-    the per-dp stats snapshot. Snapshot BEFORE the docmeta fold: every
-    crash window then serves exactly — a snapshot at id S with unfolded
-    docmeta dirs <= S is fine (the correction's fold-read filter
-    batch_id <= S still sees them), whereas a docmeta fold without its
-    snapshot would make the serve-time correction double-count the
-    folded rows."""
-    _write_statsnap(spark, state_dir, upto)
-    return _compact_batch_store(
-        spark,
-        f"{state_dir}/docmeta",
-        upto,
-        cols=_cols(_DOCMETA_SCHEMA),
-        partition_cols=["dp"],
-        what="docmeta store dir",
-        checkpoint_dir=checkpoint_dir,
-        # doc_id-sorted within dp partitions: the stats correction's
-        # point lookups row-group-skip against the sorted min/max stats
-        transform=lambda df: _lww(df)
-        .withColumn("dp", _dp_col())
-        .repartition("dp")
-        .sortWithinPartitions("doc_id"),
-        force=True,
-        schema=_DOCMETA_SCHEMA,
-    )
-
-
-class _LwwStore(NamedTuple):
-    """A version-stamped data store that folds under the ledger's LWW
-    mask: rows survive iff (key, ts) is a live winner."""
-
-    name: str  # subdirectory of the state dir
-    schema: str  # declared schema, batch_id partition included
-    partition_cols: list[str]
-    what: str
-    key: str  # the doc column: doc_id, or query_id in a seed sidecar
-
-
 _TEXT_STORES = (
-    _LwwStore(
-        "postings", _POSTING_SCHEMA, ["tp"], "postings index store dir",
-        "doc_id",
-    ),
+    _LwwStore("postings", _POSTING_SCHEMA, ["tp"], "postings index store dir"),
     _LwwStore("seeds", _SEED_SCHEMA, [], "seed sidecar dir", "query_id"),
 )
-
-
-def _compact_lww_stores(
-    spark: SparkSession,
-    state_dir: str,
-    upto: int,
-    checkpoint_dir: str | None,
-    stores: tuple[_LwwStore, ...],
-) -> int:
-    """Fold `stores` and then the ledger over batches [0, upto). The
-    data-store folds are independent and run at the same time; the
-    ledger folds only after ALL of them have succeeded. FOLD ORDER:
-    data stores -> stats snapshot -> docmeta. The snapshot is the fold
-    horizon the serve-time tail mask starts after, so it may advance
-    only once no store holds an unmasked row at or below it: a crash
-    before it leaves masked data stores beside an unfolded ledger,
-    which the tail mask re-masks harmlessly (rows it would drop are
-    already gone), while a horizon moved ahead of an unfolded store
-    would serve that store's superseded and tombstoned rows until the
-    replayed fold. Returns directories removed."""
-    _assert_layout(state_dir)
-    if not os.path.isdir(f"{state_dir}/docmeta"):
-        return 0  # nothing landed yet — nothing to fold
-    alive = _alive_of(spark, state_dir, upto)
-
-    def fold(store: _LwwStore):
-        mask = alive.withColumnRenamed("doc_id", store.key)
-        return partial(
-            _compact_batch_store,
-            spark,
-            f"{state_dir}/{store.name}",
-            upto,
-            cols=_cols(store.schema),
-            partition_cols=store.partition_cols,
-            what=store.what,
-            checkpoint_dir=checkpoint_dir,
-            transform=lambda df: df.join(mask, [store.key, "ts"]),
-            force=True,
-            schema=store.schema,
-        )
-
-    removed = sum(_run_concurrently(spark, *map(fold, stores)))
-    return removed + _fold_ledger(spark, state_dir, upto, checkpoint_dir)
 
 
 def compact_retrieval_store(
@@ -754,7 +401,7 @@ def compact_retrieval_store(
     checkpoint_dir: str | None = None,
 ) -> int:
     """Fold text-face batches [0, upto) into ONE directory per store
-    (the shared _compact_batch_store rails), applying the global LWW
+    (the crash-staged store rails, store.py), applying the global LWW
     mask: superseded-version and tombstoned-doc postings/seeds are
     physically dropped; docmeta folds to one winner row per doc with
     TOMBSTONES RETAINED (they must suppress any not-yet-arrived older
@@ -944,11 +591,10 @@ def _serve_workload(
         term=pa.array([t for _, t in pairs], pa.string()),
     )
     cand = _pruned_postings(spark, f"{state_dir}/postings", terms)
-    # r14: ONE pinned-width exchange by term feeds the df window (the
-    # scoring pipeline previously ran single-task: AQE coalesced the
-    # ~1 MB by-term shuffle to one partition while the query fan-out +
-    # decimal aggregation behind it was ~1 s of CPU — the same shape
-    # measured in bm25_keyword_search, fixed the same way).
+    # ONE pinned-width exchange by term feeds the df window: left to
+    # AQE, the ~1 MB by-term shuffle coalesces to one partition while
+    # the query fan-out and aggregation behind it are ~1 s of CPU (the
+    # shape bm25_keyword_search pins the same way).
     matched = (
         spread(
             _mask_visible(cand, tail.frame).select(
@@ -972,7 +618,7 @@ def _serve_workload(
         + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.lit(avgdl))
     )
     # per-(doc, term) score computed BEFORE the query fan-out join (it
-    # does not depend on query_id). r15: the fanned rows carry the
+    # does not depend on query_id). The fanned rows carry the
     # score's unscaled long at 1e9 instead of a decimal(25,12), so the
     # fan-out aggregation is a codegen long sum — exact, commutative,
     # and bit-identical to the decimal path through round(.., 6); see

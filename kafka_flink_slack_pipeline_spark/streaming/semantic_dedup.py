@@ -3,8 +3,8 @@ semantics at operators/similarity.py:semantic_dedup): embedding vectors
 arrive as JSONL drops; every micro-batch
 
     1. lands one DOCMETA row per arrival — (vec_id, ts, deleted) in the
-       dp-partitioned version ledger (the retrieval-index rails,
-       streaming/retrieval_index.py) — so UPDATES and DELETES are
+       dp-partitioned version ledger (the store rails, store.py) — so
+       UPDATES and DELETES are
        first-class: a re-ingested vec_id supersedes its older versions
        by ingest_ts, a deleted=true tombstone removes the vector from
        the REFERENCE SET for every later judgment and from the report;
@@ -70,8 +70,6 @@ marker), invoked every `compact_every` batches by default.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -82,17 +80,19 @@ from ..operators.similarity import (
     cosine,
     norm,
 )
-from .curation_funnel import (
-    _assert_local_dir,
-    _assert_no_compact_leftover,
-    _compact_batch_store,
-)
-from .retrieval_index import (
+from .store import (
+    _LwwStore,
     _alive_of,
-    _dp_col,
+    _cols,
+    _compact_batch_store,
+    _compact_lww_stores,
     _fold_horizon,
     _fold_ledger,
+    _id_horizon,
+    _ledger_write,
     _mask_visible,
+    _pruned_store,
+    _read_store,
     _tail_live,
 )
 
@@ -100,8 +100,24 @@ VEC_DROP_SCHEMA = (
     "vec_id bigint, embedding array<double>, ingest_ts timestamp, "
     "deleted boolean"
 )
-_VEC_COLS = ["vec_id", "emb", "ts", "cid"]
-_VERDICT_COLS = ["vec_id", "cid", "keep", "n_dups", "best_sim", "ts"]
+# The LWW-folded semantic stores (store.py), keyed by vec_id.
+_VECTORS = _LwwStore(
+    "vectors",
+    "vec_id bigint, emb array<double>, ts timestamp, cid int, batch_id int",
+    ["cid"],
+    "vector store dir",
+    "vec_id",
+)
+_VERDICTS = _LwwStore(
+    "verdicts",
+    "vec_id bigint, cid int, keep boolean, n_dups bigint, best_sim double, "
+    "ts timestamp, batch_id int",
+    [],
+    "verdict store dir",
+    "vec_id",
+)
+_VEC_COLS = _cols(_VECTORS.schema)
+_VERDICT_COLS = _cols(_VERDICTS.schema)
 
 
 def _assigned_of(
@@ -201,23 +217,12 @@ def retrain_semantic_store(
     stream is stopped; resume it with the new model afterwards (inserts
     must assign against the layout they land into). Returns directories
     removed."""
-    from .retrieval_index import _read_store
-
     vectors_dir = f"{state_dir}/vectors"
     verdicts_dir = f"{state_dir}/verdicts"
-    _read_store(spark, vectors_dir, "vector store dir")  # guards
+    _read_store(spark, vectors_dir, _VECTORS.what)  # guards
     # full horizon: every landed batch must move to the new layout, and
     # the verdicts horizon rides along (written by the same stage)
-    upto = 0
-    for d in (vectors_dir, verdicts_dir):
-        if not os.path.isdir(d):
-            continue
-        ids = [
-            int(e.split("=", 1)[1])
-            for e in os.listdir(d)
-            if e.startswith("batch_id=") and e.split("=", 1)[1].isdigit()
-        ]
-        upto = max(upto, max(ids) + 1 if ids else 0)
+    upto = max(_id_horizon(vectors_dir), _id_horizon(verdicts_dir))
     alive = _alive_of(spark, state_dir, upto).select(
         F.col("doc_id").alias("vec_id"), "ts"
     )
@@ -226,22 +231,21 @@ def retrain_semantic_store(
         vectors_dir,
         upto,
         cols=_VEC_COLS,
-        partition_cols=["cid"],
-        what="vector store dir",
+        partition_cols=_VECTORS.partition_cols,
+        what=_VECTORS.what,
         checkpoint_dir=checkpoint_dir,
         transform=lambda df: _assigned_of(
             df.join(alive, ["vec_id", "ts"]).select("vec_id", "emb", "ts"),
             model,
         ),
         force=True,
+        schema=_VECTORS.schema,
     )
     # step 2 reads the FOLDED vectors back (one directory, new layout)
     # so the re-judgment sees exactly what later pruned scans will see
-    folded = (
-        spark.read.option("basePath", vectors_dir)
-        .parquet(vectors_dir)
-        .select(*_VEC_COLS)
-    )
+    folded = _read_store(
+        spark, vectors_dir, _VECTORS.what, _VECTORS.schema
+    ).select(*_VEC_COLS)
     fresh = _verdict_rows(folded, folded, threshold)
     removed += _compact_batch_store(
         spark,
@@ -249,10 +253,11 @@ def retrain_semantic_store(
         upto,
         cols=_VERDICT_COLS,
         partition_cols=[],
-        what="verdict store dir",
+        what=_VERDICTS.what,
         checkpoint_dir=checkpoint_dir,
         transform=lambda _old: fresh,  # re-judged, not folded
         force=True,
+        schema=_VERDICTS.schema,
     )
     removed += _fold_ledger(
         spark, state_dir, upto, checkpoint_dir=checkpoint_dir
@@ -267,71 +272,16 @@ def compact_semantic_store(
     checkpoint_dir: str | None = None,
 ) -> int:
     """Fold batches [0, upto) of all three semantic stores through the
-    shared crash-staged rails: the docmeta ledger (LWW winners,
+    crash-staged store rails (store.py): the docmeta ledger (LWW winners,
     tombstones retained, stats snapshot as fold-horizon marker), the
     cid-partitioned vector store, and the verdicts sidecar — the latter
     two masked to LIVE winner versions, so superseded vectors stop
     being dedup references and tombstoned vectors' verdicts leave the
-    report PHYSICALLY, not just logically. Shares compact_sig_store's
-    safety rails: id-horizon and committed-horizon validation,
-    underscore-prefixed staging that every reader refuses loudly after
-    a crash. Returns directories removed."""
-    dm_dir = f"{state_dir}/docmeta"
-    if not os.path.isdir(dm_dir):
-        return 0  # nothing landed yet — nothing to fold
-    alive = _alive_of(spark, state_dir, upto).select(
-        F.col("doc_id").alias("vec_id"), "ts"
-    )
-    removed = _compact_batch_store(
-        spark,
-        f"{state_dir}/vectors",
-        upto,
-        cols=_VEC_COLS,
-        partition_cols=["cid"],
-        what="vector store dir",
-        checkpoint_dir=checkpoint_dir,
-        transform=lambda df: df.join(alive, ["vec_id", "ts"]),
-        force=True,
-    )
-    removed += _compact_batch_store(
-        spark,
-        f"{state_dir}/verdicts",
-        upto,
-        cols=_VERDICT_COLS,
-        partition_cols=[],
-        what="verdict store dir",
-        checkpoint_dir=checkpoint_dir,
-        transform=lambda df: df.join(alive, ["vec_id", "ts"]),
-        force=True,
-    )
-    removed += _fold_ledger(
-        spark, state_dir, upto, checkpoint_dir=checkpoint_dir
-    )
-    return removed
-
-
-def _pruned_vec_store(
-    spark: SparkSession, store_dir: str, before: int, touched: list[int]
-):
-    """Landed (vec_id, emb, ts, cid) rows from batches < `before`, scan-
-    pruned to the touched cid partitions; None when no store exists yet.
-    `touched` is bounded by the codebook size, so the isin predicate is
-    a static partition-pruning literal list. Rows are version-stamped;
-    callers mask visibility against the ledger tail."""
-    _assert_local_dir(store_dir, "vector store dir")
-    if not os.path.isdir(store_dir):
-        return None
-    _assert_no_compact_leftover(store_dir)
-    if not any(e.startswith("batch_id=") for e in os.listdir(store_dir)):
-        return None
-    if not touched:
-        return None
-    return (
-        spark.read.option("basePath", store_dir)
-        .parquet(store_dir)
-        .filter(F.col("batch_id") < before)
-        .filter(F.col("cid").isin([int(c) for c in touched]))
-        .select(*_VEC_COLS)
+    report PHYSICALLY, not just logically. The two data-store folds
+    run at the same time, then the ledger folds (store.py's fold
+    order). Returns directories removed."""
+    return _compact_lww_stores(
+        spark, state_dir, upto, checkpoint_dir, (_VECTORS, _VERDICTS)
     )
 
 
@@ -376,19 +326,15 @@ def semantic_dedup_stream(
         deleted = F.coalesce(F.col("deleted"), F.lit(False))
         # ledger FIRST: this batch's own tombstones/updates must mask
         # the reference set its arrivals are judged against
-        (
+        _ledger_write(
             batch.select(
                 F.col("vec_id").alias("doc_id"),
                 F.col("ingest_ts").alias("ts"),
                 deleted.alias("deleted"),
-                F.lit(None).cast("long").alias("dl"),
-            )
-            .withColumn("dp", _dp_col())
-            .repartition("dp")
-            .write.mode("overwrite")
-            .partitionBy("dp")
-            .parquet(f"{state_dir}/docmeta/batch_id={batch_id}")
-        )
+            ),
+            state_dir,
+            batch_id,
+        )()
         assigned = _assigned_of(
             batch.filter(~deleted).select(
                 "vec_id",
@@ -404,10 +350,11 @@ def semantic_dedup_stream(
                 f"{store_dir}/batch_id={batch_id}"
             )
             touched = [
-                r["cid"]
-                for r in assigned.select("cid").distinct().collect()
+                tuple(r) for r in assigned.select("cid").distinct().collect()
             ]  # bounded by the codebook size
-            store = _pruned_vec_store(spark, store_dir, batch_id, touched)
+            store = _pruned_store(
+                spark, store_dir, _VECTORS, batch_id, touched
+            )
             if store is not None:
                 # live history only: mask superseded/tombstoned versions
                 # against the ledger tail (bounded; includes THIS batch's
@@ -484,9 +431,9 @@ def semantic_dedup_probe_adhoc(
         model,
     )
     # bounded collect: <= min(|probes|, k) touched cid literals
-    touched = [r["cid"] for r in assigned.select("cid").distinct().collect()]
-    store = _pruned_vec_store(
-        spark, f"{state_dir}/vectors", 1 << 62, touched
+    touched = [tuple(r) for r in assigned.select("cid").distinct().collect()]
+    store = _pruned_store(
+        spark, f"{state_dir}/vectors", _VECTORS, 1 << 62, touched
     )
     if store is None:
         raise ValueError(
@@ -525,11 +472,9 @@ def semantic_dedup_stream_report(
     semantic_dedup (the parity test compares them directly). Verdicts
     of superseded versions and tombstoned vectors are masked against
     the ledger tail here and physically dropped at compaction."""
-    v = (
-        spark.read.option("basePath", f"{state_dir}/verdicts")
-        .parquet(f"{state_dir}/verdicts")
-        .select(*_VERDICT_COLS)
-    )
+    v = _read_store(
+        spark, f"{state_dir}/verdicts", _VERDICTS.what, _VERDICTS.schema
+    ).select(*_VERDICT_COLS)
     tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
     return (
         _mask_visible(v, tail, key="vec_id")

@@ -162,7 +162,6 @@ def _fold_all(spark, st):
     """Fold every configured store to its committed horizon (physical
     LWW drops through each store's own crash-staged compaction)."""
     from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (
-        _committed_horizon,
         compact_sig_store,
     )
     from kafka_flink_slack_pipeline_spark.streaming.hybrid_index import (
@@ -176,6 +175,9 @@ def _fold_all(spark, st):
     )
     from kafka_flink_slack_pipeline_spark.streaming.semantic_dedup import (
         compact_semantic_store,
+    )
+    from kafka_flink_slack_pipeline_spark.streaming.store import (
+        _committed_horizon,
     )
 
     compact_sig_store(
@@ -325,6 +327,45 @@ def test_cross_store_tombstone_and_update_propagation(spark, sf_dir, xs):
         )
         assert n == 1, f"{kind}: doc 10's superseded versions not folded"
     assert_revived()
+
+
+@pytest.mark.slow
+def test_cross_store_layout_drift_is_loud(spark, xs, monkeypatch):
+    """Every store persists the layout moduli its ledger was landed
+    with: read after a wave has landed all five stores, under another
+    doc-prefix modulus, each store's doc state raises the named layout
+    error instead of pruning to the wrong dp partitions (which reads a
+    landed doc as unknown)."""
+    from kafka_flink_slack_pipeline_spark.streaming import store
+
+    st = xs["stores"]
+    landed = [os.path.isdir(f"{c['state_dir']}/docmeta") for c in st.values()]
+    if not all(landed):
+        propagate_doc_versions(
+            spark,
+            [
+                {
+                    "doc_id": 10,
+                    "ingest_ts": "2025-01-01T00:00:00.000Z",
+                    "text": _texts()[0],
+                    "lang": "en",
+                    "source": "s0",
+                    "embedding": xs["emb10"],
+                    "payload_b64": base64.b64encode(xs["p1"]).decode(),
+                    "mimetype": "image/png",
+                }
+            ],
+            st,
+        )
+    known = {
+        r["store"] for r in cross_store_doc_state(spark, [10], st).collect()
+        if r["known"]
+    }
+    assert known == set(st), "a store never landed doc 10: test vacuous"
+    monkeypatch.setattr(store, "_DOC_PREFIXES", store._DOC_PREFIXES * 2)
+    for kind in sorted(st):
+        with pytest.raises(ValueError, match="store layout mismatch"):
+            cross_store_doc_state(spark, [10], {kind: st[kind]})
 
 
 @pytest.mark.slow

@@ -15,7 +15,7 @@ import sys
 import pytest
 
 from kafka_flink_slack_pipeline_spark import tables
-from kafka_flink_slack_pipeline_spark.streaming import retrieval_index as ri
+from kafka_flink_slack_pipeline_spark.streaming import store
 
 
 def test_spread_width_env_is_read(spark, monkeypatch):
@@ -60,7 +60,7 @@ def test_prefix_envs_are_read():
             sys.executable,
             "-c",
             "from kafka_flink_slack_pipeline_spark.streaming import "
-            "retrieval_index as ri; print(ri._TERM_PREFIXES)",
+            "store; print(store._TERM_PREFIXES)",
         ],
         cwd=root,
         env={**os.environ, "SPARK_GRAFT_TERM_PREFIXES": "32"},
@@ -73,24 +73,24 @@ def test_prefix_envs_are_read():
 
 def test_layout_manifest_roundtrip(tmp_path):
     state = str(tmp_path / "store")
-    ri._land_layout(state)  # first land writes
-    ri._assert_layout(state)  # matching moduli pass
-    ri._land_layout(state)  # re-land with same moduli passes
+    store._land_layout(state)  # first land writes
+    store._assert_layout(state)  # matching moduli pass
+    store._land_layout(state)  # re-land with same moduli passes
 
 
 def test_layout_manifest_mismatch_fails_loudly(tmp_path, monkeypatch):
     state = str(tmp_path / "store")
-    ri._land_layout(state)
-    monkeypatch.setattr(ri, "_TERM_PREFIXES", ri._TERM_PREFIXES * 2)
+    store._land_layout(state)
+    monkeypatch.setattr(store, "_TERM_PREFIXES", store._TERM_PREFIXES * 2)
     with pytest.raises(ValueError, match="store layout mismatch"):
-        ri._assert_layout(state)
+        store._assert_layout(state)
     with pytest.raises(ValueError, match="store layout mismatch"):
-        ri._land_layout(state)  # appending under a drifted fan also fails
+        store._land_layout(state)  # appending under a drifted fan also fails
 
 
 def test_layout_manifest_absent_is_trusted(tmp_path):
     # pre-manifest stores (no file) are served as-is
-    ri._assert_layout(str(tmp_path / "never-landed"))
+    store._assert_layout(str(tmp_path / "never-landed"))
 
 
 def test_layout_manifest_written_atomically(tmp_path, monkeypatch):
@@ -99,20 +99,20 @@ def test_layout_manifest_written_atomically(tmp_path, monkeypatch):
     calls = []
     real = os.replace
     monkeypatch.setattr(
-        ri.os, "replace", lambda a, b: (calls.append((a, b)), real(a, b))
+        store.os, "replace", lambda a, b: (calls.append((a, b)), real(a, b))
     )
-    ri._land_layout(state)
-    path = os.path.join(state, ri._LAYOUT_FILE)
+    store._land_layout(state)
+    path = os.path.join(state, store._LAYOUT_FILE)
     assert [b for _, b in calls] == [path]
     assert not os.path.exists(calls[0][0])
     with open(path) as f:
-        assert json.load(f) == ri._layout_now()
-    assert os.listdir(state) == [ri._LAYOUT_FILE]
+        assert json.load(f) == store._layout_now()
+    assert os.listdir(state) == [store._LAYOUT_FILE]
 
 
 def test_layout_manifest_truncated_names_repair(tmp_path):
     state = tmp_path / "store"
     state.mkdir()
-    (state / ri._LAYOUT_FILE).write_text('{"term_prefixes": 1')
+    (state / store._LAYOUT_FILE).write_text('{"term_prefixes": 1')
     with pytest.raises(ValueError, match="manifest .* is unreadable"):
-        ri._assert_layout(str(state))
+        store._assert_layout(str(state))

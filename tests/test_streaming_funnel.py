@@ -212,9 +212,7 @@ def _ledger_for(spark, state_dir, lo, hi, batch_id=0):
     signature stores by hand."""
     from pyspark.sql import functions as F
 
-    from kafka_flink_slack_pipeline_spark.streaming.retrieval_index import (
-        _dp_col,
-    )
+    from kafka_flink_slack_pipeline_spark.streaming.store import _dp_col
 
     (
         spark.range(lo, hi)
@@ -235,8 +233,9 @@ def test_sig_store_scan_prunes_to_touched_partitions(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (
-        _pruned_store,
+        _SIGS,
     )
+    from kafka_flink_slack_pipeline_spark.streaming.store import _pruned_store
 
     sigs_dir = str(tmp_path / "sigs")
     _bands_of(spark, sf_dir, 0, 200).write.mode("overwrite").partitionBy(
@@ -254,7 +253,7 @@ def test_sig_store_scan_prunes_to_touched_partitions(spark, sf_dir, tmp_path):
     ]
     assert 0 < len(touched) <= 4
 
-    store = _pruned_store(spark, sigs_dir, 2, touched)
+    store = _pruned_store(spark, sigs_dir, _SIGS, 2, touched)
     read_files = [
         r[0]
         for r in store.select(F.input_file_name()).distinct().collect()
@@ -286,11 +285,12 @@ def test_sig_store_rejects_remote_uri(spark):
     import pytest as _pytest
 
     from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (
-        _pruned_store,
+        _SIGS,
     )
+    from kafka_flink_slack_pipeline_spark.streaming.store import _pruned_store
 
     with _pytest.raises(ValueError, match="driver-local"):
-        _pruned_store(spark, "s3://bucket/sigs", 2, [(0, 0)])
+        _pruned_store(spark, "s3://bucket/sigs", _SIGS, 2, [(0, 0)])
 
 
 @pytest.mark.slow
@@ -433,9 +433,10 @@ def test_sig_store_compaction_preserves_neardup_output(spark, sf_dir, tmp_path):
         _sig_agree,
     )
     from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (
-        _pruned_store,
+        _SIGS,
         compact_sig_store,
     )
+    from kafka_flink_slack_pipeline_spark.streaming.store import _pruned_store
 
     state = str(tmp_path / "state")
     sigs_dir = f"{state}/sigs"
@@ -453,7 +454,7 @@ def test_sig_store_compaction_preserves_neardup_output(spark, sf_dir, tmp_path):
     cols = ["doc_id", "sig", "band", "bkey"]
 
     def flags():
-        store = _pruned_store(spark, sigs_dir, 10, touched)
+        store = _pruned_store(spark, sigs_dir, _SIGS, 10, touched)
         keys = new.select("band", "bkey").distinct()
         all_t = store.select(*cols).join(
             F.broadcast(keys), ["band", "bkey"], "semi"
@@ -493,7 +494,7 @@ def test_sig_store_compaction_preserves_neardup_output(spark, sf_dir, tmp_path):
     assert after_dirs == ["batch_id=2"]
     assert flags() == before_flags
     # pruning still file-level after compaction
-    store = _pruned_store(spark, sigs_dir, 10, touched)
+    store = _pruned_store(spark, sigs_dir, _SIGS, 10, touched)
     read_files = [
         r[0]
         for r in store.select(F.input_file_name()).distinct().collect()
@@ -509,13 +510,18 @@ def test_compact_store_guards(spark, sf_dir, tmp_path):
     upto beyond the checkpoint's committed horizon raises (an
     uncommitted batch may replay); (c) a crashed compaction's staged
     leftover makes every reader fail loudly instead of silently
-    reading a store missing its folded history."""
+    reading a store missing its folded history, and the error names
+    the repair that fits the leftover (a partial staging is deleted, a
+    complete one is renamed into place)."""
     import pytest as _pytest
 
     from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (
+        _SIGS,
+        compact_sig_store,
+    )
+    from kafka_flink_slack_pipeline_spark.streaming.store import (
         _COMPACT_TMP_PREFIX,
         _pruned_store,
-        compact_sig_store,
     )
 
     state = str(tmp_path / "state")
@@ -543,15 +549,38 @@ def test_compact_store_guards(spark, sf_dir, tmp_path):
         spark, state, upto=2, checkpoint_dir=str(ckpt)
     ) >= 2
 
-    # (c) staged-leftover guard, on readers AND on a re-run of the tool
+    # (c) staged-leftover guard, on readers AND on a re-run of the tool,
+    # naming the repair for each kind of leftover; following it restores
+    # the store
+    def n_rows():
+        return _pruned_store(spark, sigs_dir, _SIGS, 10, [(0, 0)]).count()
+
+    want = n_rows()
+    folded = os.path.join(sigs_dir, "batch_id=1")
     leftover = os.path.join(sigs_dir, f"{_COMPACT_TMP_PREFIX}batch_id=1")
+    # a fold that died mid-write: no _SUCCESS, the originals are intact
     os.makedirs(leftover)
-    with _pytest.raises(RuntimeError, match="interrupted compaction"):
-        _pruned_store(spark, sigs_dir, 10, [(0, 0)])
-    with _pytest.raises(RuntimeError, match="interrupted compaction"):
+    partial_msg = (
+        r"interrupted compaction.*partial.*delete '_compact_tmp\.batch_id=1'"
+    )
+    with _pytest.raises(RuntimeError, match=partial_msg):
+        n_rows()
+    with _pytest.raises(RuntimeError, match=partial_msg):
         compact_sig_store(spark, state, upto=3)
     os.rmdir(leftover)
-    assert _pruned_store(spark, sigs_dir, 10, [(0, 0)]) is not None
+    assert n_rows() == want
+    # a fold that died after its write committed, with the original
+    # below the target id already removed: the staging is complete
+    os.rename(folded, leftover)
+    assert os.path.exists(os.path.join(leftover, "_SUCCESS"))
+    with _pytest.raises(
+        RuntimeError,
+        match=r"complete.*i <= 1, then rename '_compact_tmp\.batch_id=1' "
+        r"to 'batch_id=1'",
+    ):
+        n_rows()
+    os.rename(leftover, folded)
+    assert n_rows() == want
 
 
 @pytest.mark.slow  # reads the parity test's module state
@@ -751,8 +780,10 @@ def test_funnel_lww_unsuppression_and_update(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (
-        _committed_horizon,
         compact_sig_store,
+    )
+    from kafka_flink_slack_pipeline_spark.streaming.store import (
+        _committed_horizon,
     )
 
     w_text, b_text, x1, x2 = _synth_neardup_texts()
@@ -1089,10 +1120,12 @@ def test_funnel_identical_resend_is_ledger_noop(spark, tmp_path):
     the row the engine's keyed state keeps under the ordering
     contract. All re-asserted after a physical fold."""
     from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (
-        _committed_horizon,
         compact_sig_store,
         funnel_neardup_probe_adhoc,
         landed_documents_current,
+    )
+    from kafka_flink_slack_pipeline_spark.streaming.store import (
+        _committed_horizon,
     )
 
     w_text, b_text, x1, x2 = _synth_neardup_texts()

@@ -202,9 +202,7 @@ def test_hybrid_vector_store_refuses_empty_store(spark, tmp_path):
 def test_hybrid_vecseeds_refuse_empty_and_remote(spark, tmp_path):
     """The r10 ADVICE gap: the dense seed sidecar gets the same loud
     guards as the vector store."""
-    from kafka_flink_slack_pipeline_spark.streaming.retrieval_index import (
-        _read_store,
-    )
+    from kafka_flink_slack_pipeline_spark.streaming.store import _read_store
 
     with pytest.raises(ValueError, match="nothing has landed"):
         _read_store(spark, f"{tmp_path}/vecseeds", "dense seed sidecar dir")
@@ -330,9 +328,7 @@ def test_hybrid_fold_crash_keeps_the_horizon(
     fold horizon: the ledger folds only after every data store, so the
     tail mask still hides each superseded and tombstoned vector until
     the re-run fold completes. Runs on a copy of the unfolded store."""
-    from kafka_flink_slack_pipeline_spark.streaming import (
-        retrieval_index as ri,
-    )
+    from kafka_flink_slack_pipeline_spark.streaming import store
     from kafka_flink_slack_pipeline_spark.streaming.hybrid_index import (
         compact_hybrid_store,
     )
@@ -340,7 +336,7 @@ def test_hybrid_fold_crash_keeps_the_horizon(
     d = hybrid_lww_dirs
     state = str(tmp_path / "state")
     shutil.copytree(d["state"], state)
-    assert ri._fold_horizon(state) == -1, "fixture already folded"
+    assert store._fold_horizon(state) == -1, "fixture already folded"
 
     def serve():
         return [
@@ -350,7 +346,7 @@ def test_hybrid_fold_crash_keeps_the_horizon(
 
     want = serve()
     assert want and not {doc for _, _, doc, *_ in want} & d["dels"]
-    fold = ri._compact_batch_store
+    fold = store._compact_batch_store
 
     def crashing(spark, store_dir, *args, **kwargs):
         if store_dir.endswith("/vectors"):
@@ -358,10 +354,10 @@ def test_hybrid_fold_crash_keeps_the_horizon(
         return fold(spark, store_dir, *args, **kwargs)
 
     with monkeypatch.context() as m:
-        m.setattr(ri, "_compact_batch_store", crashing)
+        m.setattr(store, "_compact_batch_store", crashing)
         with pytest.raises(RuntimeError, match="simulated crash"):
             compact_hybrid_store(spark, state, upto=2)
-    assert ri._fold_horizon(state) == -1, "ledger folded before vectors"
+    assert store._fold_horizon(state) == -1, "ledger folded before vectors"
     assert os.path.isdir(f"{state}/vectors/batch_id=0"), "vectors folded"
     got = serve()
     assert not {doc for _, _, doc, *_ in got} & d["dels"], (
@@ -370,7 +366,7 @@ def test_hybrid_fold_crash_keeps_the_horizon(
     assert got == want
 
     compact_hybrid_store(spark, state, upto=2)
-    assert ri._fold_horizon(state) == 1
+    assert store._fold_horizon(state) == 1
     assert serve() == want
 
 
@@ -381,9 +377,7 @@ def test_hybrid_update_delete_parity_postcompaction(spark, hybrid_lww_dirs):
     from kafka_flink_slack_pipeline_spark.streaming.hybrid_index import (
         compact_hybrid_store,
     )
-    from kafka_flink_slack_pipeline_spark.streaming.retrieval_index import (
-        _read_store,
-    )
+    from kafka_flink_slack_pipeline_spark.streaming.store import _read_store
 
     d = hybrid_lww_dirs
     before = [

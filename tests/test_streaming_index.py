@@ -25,18 +25,21 @@ from kafka_flink_slack_pipeline_spark.operators.curation import (
     bm25_keyword_search,
 )
 from kafka_flink_slack_pipeline_spark.streaming import retrieval_index as ri
-from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (
-    _run_concurrently,
-)
 from kafka_flink_slack_pipeline_spark.streaming.retrieval_index import (
     INDEX_DROP_SCHEMA,
     _land_text,
     _pruned_postings,
-    _read_store,
     bm25_index_search,
     bm25_index_search_adhoc,
     bm25_index_stream,
     compact_retrieval_store,
+)
+from kafka_flink_slack_pipeline_spark.streaming.store import (
+    _DOCMETA_SCHEMA,
+    _batch_ids,
+    _fold_horizon,
+    _read_store,
+    _run_concurrently,
 )
 
 
@@ -313,7 +316,7 @@ def test_index_update_delete_parity_precompaction(spark, lww_dirs):
 def test_index_above_cap_path_serves_identically(
     spark, lww_dirs, tmp_path, monkeypatch
 ):
-    """A tail above _STATS_LOOKUP_CAP keeps the distributed path (tail
+    """A tail above _LOOKUP_CAP keeps the distributed path (tail
     frame recomputed per use, dp-pruned stats correction): both search
     faces serve the same rows as the collected-tail path, before and
     after a fold. Runs on a copy, so the shared fixture stays as is."""
@@ -333,17 +336,13 @@ def test_index_above_cap_path_serves_identically(
 
     for fold in (False, True):
         if fold:  # fold all but the newest batch, which stays the tail
-            newest = max(
-                int(e.split("=", 1)[1])
-                for e in os.listdir(f"{state}/docmeta")
-                if e.startswith("batch_id=")
-            )
+            newest = max(_batch_ids(f"{state}/docmeta"))
             compact_retrieval_store(spark, state, upto=newest)
-            assert ri._fold_horizon(state) >= 0
+            assert _fold_horizon(state) >= 0
         want = serve()
         assert want[0] and want[1], "empty workload — comparison vacuous"
         with monkeypatch.context() as m:
-            m.setattr(ri, "_STATS_LOOKUP_CAP", 1)
+            m.setattr(ri, "_LOOKUP_CAP", 1)
             assert ri._serve_tail(spark, state).rows is None, (
                 "tail within the patched cap — branch not exercised"
             )
@@ -657,7 +656,7 @@ def test_land_and_fold_jobs_keep_the_callers_job_group(spark, tmp_path):
         grouped = set(tracker.getJobIdsForGroup("land_fold"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert ri._fold_horizon(state) == 1
+    assert _fold_horizon(state) == 1
     assert landed and grouped > landed, "land or fold ran no grouped job"
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped, (
         "a store write or fold ran a job outside the caller's group"
@@ -689,6 +688,6 @@ def test_land_computes_the_persisted_batch_once(spark, tmp_path):
         f"{seen.value} source rows computed for a {len(recs)}-row batch"
     )
     docmeta = _read_store(
-        spark, str(tmp_path / "state/docmeta"), "docmeta", ri._DOCMETA_SCHEMA
+        spark, str(tmp_path / "state/docmeta"), "docmeta", _DOCMETA_SCHEMA
     )
     assert docmeta.count() == len(recs)

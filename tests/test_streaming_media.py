@@ -21,11 +21,12 @@ from pyspark.sql import functions as F
 
 from kafka_flink_slack_pipeline_spark.operators import multimodal as M
 from kafka_flink_slack_pipeline_spark.streaming.media_dedup import (
-    _pruned_fp_store,
+    _FINGERPRINTS,
     media_dedup_batch_of,
     media_dedup_stream,
     media_dedup_stream_report,
 )
+from kafka_flink_slack_pipeline_spark.streaming.store import _pruned_store
 
 _COPY_OFFSET = 10**6
 _CLIP_OFFSET = 2 * 10**6
@@ -213,8 +214,8 @@ def test_media_store_scan_prunes_to_touched_buckets(spark, media_dirs):
     )
     assert len({m for m, _, _ in triples}) == 3  # all modalities landed
     modality, band, bprefix = triples[0]
-    pruned = _pruned_fp_store(
-        spark, store_dir, 10**9, [(modality, band, bprefix)]
+    pruned = _pruned_store(
+        spark, store_dir, _FINGERPRINTS, 10**9, [(modality, band, bprefix)]
     )
     read_files = [
         r[0]
@@ -233,7 +234,9 @@ def test_media_store_scan_prunes_to_touched_buckets(spark, media_dirs):
 
 def test_media_store_rejects_remote_uri(spark):
     with pytest.raises(ValueError, match="driver-local"):
-        _pruned_fp_store(spark, "hdfs://nn/fps", 2, [("image", 0, 0)])
+        _pruned_store(
+            spark, "hdfs://nn/fps", _FINGERPRINTS, 2, [("image", 0, 0)]
+        )
 
 
 @pytest.mark.slow

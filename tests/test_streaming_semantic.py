@@ -104,15 +104,18 @@ def test_semantic_store_scan_prunes_to_touched_cids(spark, sf_dir, sem_dirs):
     from pyspark.sql import functions as F
 
     from kafka_flink_slack_pipeline_spark.streaming.semantic_dedup import (
-        _pruned_vec_store,
+        _VECTORS,
     )
+    from kafka_flink_slack_pipeline_spark.streaming.store import _pruned_store
 
     store_dir = f"{sem_dirs['state']}/vectors"
     full = spark.read.option("basePath", store_dir).parquet(store_dir)
     cids = sorted(r["cid"] for r in full.select("cid").distinct().collect())
     assert len(cids) > 1
     probe = [cids[0]]
-    pruned = _pruned_vec_store(spark, store_dir, 10**9, probe)
+    pruned = _pruned_store(
+        spark, store_dir, _VECTORS, 10**9, [(c,) for c in probe]
+    )
     read_files = [
         r[0]
         for r in pruned.select(F.input_file_name()).distinct().collect()
@@ -128,11 +131,12 @@ def test_semantic_store_scan_prunes_to_touched_cids(spark, sf_dir, sem_dirs):
 
 def test_semantic_store_rejects_remote_uri(spark):
     from kafka_flink_slack_pipeline_spark.streaming.semantic_dedup import (
-        _pruned_vec_store,
+        _VECTORS,
     )
+    from kafka_flink_slack_pipeline_spark.streaming.store import _pruned_store
 
     with pytest.raises(ValueError, match="driver-local"):
-        _pruned_vec_store(spark, "hdfs://nn/vectors", 2, [0])
+        _pruned_store(spark, "hdfs://nn/vectors", _VECTORS, 2, [(0,)])
 
 
 def test_vec_store_compaction_and_auto_policy(spark, sf_dir, tmp_path):
@@ -147,8 +151,9 @@ def test_vec_store_compaction_and_auto_policy(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from kafka_flink_slack_pipeline_spark.streaming.semantic_dedup import (
-        _pruned_vec_store,
+        _VECTORS,
     )
+    from kafka_flink_slack_pipeline_spark.streaming.store import _pruned_store
 
     model = _centroid_model(spark, sf_dir)
     d = {
@@ -205,7 +210,7 @@ def test_vec_store_compaction_and_auto_policy(spark, sf_dir, tmp_path):
     full = spark.read.option("basePath", store_dir).parquet(store_dir)
     cids = sorted(r["cid"] for r in full.select("cid").distinct().collect())
     assert len(cids) > 1
-    pruned = _pruned_vec_store(spark, store_dir, 10**9, [cids[0]])
+    pruned = _pruned_store(spark, store_dir, _VECTORS, 10**9, [(cids[0],)])
     read_files = [
         r[0] for r in pruned.select(F.input_file_name()).distinct().collect()
     ]
@@ -222,15 +227,14 @@ def test_vec_store_compaction_guards(spark, sf_dir, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (
-        _COMPACT_TMP_PREFIX,
-    )
-    from kafka_flink_slack_pipeline_spark.streaming.retrieval_index import (
-        _dp_col,
-    )
     from kafka_flink_slack_pipeline_spark.streaming.semantic_dedup import (
-        _pruned_vec_store,
+        _VECTORS,
         compact_semantic_store,
+    )
+    from kafka_flink_slack_pipeline_spark.streaming.store import (
+        _COMPACT_TMP_PREFIX,
+        _dp_col,
+        _pruned_store,
     )
 
     state_dir = str(tmp_path / "state")
@@ -268,15 +272,17 @@ def test_vec_store_compaction_guards(spark, sf_dir, tmp_path):
     leftover = _os.path.join(store_dir, f"{_COMPACT_TMP_PREFIX}batch_id=0")
     _os.makedirs(leftover)
     with pytest.raises(RuntimeError, match="interrupted compaction"):
-        _pruned_vec_store(spark, store_dir, 5, [0])
+        _pruned_store(spark, store_dir, _VECTORS, 5, [(0,)])
     _os.rmdir(leftover)
 
-    before = _pruned_vec_store(spark, store_dir, 5, [0, 1, 2]).count()
+    every_cid = [(0,), (1,), (2,)]
+    before = _pruned_store(spark, store_dir, _VECTORS, 5, every_cid).count()
     assert compact_semantic_store(spark, state_dir, upto=2) >= 2
     assert sorted(
         e for e in _os.listdir(store_dir) if e.startswith("batch_id=")
     ) == ["batch_id=1"]
-    assert _pruned_vec_store(spark, store_dir, 5, [0, 1, 2]).count() == before
+    after = _pruned_store(spark, store_dir, _VECTORS, 5, every_cid).count()
+    assert after == before
 
 
 def _write_recs(path, recs):
@@ -487,9 +493,10 @@ def test_retrain_semantic_store_under_new_model(spark, sf_dir, tmp_path):
         _semantic_verdicts_over,
     )
     from kafka_flink_slack_pipeline_spark.streaming.semantic_dedup import (
-        _pruned_vec_store,
+        _VECTORS,
         retrain_semantic_store,
     )
+    from kafka_flink_slack_pipeline_spark.streaming.store import _pruned_store
 
     model = _centroid_model(spark, sf_dir)
     d, _, live = _land_lww_state(spark, sf_dir, tmp_path, model)
@@ -548,7 +555,7 @@ def test_retrain_semantic_store_under_new_model(spark, sf_dir, tmp_path):
     full = spark.read.option("basePath", store_dir).parquet(store_dir)
     cids = sorted(r["cid"] for r in full.select("cid").distinct().collect())
     assert len(cids) > 1
-    pruned = _pruned_vec_store(spark, store_dir, 10**9, [cids[0]])
+    pruned = _pruned_store(spark, store_dir, _VECTORS, 10**9, [(cids[0],)])
     read_files = [
         r[0] for r in pruned.select(F.input_file_name()).distinct().collect()
     ]

@@ -62,10 +62,12 @@ from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (  # noqa
     funnel_neardup_probe_adhoc,
 )
 from kafka_flink_slack_pipeline_spark.streaming.retrieval_index import (  # noqa: E402
-    _dp_col,
     _land_text,
     bm25_index_search_adhoc,
     compact_retrieval_store,
+)
+from kafka_flink_slack_pipeline_spark.streaming.store import (  # noqa: E402
+    _ledger_write,
 )
 
 CORPUS_MULT = 2  # 10k synthetic docs
@@ -125,17 +127,11 @@ def _build_funnel(spark, corpus_dir: str, n_docs: int, state: str) -> None:
             .partitionBy("band", "bprefix")
             .parquet(f"{state}/sigs/batch_id={i}")
         )
-        (
-            rows.select(
-                "doc_id", F.col("ingest_ts").alias("ts"), "deleted",
-                F.lit(None).cast("long").alias("dl"),
-            )
-            .withColumn("dp", _dp_col())
-            .repartition("dp")
-            .write.mode("overwrite")
-            .partitionBy("dp")
-            .parquet(f"{state}/docmeta/batch_id={i}")
-        )
+        _ledger_write(
+            rows.select("doc_id", F.col("ingest_ts").alias("ts"), "deleted"),
+            state,
+            i,
+        )()
         rows.unpersist()
 
 

@@ -94,16 +94,18 @@ from kafka_flink_slack_pipeline_spark.operators.textops import (  # noqa: E402
 )
 from kafka_flink_slack_pipeline_spark.session import get_spark  # noqa: E402
 from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (  # noqa: E402
+    _SIGS,
     _bprefix_col,
-    _pruned_store,
     funnel_neardup_probe_adhoc,
     landed_documents_current,
 )
-from kafka_flink_slack_pipeline_spark.streaming.retrieval_index import (  # noqa: E402
-    _dp_col,
+from kafka_flink_slack_pipeline_spark.streaming.store import (  # noqa: E402
     _fold_horizon,
+    _ledger_write,
     _mask_visible,
+    _pruned_store,
     _tail_live,
+    _write_statsnap,
 )
 
 _COLS = ["doc_id", "sig", "band", "bkey", "ts"]
@@ -153,31 +155,15 @@ def _build_ledger(spark, state_dir: str) -> None:
         F.col("id").alias("doc_id"),
         F.lit(_TS0).cast("timestamp").alias("ts"),
         F.lit(False).alias("deleted"),
-        F.lit(None).cast("long").alias("dl"),
     )
-    (
-        v1.withColumn("dp", _dp_col())
-        .write.mode("overwrite")
-        .partitionBy("dp")
-        .parquet(f"{state_dir}/docmeta/batch_id=0")
-    )
-    spark.createDataFrame(
-        [(0, 0, 0, 0)], "dp long, n_docs long, n_len long, sum_dl long"
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{state_dir}/statsnap/batch_id=0"
-    )
+    _ledger_write(v1, state_dir, 0)()
+    _write_statsnap(spark, state_dir, upto=1)  # the fold horizon: 0
     tail = spark.range(lo, hi).select(
         F.col("id").alias("doc_id"),
         F.lit(_TS1).cast("timestamp").alias("ts"),
         (F.col("id") < mid).alias("deleted"),  # lower half tombstoned
-        F.lit(None).cast("long").alias("dl"),
     )
-    (
-        tail.withColumn("dp", _dp_col())
-        .write.mode("overwrite")
-        .partitionBy("dp")
-        .parquet(f"{state_dir}/docmeta/batch_id=1")
-    )
+    _ledger_write(tail, state_dir, 1)()
 
 
 def _build_base_store(spark, sf_dir: str, sigs_dir: str) -> int:
@@ -236,7 +222,7 @@ def _neardup_count(
             for r in batch_bands.select("band", "bprefix").distinct().collect()
         ]
         store = _mask_visible(
-            _pruned_store(spark, sigs_dir, before, touched), tail
+            _pruned_store(spark, sigs_dir, _SIGS, before, touched), tail
         )
         keys = batch_bands.select("band", "bkey").distinct()
         all_t = store.select(*_PAIR_COLS).join(

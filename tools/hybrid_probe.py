@@ -67,7 +67,7 @@ from kafka_flink_slack_pipeline_spark.operators.similarity import (  # noqa: E40
 )
 from kafka_flink_slack_pipeline_spark.session import get_spark  # noqa: E402
 from kafka_flink_slack_pipeline_spark.streaming import hybrid_index as hi  # noqa: E402
-from kafka_flink_slack_pipeline_spark.streaming import retrieval_index as ri  # noqa: E402
+from kafka_flink_slack_pipeline_spark.streaming import store  # noqa: E402
 
 CORPUS_MULT = 2
 STORE_REPLICAS = {"base": 0, "x10": 9, "x100": 99, "x1000": 999}
@@ -262,7 +262,7 @@ def main() -> None:
                     rep_v, f"{vflat}/batch_id={rep_id}", False
                 )
                 rep_id += 1
-            ri._write_statsnap(spark, state, upto=rep_id)
+            store._write_statsnap(spark, state, upto=rep_id)
             ip._add_tail(spark, corpus_dir, state, None, rep_id)
             # the tail's vectors re-land too (same emb, later ts) so
             # tail docs keep their dense presence under the mask

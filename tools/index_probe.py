@@ -62,6 +62,7 @@ from kafka_flink_slack_pipeline_spark.operators.curation import (  # noqa: E402
 )
 from kafka_flink_slack_pipeline_spark.session import get_spark  # noqa: E402
 from kafka_flink_slack_pipeline_spark.streaming import retrieval_index as ri  # noqa: E402
+from kafka_flink_slack_pipeline_spark.streaming import store  # noqa: E402
 
 CORPUS_MULT = 10
 STORE_REPLICAS = {"base": 0, "x10": 9, "x100": 99, "x1000": 999}
@@ -93,7 +94,7 @@ def _postings_of(toked, ts):
         .groupBy("term", "doc_id", "dl")
         .agg(F.count(F.lit(1)).cast("long").alias("tf")),
         ts,
-    ).withColumn("tp", ri._tp_col())
+    ).withColumn("tp", store._tp_col())
 
 
 def _docmeta_of(toked, ts):
@@ -107,7 +108,7 @@ def _docmeta_of(toked, ts):
             ts,
         )
         .select("doc_id", "ts", "deleted", "dl")
-        .withColumn("dp", ri._dp_col())
+        .withColumn("dp", store._dp_col())
     )
 
 
@@ -179,10 +180,10 @@ def _build_base(spark, corpus_dir, state_dir, flat_postings_dir=None) -> int:
             ).alias("term"),
         ),
         _TS1,
-    ).withColumn("tp", ri._tp_col())
-    seeds.select(*ri._cols(ri._SEED_SCHEMA)).write.mode("overwrite").parquet(
-        f"{state_dir}/seeds/batch_id=0"
-    )
+    ).withColumn("tp", store._tp_col())
+    seeds.select(*store._cols(ri._SEED_SCHEMA)).write.mode(
+        "overwrite"
+    ).parquet(f"{state_dir}/seeds/batch_id=0")
     return batch_id
 
 
@@ -206,7 +207,7 @@ def _add_replicas(spark, state_dir, flat_postings_dir, rep_id, n_rep):
             "dl",
             "ts",
         )
-        .withColumn("tp", ri._tp_col())
+        .withColumn("tp", store._tp_col())
     )
     _write_postings(rep, f"{state_dir}/postings/batch_id={rep_id}", True)
     if flat_postings_dir is not None:
@@ -228,7 +229,7 @@ def _add_replicas(spark, state_dir, flat_postings_dir, rep_id, n_rep):
             "deleted",
             "dl",
         )
-        .withColumn("dp", ri._dp_col())
+        .withColumn("dp", store._dp_col())
     )
     _write_docmeta(rep_meta, f"{state_dir}/docmeta/batch_id={rep_id}")
 
@@ -269,7 +270,7 @@ def _serve_flat(spark, state_dir, flat_postings_dir):
             .schema(_FLAT_SCHEMA)
             .parquet(flat_postings_dir)
             .filter(F.col("term").isin(sorted({t for t, _ in terms})))
-            .select(*ri._cols(ri._POSTING_SCHEMA))
+            .select(*store._cols(ri._POSTING_SCHEMA))
         )
 
     real = ri._pruned_postings
@@ -322,7 +323,7 @@ def main() -> None:
                 _add_replicas(spark, state, flat, rep_id, n_rep)
                 rep_id += 1
             # snapshot covers base + replicas; the tail stays live
-            ri._write_statsnap(spark, state, upto=rep_id)
+            store._write_statsnap(spark, state, upto=rep_id)
             _add_tail(spark, corpus_dir, state, flat, rep_id)
 
         store_rows = {

@@ -13,7 +13,7 @@ bucket sizing/cap -> banded hamming pair join -> dropped-doc count)
 for a FIXED incoming batch against stores three decades apart in rows,
 in both shapes:
 
-  pruned        — the shipped path (_pruned_fp_store over the
+  pruned        — the shipped path (store._pruned_store over the
                   (band, bprefix) partitioned layout + the semi-join)
   unpartitioned — the naive LAYOUT counterfactual: identical rows
                   landed WITHOUT the partitioning (doc order, bvals
@@ -67,9 +67,12 @@ from kafka_flink_slack_pipeline_spark.session import get_spark  # noqa: E402
 from kafka_flink_slack_pipeline_spark.streaming.media_dedup import (  # noqa: E402
     _BAND_CARRY,
     _BUCKET_KEY,
+    _FINGERPRINTS,
     _STORE_COLS,
     _bprefix_col,
-    _pruned_fp_store,
+)
+from kafka_flink_slack_pipeline_spark.streaming.store import (  # noqa: E402
+    _pruned_store,
 )
 
 CORPUS_MULT = 10            # 50k-doc base corpus (5k/sf0.1 x 10)
@@ -192,8 +195,8 @@ def _dropped_count(spark, store_dir: str, before: int, batch_bands,
             .distinct()
             .collect()
         ]
-        store = _pruned_fp_store(
-            spark, store_dir, before, touched
+        store = _pruned_store(
+            spark, store_dir, _FINGERPRINTS, before, touched
         ).select(*_STORE_COLS)
         keys = batch_bands.select(*_BUCKET_KEY).distinct()
         all_t = store.join(

@@ -13,7 +13,7 @@ with the batch -> within-cluster pair join -> dropped-vector count)
 for a FIXED incoming batch against stores two decades apart in rows,
 in both shapes:
 
-  pruned       — the shipped path (_pruned_vec_store: partition-pruned
+  pruned       — the shipped path (store._pruned_store: partition-pruned
                  scan over the touched cid list, cid-partitioned store)
   unpartitioned — the naive LAYOUT counterfactual: the identical rows
                  landed WITHOUT the cid partitioning (vec_id order, so
@@ -77,7 +77,10 @@ from kafka_flink_slack_pipeline_spark.operators.similarity import (  # noqa: E40
 )
 from kafka_flink_slack_pipeline_spark.session import get_spark  # noqa: E402
 from kafka_flink_slack_pipeline_spark.streaming.semantic_dedup import (  # noqa: E402
-    _pruned_vec_store,
+    _VECTORS,
+)
+from kafka_flink_slack_pipeline_spark.streaming.store import (  # noqa: E402
+    _pruned_store,
 )
 
 CORPUS_MULT = 10            # 20k-vector base store (2k/sf0.1 x 10)
@@ -149,10 +152,10 @@ def _dropped_count(spark, store_dir: str, before: int, batch, pruned: bool):
     """The store-dependent stage work, ending in the verdict action."""
     if pruned:
         touched = [
-            r["cid"] for r in batch.select("cid").distinct().collect()
+            tuple(r) for r in batch.select("cid").distinct().collect()
         ]
-        store = _pruned_vec_store(
-            spark, store_dir, before, touched
+        store = _pruned_store(
+            spark, store_dir, _VECTORS, before, touched
         ).select("vec_id", "emb", "cid")
     else:
         store = (
