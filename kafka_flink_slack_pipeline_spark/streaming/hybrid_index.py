@@ -18,8 +18,10 @@ drops lands BOTH index faces:
       seed docs' query vectors, version-stamped).
 
 All five writes of a batch run at the same time, and a fold folds the
-four data stores at the same time before the ledger (the landing and
-fold-order contract of retrieval_index).
+four data stores at the same time before the ledger, from one ledger
+pass (the landing and fold-order contract of retrieval_index). The
+stream runs a batch's fold beside that batch's land, as
+bm25_index_stream does (retrieval_index._fold_and_land).
 
 UPDATE/DELETE: the retrieval_index LWW-by-ingest_ts + tombstone
 semantics apply to both faces — a re-ingested doc's new embedding may
@@ -89,6 +91,7 @@ from ..operators.similarity import (
 from .retrieval_index import (
     _TEXT_STORES,
     _adhoc_search,
+    _fold_and_land,
     _land_text,
     _local_frame,
     _seed_search,
@@ -280,8 +283,9 @@ def hybrid_index_stream(
     quantizer ((cid, centroid) pairs — similarity._centroid_model's
     shape), held as driver model state and entering each batch's
     assignment as literals. `compact_every=N` folds ALL SIX stores
-    every N committed batches from inside the runner (on by default,
-    the sibling stores' policy). Drops may carry deleted=true
+    every N committed batches from inside the runner, beside the land
+    of the batch that triggers the fold (on by default, the sibling
+    stores' policy). Drops may carry deleted=true
     tombstones and re-ingested versions (LWW by ingest_ts)."""
     raw = (
         spark.readStream.schema(HYBRID_DROP_SCHEMA)
@@ -289,18 +293,15 @@ def hybrid_index_stream(
         .json(drop_dir)
     )
 
-    def stage(batch: DataFrame, batch_id: int) -> None:
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_hybrid_store(
-                spark, state_dir, upto=batch_id,
-                checkpoint_dir=checkpoint_dir,
-            )
-        batch = batch.persist()
-        try:
-            _land_hybrid(batch, batch_id, state_dir, codebook)
-        finally:
-            batch.unpersist()
-
+    stage = _fold_and_land(
+        lambda upto: compact_hybrid_store(
+            spark, state_dir, upto, checkpoint_dir=checkpoint_dir
+        ),
+        lambda batch, batch_id: _land_hybrid(
+            batch, batch_id, state_dir, codebook
+        ),
+        compact_every,
+    )
     q = (
         raw.writeStream.queryName("hybrid_index_stream")
         .foreachBatch(stage)

@@ -123,9 +123,12 @@ each (layouts preserved; id-horizon + commits-log validation;
 underscore-prefixed crash staging), invoked every `compact_every`
 batches by default. FOLD ORDER: the data stores (postings and seeds; the
 hybrid index adds its vectors and dense seeds) fold at the same time,
-then the stats snapshot, then docmeta. The snapshot is the fold horizon
-the tail mask starts after, so it moves only once no data store holds an
-unmasked row at or below it.
+then the stats snapshot, then docmeta, all derived from ONE read and
+aggregation of the ledger. The snapshot is the fold horizon the tail
+mask starts after, so it moves only once no data store holds an
+unmasked row at or below it. The stream runs a batch's fold beside that
+batch's land (_fold_and_land): the land only appends its own batch_id
+directories, and the fold reads only the batches below it.
 """
 
 from __future__ import annotations
@@ -406,17 +409,42 @@ def compact_retrieval_store(
     physically dropped; docmeta folds to one winner row per doc with
     TOMBSTONES RETAINED (they must suppress any not-yet-arrived older
     version); the per-dp stats snapshot is rewritten so serve-time
-    corpus constants never rescan the corpus. The postings and seeds
-    folds run at the same time; the fold order is data stores -> stats
-    snapshot -> docmeta (_compact_lww_stores says why). Term order
-    within folded postings files follows the kernel's read order and is
-    NOT guaranteed sorted — the search face never relies on sortedness
-    for correctness (the IN predicate is exact either way; sortedness
-    only sharpens row-group skipping on freshly-landed batches).
+    corpus constants never rescan the corpus. The mask, the snapshot
+    and the docmeta fold derive from one read and aggregation of the
+    ledger. The postings and seeds folds run at the same time; the fold
+    order is data stores -> stats snapshot -> docmeta
+    (_compact_lww_stores says why). The folded postings hold one file
+    per tp directory. Term order within them follows the kernel's read
+    order and is NOT guaranteed sorted — the search face never relies
+    on sortedness for correctness (the IN predicate is exact either
+    way; sortedness only sharpens row-group skipping on freshly-landed
+    batches).
     Returns directories removed."""
     return _compact_lww_stores(
         spark, state_dir, upto, checkpoint_dir, _TEXT_STORES
     )
+
+
+def _fold_and_land(fold, land, compact_every: int | None):
+    """The foreachBatch stage of both index streams. Batch n lands
+    through `land(batch, n)`; every `compact_every`-th batch also folds
+    the committed batches [0, n) through `fold(n)`, at the same time as
+    its land (_run_concurrently). The land is append-only, which is what
+    lets the two share a batch (store.py, A FOLD BESIDE A LAND): if
+    either fails, batch n stays uncommitted and replays both."""
+
+    def stage(batch: DataFrame, batch_id: int) -> None:
+        due = compact_every and batch_id > 0 and batch_id % compact_every == 0
+        batch = batch.persist()
+        try:
+            writes = [partial(land, batch, batch_id)]
+            if due:
+                writes.insert(0, partial(fold, batch_id))
+            _run_concurrently(batch.sparkSession, *writes)
+        finally:
+            batch.unpersist()
+
+    return stage
 
 
 def bm25_index_stream(
@@ -434,9 +462,10 @@ def bm25_index_stream(
     prior store partitions (idempotent replay, the shared contract).
     Drops may carry deleted=true tombstones and re-ingested versions of
     earlier doc_ids (LWW by ingest_ts; see the module contract).
-    `compact_every` defaults to 64; to TUNE it for a deployment's
-    serve:ingest ratio, feed the measured curve
-    (SCALE_PROBE_COMPACTION.json, store "bm25_index") to
+    Every `compact_every`-th batch n folds batches [0, n) at the same
+    time as it lands (_fold_and_land). `compact_every` defaults to 64;
+    to TUNE it for a deployment's serve:ingest ratio, feed the measured
+    curve (SCALE_PROBE_COMPACTION.json, store "bm25_index") to
     compaction_policy.recommend_fold_cadence — the cadence trades fold
     cost against the tail serve tax, cost knob only (serve answers are
     probe-asserted bit-identical at every fold state)."""
@@ -446,19 +475,13 @@ def bm25_index_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(drop_dir)
     )
-
-    def stage(batch: DataFrame, batch_id: int) -> None:
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_retrieval_store(
-                spark, state_dir, upto=batch_id,
-                checkpoint_dir=checkpoint_dir,
-            )
-        batch = batch.persist()
-        try:
-            _land_text(batch, batch_id, state_dir)
-        finally:
-            batch.unpersist()
-
+    stage = _fold_and_land(
+        lambda upto: compact_retrieval_store(
+            spark, state_dir, upto, checkpoint_dir=checkpoint_dir
+        ),
+        lambda batch, batch_id: _land_text(batch, batch_id, state_dir),
+        compact_every,
+    )
     q = (
         raw.writeStream.queryName("bm25_index_stream")
         .foreachBatch(stage)

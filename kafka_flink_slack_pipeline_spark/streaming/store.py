@@ -32,7 +32,20 @@ FOLD ORDER: data stores -> stats snapshot -> docmeta. The tail mask
 starts after the fold horizon, so the horizon may advance only once no
 data store holds an unmasked row at or below it. A crash before the
 snapshot leaves masked data stores beside an unfolded ledger, which the
-tail mask re-masks harmlessly.
+tail mask re-masks harmlessly. One fold reads and aggregates the ledger
+ONCE (_ledger_pass): the data stores' alive mask, the snapshot and the
+docmeta fold all derive from the same persisted LWW winners.
+
+A FOLD BESIDE A LAND. A fold of [0, n) may run at the same time as the
+land of batch n only when that land is append-only: it writes its own
+batch_id=n directories and reads nothing of the store. The fold reads
+each store through its batch_id=<i> directories with i < n by name
+(_read_batches), so it never lists a directory the land is creating,
+and a failure of either leaves batch n uncommitted, to replay both. The
+BM25 and hybrid indexes land that way (retrieval_index._fold_and_land).
+The media, semantic and funnel lands read earlier batches of their
+store (the near-dup reference set), which a fold rewrites and removes
+under them, so those streams fold before they land.
 
 CRASH STAGING. A fold writes its output under an underscore-prefixed
 `_compact_tmp.batch_id=<n>` directory (Spark's file index skips it),
@@ -52,6 +65,7 @@ import json
 import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from functools import partial, reduce
 from operator import and_, or_
 from typing import NamedTuple
@@ -268,6 +282,23 @@ def _read_store(
     return reader.parquet(store_dir)
 
 
+def _read_batches(
+    spark: SparkSession,
+    store_dir: str,
+    ids: list[int],
+    schema: str | None = None,
+) -> DataFrame:
+    """The rows of the store's batch_id=<i> directories for `ids`, read
+    by name: Spark lists only these directories, never the store's,
+    where a concurrent land may be creating its own batch."""
+    reader = spark.read.option("basePath", store_dir)
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(
+        *[os.path.join(store_dir, f"batch_id={i}") for i in ids]
+    )
+
+
 class _LwwStore(NamedTuple):
     """A version-stamped data store that folds under the ledger's LWW
     mask: rows survive iff (key, ts) is a live winner."""
@@ -327,16 +358,19 @@ def _compact_batch_store(
     transform=None,
     force: bool = False,
     schema: str | None = None,
+    sort_by: str | None = None,
 ) -> int:
     """Rewrite batches [0, upto) of one store into ONE directory with
-    id upto - 1, preserving the partition layout, through the crash
-    staging. Returns directories removed.
+    id upto - 1, preserving the partition layout with one file per
+    partition directory, through the crash staging. Returns directories
+    removed.
 
     `transform` maps the folded frame before the staged write and must
     keep `cols`: the LWW mask that makes logical deletes physical, or a
     retrain's reassignment. `force=True` rewrites even a single batch
     directory, which a transform that changes rows needs. `schema` (the
     store's declared schema) spares the read its footer-inference job.
+    `sort_by` sorts each written file by that column.
 
     Refuses (loudly) an `upto` beyond the store's own id horizon: a
     FUTURE batch with id upto - 1 would read none of the folded history
@@ -366,21 +400,20 @@ def _compact_batch_store(
                 "below upto may replay and must still see (and "
                 "overwrite) its own pre-compaction directory."
             )
-    olds = [f"batch_id={i}" for i in ids if i < upto]
+    olds = [i for i in ids if i < upto]
     if len(olds) <= (0 if force else 1):
         return 0
     tmp = os.path.join(store_dir, f"{_COMPACT_TMP_PREFIX}batch_id={upto - 1}")
-    reader = spark.read.option("basePath", store_dir)
-    if schema is not None:
-        reader = reader.schema(schema)
-    folded = reader.parquet(
-        *[os.path.join(store_dir, e) for e in olds]
-    ).select(*cols)
+    folded = _read_batches(spark, store_dir, olds, schema).select(*cols)
     if transform is not None:
         folded = transform(folded).select(*cols)
+    if partition_cols:
+        folded = folded.repartition(*partition_cols)
+    if sort_by is not None:
+        folded = folded.sortWithinPartitions(sort_by)
     folded.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-    for e in olds:
-        shutil.rmtree(os.path.join(store_dir, e))
+    for i in olds:
+        shutil.rmtree(os.path.join(store_dir, f"batch_id={i}"))
     os.rename(tmp, os.path.join(store_dir, f"batch_id={upto - 1}"))
     return len(olds)
 
@@ -447,7 +480,9 @@ def _tail_live(spark: SparkSession, state_dir: str, fold_id: int):
     read-time visibility mask. Everything older was masked physically
     by the fold; before the first fold it is the global LWW (exact for
     any arrival order)."""
-    dm = _read_store(spark, f"{state_dir}/docmeta", "docmeta store dir")
+    dm = _read_store(
+        spark, f"{state_dir}/docmeta", "docmeta store dir", _DOCMETA_SCHEMA
+    )
     return _lww(dm.filter(F.col("batch_id") > fold_id))
 
 
@@ -470,37 +505,68 @@ def _mask_visible(rows: DataFrame, tail: DataFrame, key: str = "doc_id"):
     )
 
 
+def _ledger_winners(spark: SparkSession, state_dir: str, upto: int):
+    """LWW winners (doc_id, ts, deleted, dl) over docmeta batches
+    [0, upto), read by name (_read_batches). At least one such batch
+    must have landed."""
+    dm_dir = f"{state_dir}/docmeta"
+    _assert_local_dir(dm_dir, "docmeta store dir")
+    _assert_no_compact_leftover(dm_dir)
+    ids = [i for i in _batch_ids(dm_dir) if i < upto]
+    return _lww(_read_batches(spark, dm_dir, ids, _DOCMETA_SCHEMA))
+
+
+@contextmanager
+def _ledger_pass(spark: SparkSession, state_dir: str, upto: int):
+    """The fold's one ledger pass: _ledger_winners persisted for the
+    whole fold and released when it ends, also on failure. Callers
+    finish the docmeta fold inside the block: once its write commits it
+    removes the originals the winners were computed from. A persisted
+    plan keeps its shuffle's full partition count (adaptive execution
+    does not coalesce it), so the winners are cut to one partition per
+    core: every later reader of the cache runs one wave of tasks."""
+    winners = (
+        _ledger_winners(spark, state_dir, upto)
+        .coalesce(spark.sparkContext.defaultParallelism)
+        .persist()
+    )
+    try:
+        yield winners
+    finally:
+        winners.unpersist()
+
+
+def _alive(winners: DataFrame) -> DataFrame:
+    """(doc_id, ts) of the non-tombstone LWW winners: the physical-drop
+    mask of every store fold."""
+    return winners.filter(~F.col("deleted")).select("doc_id", "ts")
+
+
 def _alive_of(spark: SparkSession, state_dir: str, upto: int):
-    """(doc_id, ts) of LWW winners that are not tombstones over docmeta
-    batches [0, upto): the physical-drop mask of every store fold."""
-    dm = _read_store(
-        spark, f"{state_dir}/docmeta", "docmeta store dir", _DOCMETA_SCHEMA
-    )
-    return (
-        _lww(dm.filter(F.col("batch_id") < upto))
-        .filter(~F.col("deleted"))
-        .select("doc_id", "ts")
-    )
+    """The fold mask (_alive) over docmeta batches [0, upto)."""
+    return _alive(_ledger_winners(spark, state_dir, upto))
 
 
-def _write_statsnap(spark: SparkSession, state_dir: str, upto: int) -> None:
+def _write_statsnap(
+    spark: SparkSession,
+    state_dir: str,
+    upto: int,
+    winners: DataFrame | None = None,
+) -> None:
     """Per-dp integer stats of the live corpus over docmeta batches
     [0, upto), staged and swapped in; older snapshots are removed after
     the rename (readers take the max id, so a crash between rename and
     removal is harmless). A snapshot already at this horizon is kept:
     it is a pure function of docmeta [0, upto), whose winner rows every
-    fold preserves, so a re-run fold would rewrite identical content."""
+    fold preserves, so a re-run fold would rewrite identical content.
+    `winners` is the fold's _ledger_pass; without it the ledger is read
+    here."""
     snap_dir = f"{state_dir}/statsnap"
     if upto - 1 in _batch_ids(snap_dir):
         return
-    dm = _read_store(
-        spark, f"{state_dir}/docmeta", "docmeta store dir", _DOCMETA_SCHEMA
-    )
-    live = (
-        _lww(dm.filter(F.col("batch_id") < upto))
-        .filter(~F.col("deleted"))
-        .withColumn("dp", _dp_col())
-    )
+    if winners is None:
+        winners = _ledger_winners(spark, state_dir, upto)
+    live = winners.filter(~F.col("deleted")).withColumn("dp", _dp_col())
     snap = live.groupBy("dp").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.count("dl").cast("long").alias("n_len"),
@@ -521,6 +587,7 @@ def _fold_ledger(
     state_dir: str,
     upto: int,
     checkpoint_dir: str | None = None,
+    winners: DataFrame | None = None,
 ) -> int:
     """Fold the docmeta ledger [0, upto) to one winner row per doc
     (tombstones retained; doc_id-sorted within dp, so point lookups
@@ -528,8 +595,15 @@ def _fold_ledger(
     FIRST: a snapshot at id S beside unfolded docmeta dirs <= S serves
     exactly (the correction's fold read batch_id <= S still sees
     them), whereas a docmeta fold without its snapshot would make the
-    serve-time correction count the folded rows twice."""
-    _write_statsnap(spark, state_dir, upto)
+    serve-time correction count the folded rows twice. Both derive from
+    `winners`, the caller's _ledger_pass; without it the fold makes its
+    own."""
+    if winners is None:
+        with _ledger_pass(spark, state_dir, upto) as winners:
+            return _fold_ledger(
+                spark, state_dir, upto, checkpoint_dir, winners
+            )
+    _write_statsnap(spark, state_dir, upto, winners)
     return _compact_batch_store(
         spark,
         f"{state_dir}/docmeta",
@@ -538,12 +612,10 @@ def _fold_ledger(
         partition_cols=["dp"],
         what="docmeta store dir",
         checkpoint_dir=checkpoint_dir,
-        transform=lambda df: _lww(df)
-        .withColumn("dp", _dp_col())
-        .repartition("dp")
-        .sortWithinPartitions("doc_id"),
+        transform=lambda _: winners.withColumn("dp", _dp_col()),
         force=True,
         schema=_DOCMETA_SCHEMA,
+        sort_by="doc_id",
     )
 
 
@@ -556,7 +628,7 @@ def _lww_fold(
     alive: DataFrame,
 ):
     """The thunk that folds `store` over batches [0, upto) keeping only
-    rows whose (key, ts) is in `alive` (_alive_of)."""
+    rows whose (key, ts) is in `alive` (_alive)."""
     mask = alive.withColumnRenamed("doc_id", store.key)
     return partial(
         _compact_batch_store,
@@ -581,18 +653,25 @@ def _compact_lww_stores(
     stores: tuple[_LwwStore, ...],
 ) -> int:
     """Fold `stores` and then the ledger over batches [0, upto), in the
-    module's fold order. The data-store folds are independent and run
-    at the same time; the ledger folds only after ALL of them have
-    succeeded. Returns directories removed."""
+    module's fold order, from one ledger pass. The data-store folds are
+    independent and run at the same time; the ledger folds only after
+    ALL of them have succeeded. Every read goes through batch
+    directories below `upto` by name, so the fold may run beside an
+    append-only land of batch `upto` (module docstring). Returns
+    directories removed."""
     _assert_layout(state_dir)
-    if not os.path.isdir(f"{state_dir}/docmeta"):
+    if not any(i < upto for i in _batch_ids(f"{state_dir}/docmeta")):
         return 0  # nothing landed yet — nothing to fold
-    alive = _alive_of(spark, state_dir, upto)
-    folds = [
-        _lww_fold(
-            spark, f"{state_dir}/{s.name}", s, upto, checkpoint_dir, alive
+    with _ledger_pass(spark, state_dir, upto) as winners:
+        alive = _alive(winners)
+        folds = [
+            _lww_fold(
+                spark, f"{state_dir}/{s.name}", s, upto, checkpoint_dir,
+                alive,
+            )
+            for s in stores
+        ]
+        removed = sum(_run_concurrently(spark, *folds))
+        return removed + _fold_ledger(
+            spark, state_dir, upto, checkpoint_dir, winners
         )
-        for s in stores
-    ]
-    removed = sum(_run_concurrently(spark, *folds))
-    return removed + _fold_ledger(spark, state_dir, upto, checkpoint_dir)
