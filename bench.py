@@ -1,8 +1,13 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+on session.default_master() and prints ONE JSON line:
+  {"metric": "...", "value": N, "unit": "sec", "sf": ..., "master": ...,
+   "cpus_effective": ..., "default_parallelism": ..., "queries": {...}}
+
+`master` is the session's master, `cpus_effective` the CPUs this process
+may run on (its affinity mask) and `default_parallelism` Spark's default
+task count, so a run on a master wider than its host reads as such.
 
 Each query is executed four times: a warmup pass (JIT + parquet footer
 cache) is NOT counted, then three timed passes of which the MIN is
@@ -328,6 +333,9 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "master": spark.sparkContext.master,
+                "cpus_effective": len(os.sched_getaffinity(0)),
+                "default_parallelism": spark.sparkContext.defaultParallelism,
                 "r1_anchor_ratio": round(anchor_now / anchor_r1, 3),
                 "queries": timings,
             },

@@ -22,6 +22,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_master() -> str:
+    """local[$SPARK_GRAFT_CPUS], or one thread per CPU this process may
+    run on when the env is unset."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    return f"local[{cpus}]"
+
+
 def get_spark(
     app_name: str = "kafka_flink_slack_pipeline_spark",
     master: str | None = None,
@@ -29,13 +36,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    `master` defaults to local[$SPARK_GRAFT_CPUS] (env, default 32) when no
-    cluster master is configured, so the same entry points run in tests and
-    under spark-submit on a real cluster (where `master` is injected).
+    `master` defaults to default_master() when no cluster master is
+    configured, so the same entry points run in tests and under
+    spark-submit on a real cluster (where `master` is injected).
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = default_master()
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -63,7 +63,7 @@ for the stores' Kafka topics, same fan-out); all heavy lifting stays
 inside the stores' measured per-batch paths (SCALE_PROBE_FUNNEL /
 _INDEX / _HYBRID / _SEMANTIC / _MEDIA). The certificate reads only
 the wave's own doc_ids out of each ledger — a dp-pruned doc_id-IN
-point lookup per store (the _live_stats shape), never a corpus scan.
+point lookup per store (store._point_lookup), never a corpus scan.
 
 HONEST LIMIT — liveness agreement is not face health: the certificate
 reads the LEDGERS, so it cannot see a doc that is ledger-live but
@@ -533,7 +533,7 @@ def cross_store_doc_state(
     doc: `known` = the store's ledger has EVER recorded the doc,
     `live` = its current LWW winner is not a tombstone, `ts` = the
     winner's version ts (NULL when unknown). The read is a dp-pruned
-    doc_id-IN point lookup per ledger (the _live_stats shape) — never
+    doc_id-IN point lookup per ledger (store._point_lookup) — never
     a corpus scan. `doc_ids` is the caller's bounded ask (a forget
     request names its documents).
 

@@ -71,28 +71,28 @@ point lookup, bounded by the tail's dp spread), plus the tail winners'
 contribution. dl values are integers, so double summation is
 order-independent and avgdl reconstructs EXACTLY.
 
-SERVING. One request (bm25_index_search, bm25_index_search_adhoc)
-computes each piece of per-request state once and runs these Spark
-actions:
+SERVING. One request (bm25_index_search, bm25_index_search_adhoc) runs
+ONE Spark action, the scoring query, when the caller collects the
+result; the seed path adds the collect of the masked seed rows of the
+requested queries (<= _BM25_MAX_QUERIES * slice terms). The rest of the
+per-request state is read once, on the driver, from the store's own
+parquet files (the store is driver-local):
 
-    1. the tail collect: the tail's LWW winners, at most
-       _LOOKUP_CAP + 1 rows, with ts carried as epoch micros so
-       the round trip through the driver is exact in any time zone;
-    2. seed path only: the masked seed rows of the requested queries
-       (<= _BM25_MAX_QUERIES * slice terms);
-    3. the stats aggregate: the snapshot totals minus the fold-side
-       contribution of the tail's docs (a dp- and doc_id-IN-pruned
-       point lookup) in one aggregate; the tail's own contribution is
-       added on the driver from the collected rows;
-    4. the scoring query, when the caller collects the result.
+    1. the tail: its docmeta rows when the parquet footers count at
+       most _LOOKUP_CAP of them, resolved to LWW winners with ts carried
+       as epoch micros, so the round trip is exact in any time zone;
+    2. the corpus statistics: the snapshot totals, minus the fold-side
+       contribution of the tail's docs (a point lookup that reads only
+       their dp directories and the row groups whose doc_id range covers
+       one), plus the tail winners' own contribution.
 
-The tail winners and the request's (query_id, term) pairs go back to
-Spark as local relations built from Arrow tables: they run no job when
-used, and caller strings travel as data, never as SQL text. Every store
-read declares its schema, so no read runs a parquet footer-inference
-job. A tail above _LOOKUP_CAP docs (a fold cadence far above the
-default) keeps the distributed path: the tail frame is recomputed at
-each use and the stats correction falls back to a dp-pruned scan.
+The tail winners and the request's (query_id, term) pairs go to Spark
+as local relations built from Arrow tables: they run no job when used,
+and caller strings travel as data, never as SQL text. Every store read
+declares its schema, so no read runs a parquet footer-inference job. A
+tail above _LOOKUP_CAP rows (a fold cadence far above the default)
+keeps the distributed path: the tail frame is recomputed at each use
+and the stats correction is a dp-pruned scan in one Spark aggregate.
 
 Scoring uses the batch op's expressions VERBATIM (one-IEEE-op rational
 idf, exact term-score sums, round 6, (score DESC, doc_id) top-k), so
@@ -133,7 +133,7 @@ directories, and the fold reads only the batches below it.
 
 from __future__ import annotations
 
-from functools import partial, reduce
+from functools import partial
 from typing import NamedTuple
 
 import pyarrow as pa
@@ -154,19 +154,20 @@ from ..tables import spread
 from .store import (
     _DOCMETA_SCHEMA,
     _LOOKUP_CAP,
-    _STATSNAP_SCHEMA,
     _LwwStore,
     _assert_layout,
     _cols,
     _compact_lww_stores,
     _dp_col,
     _fold_horizon,
+    _ledger_read,
     _ledger_write,
     _lww,
+    _lww_rows,
     _mask_visible,
-    _point_lookup,
     _read_store,
     _run_concurrently,
+    _statsnap_totals,
     _tp_col,
 )
 
@@ -274,37 +275,29 @@ class _Tail(NamedTuple):
     newer than the last fold)."""
 
     fold_id: int  # the last fold's batch id; -1 before the first fold
-    docmeta: DataFrame  # the docmeta store, read once per request
     frame: DataFrame  # LWW winners: doc_id, ts, deleted, dl
-    # the collected winners (doc_id, ts_us, deleted, dl, dp); None above
-    # _LOOKUP_CAP, where `frame` is the distributed LWW instead
+    # the driver-read winners (doc_id, ts_us, deleted, dl, dp); None
+    # above _LOOKUP_CAP, where `frame` is the distributed LWW instead
     rows: list | None
+    # above _LOOKUP_CAP, the docmeta store read once per request
+    docmeta: DataFrame | None = None
 
 
 def _serve_tail(spark: SparkSession, state_dir: str) -> _Tail:
-    """Collect the tail's LWW winners once per request and serve them
-    back as a local relation. The tail is bounded by the fold cadence;
-    above _LOOKUP_CAP docs the frame stays the distributed LWW,
-    recomputed at each use."""
+    """The tail's LWW winners, once per request. Up to _LOOKUP_CAP
+    ledger rows they are read and resolved on the driver and served
+    back as a local relation, with no Spark job; above it the frame
+    stays the distributed LWW, recomputed at each use."""
     _assert_layout(state_dir)
     fold_id = _fold_horizon(state_dir)
-    dm = _read_store(
-        spark, f"{state_dir}/docmeta", "docmeta store dir", _DOCMETA_SCHEMA
-    )
-    tail = _lww(dm.filter(F.col("batch_id") > fold_id))
-    rows = (
-        tail.select(
-            "doc_id",
-            F.unix_micros("ts").alias("ts_us"),
-            "deleted",
-            "dl",
-            _dp_col().alias("dp"),
+    rows = _ledger_read(state_dir, lambda i: i > fold_id, cap=_LOOKUP_CAP)
+    if rows is None:
+        dm = _read_store(
+            spark, f"{state_dir}/docmeta", "docmeta store dir", _DOCMETA_SCHEMA
         )
-        .limit(_LOOKUP_CAP + 1)
-        .collect()
-    )
-    if len(rows) > _LOOKUP_CAP:
-        return _Tail(fold_id, dm, tail, None)
+        tail = _lww(dm.filter(F.col("batch_id") > fold_id))
+        return _Tail(fold_id, tail, None, dm)
+    rows = _lww_rows(rows)
     local = _local_frame(
         spark,
         doc_id=pa.array([r["doc_id"] for r in rows], pa.int64()),
@@ -314,16 +307,23 @@ def _serve_tail(spark: SparkSession, state_dir: str) -> _Tail:
     ).select(
         "doc_id", F.timestamp_micros("ts_us").alias("ts"), "deleted", "dl"
     )
-    return _Tail(fold_id, dm, local, rows)
+    return _Tail(fold_id, local, rows)
 
 
 _TRIPLET = ("n_docs", "n_len", "sum_dl")
 
 
+def _triplet(winners: list[dict]) -> tuple[int, int, int]:
+    """The (n_docs, n_len, sum_dl) contribution of driver winner rows:
+    tombstones excluded, null-text docs count toward N but not avgdl
+    (the batch op's count(*) vs avg(len) split)."""
+    dls = [r["dl"] for r in winners if r["deleted"] is False]
+    kept = [d for d in dls if d is not None]
+    return len(dls), len(kept), sum(kept)
+
+
 def _contrib(winners: DataFrame, sign: int) -> DataFrame:
-    """Each live winner row's (n_docs, n_len, sum_dl) contribution,
-    times `sign`: tombstones excluded, null-text docs count toward N
-    but not avgdl (the batch op's count(*) vs avg(len) split)."""
+    """_triplet per winner row of a distributed frame, times `sign`."""
     return winners.filter(~F.col("deleted")).select(
         F.lit(sign).cast("long").alias("n_docs"),
         (F.col("dl").isNotNull().cast("long") * sign).alias("n_len"),
@@ -333,18 +333,10 @@ def _contrib(winners: DataFrame, sign: int) -> DataFrame:
     )
 
 
-def _fold_touched(tail: _Tail) -> DataFrame | None:
-    """Fold-side LWW winners of the docs the tail touched. Below the
-    cap the fold read carries dp and doc_id IN literals that
-    row-group-skip inside the doc_id-sorted folded files (the LSM
-    point-lookup shape — about one row group per touched doc, so
-    serving stays flat in corpus size); above it, a dp-pruned scan
-    semi-joined to the tail."""
+def _fold_touched(tail: _Tail) -> DataFrame:
+    """Above the cap: fold-side LWW winners of the docs the tail
+    touched, a dp-pruned scan semi-joined to the tail."""
     fold = tail.docmeta.filter(F.col("batch_id") <= tail.fold_id)
-    if tail.rows is not None:
-        if not tail.rows:
-            return None
-        return _lww(_point_lookup(fold, tail.rows))
     tdps = [
         r["dp"]
         for r in tail.frame.select(_dp_col().alias("dp")).distinct().collect()
@@ -354,38 +346,33 @@ def _fold_touched(tail: _Tail) -> DataFrame | None:
     )
 
 
-def _live_stats(
-    spark: SparkSession, state_dir: str, tail: _Tail
-) -> tuple[float, float]:
+def _live_stats(state_dir: str, tail: _Tail) -> tuple[float, float]:
     """Exact (N, avgdl) over the LWW-current corpus, without an
     O(corpus) pass: last snapshot totals, minus the fold-live
     contribution of tail-touched docs, plus the tail winners'
     contribution. All arithmetic on integer triplets; the final
-    division is the batch op's one IEEE divide. Below the cap the tail
-    part is summed on the driver and the rest is one aggregate."""
-    parts = []
-    total = (0, 0, 0)
-    if tail.rows is None:
-        parts.append(_contrib(tail.frame, 1))
+    division is the batch op's one IEEE divide. Below the cap every
+    part is read on the driver (the fold side through a point lookup
+    of the tail's docs in every docmeta batch <= the horizon, which
+    also covers a crash between the snapshot and the docmeta fold);
+    above it the two corrections are one Spark aggregate."""
+    parts = [_statsnap_totals(state_dir, tail.fold_id)]
+    if tail.rows is not None:
+        parts.append(_triplet(tail.rows))
+        if tail.fold_id >= 0:
+            touched = _ledger_read(
+                state_dir, lambda i: i <= tail.fold_id, docs=tail.rows
+            )
+            parts.append(tuple(-v for v in _triplet(_lww_rows(touched))))
     else:
-        dls = [r["dl"] for r in tail.rows if not r["deleted"]]
-        kept = [d for d in dls if d is not None]
-        total = (len(dls), len(kept), sum(kept))
-    if tail.fold_id >= 0:
-        parts.append(
-            spark.read.schema(_STATSNAP_SCHEMA)
-            .parquet(f"{state_dir}/statsnap/batch_id={tail.fold_id}")
-            .select(*_TRIPLET)
-        )
-        touched = _fold_touched(tail)
-        if touched is not None:
-            parts.append(_contrib(touched, -1))
-    if parts:
-        r = reduce(DataFrame.unionByName, parts).agg(
+        diff = _contrib(tail.frame, 1)
+        if tail.fold_id >= 0:
+            diff = diff.unionByName(_contrib(_fold_touched(tail), -1))
+        r = diff.agg(
             *[F.coalesce(F.sum(c), F.lit(0)).alias(c) for c in _TRIPLET]
         ).collect()[0]
-        total = tuple(t + r[c] for t, c in zip(total, _TRIPLET))
-    n_docs, n_len, sum_dl = total
+        parts.append(tuple(r[c] for c in _TRIPLET))
+    n_docs, n_len, sum_dl = (sum(p) for p in zip(*parts))
     n = float(n_docs)
     avgdl = float(sum_dl) / float(n_len) if n_len else float("nan")
     return n, avgdl
@@ -607,7 +594,7 @@ def _serve_workload(
     tp-pruned + term-IN-pushed postings read, tail visibility mask,
     and the batch op's scoring expressions verbatim over the request's
     (query_id, term) pairs."""
-    n, avgdl = _live_stats(spark, state_dir, tail)
+    n, avgdl = _live_stats(state_dir, tail)
     queries = _local_frame(
         spark,
         query_id=pa.array([q for q, _ in pairs], pa.int64()),

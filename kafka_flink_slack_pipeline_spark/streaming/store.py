@@ -21,7 +21,10 @@ nondecreasing, distinct ts; a fold repairs violations globally.
   - Read time: rows are masked against the UNCOMPACTED TAIL only, the
     docmeta batches newer than the fold horizon (_tail_live,
     _mask_visible). The tail is bounded by the fold cadence, so the
-    mask stays broadcast-sized whatever the corpus size.
+    mask stays broadcast-sized whatever the corpus size. Up to
+    _LOOKUP_CAP ledger rows, a serve reads the tail and its fold-side
+    point lookup on the driver (_ledger_read, _lww_rows) and runs no
+    Spark job for them; the store is driver-local (_assert_local_dir).
   - Fold time: data stores drop non-live rows physically
     (_compact_lww_stores), the per-dp stats snapshot is written, and
     docmeta folds to one winner row per doc with tombstones retained
@@ -64,12 +67,16 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from bisect import bisect_left
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from functools import partial, reduce
 from operator import and_, or_
 from typing import NamedTuple
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
@@ -85,13 +92,14 @@ _TERM_PREFIXES = _env_width("SPARK_GRAFT_TERM_PREFIXES") or 16
 _DOC_PREFIXES = _env_width("SPARK_GRAFT_DOC_PREFIXES") or 8
 _LAYOUT_FILE = "store_layout.json"
 _COMPACT_TMP_PREFIX = "_compact_tmp."
-# Ledger point-lookup cap. Up to this many docs, a lookup (the serve
-# tail, the funnel's winner-h check) is collected to the driver and
-# pushed into the doc_id-sorted folded ledger as dp and doc_id IN
-# literals: row-group skipping, cost O(docs) whatever the fold size.
-# Above it, a dp-pruned scan plus a semi-join. Long literal lists cost
-# driver planning time, which this cap bounds; the fallback's scan
-# grows with the folded corpus instead.
+# Ledger point-lookup cap: it bounds what a lookup holds in driver
+# memory. A serve whose tail holds at most this many ledger rows (parquet
+# footer counts) reads the tail and the fold-side rows of its docs on the
+# driver, with row-group skipping in the doc_id-sorted folded ledger:
+# cost O(docs) whatever the fold size. The funnel's winner-h check
+# collects up to this many docs and pushes them into Spark as dp and
+# doc_id IN literals, whose planning time the cap bounds. Above it, a
+# dp-pruned scan plus a semi-join, which grows with the folded corpus.
 _LOOKUP_CAP = 8192
 # Declared schemas: a read that names its schema runs no parquet
 # footer-inference job. Partition columns keep the types Spark infers
@@ -100,7 +108,6 @@ _DOCMETA_SCHEMA = (
     "doc_id bigint, ts timestamp, deleted boolean, dl bigint, dp int, "
     "batch_id int"
 )
-_STATSNAP_SCHEMA = "dp bigint, n_docs bigint, n_len bigint, sum_dl bigint"
 
 
 def _cols(schema: str) -> list[str]:
@@ -263,12 +270,9 @@ def _run_concurrently(spark: SparkSession, *thunks) -> list:
     return [f.result() for f in futures]
 
 
-def _read_store(
-    spark: SparkSession, store_dir: str, what: str, schema: str | None = None
-):
-    """Guarded store read: loud on remote URIs, when nothing has
-    landed, and on interrupted-compaction leftovers. `schema` (a
-    declared store schema) spares the read its footer-inference job."""
+def _assert_landed(store_dir: str, what: str) -> None:
+    """The guards of every store read: loud on remote URIs, when
+    nothing has landed, and on interrupted-compaction leftovers."""
     _assert_local_dir(store_dir, what)
     if not os.path.isdir(store_dir):
         raise ValueError(
@@ -276,6 +280,14 @@ def _read_store(
             "(run the store's stream first)"
         )
     _assert_no_compact_leftover(store_dir)
+
+
+def _read_store(
+    spark: SparkSession, store_dir: str, what: str, schema: str | None = None
+):
+    """Guarded store read (_assert_landed). `schema` (a declared store
+    schema) spares the read its footer-inference job."""
+    _assert_landed(store_dir, what)
     reader = spark.read.option("basePath", store_dir)
     if schema is not None:
         reader = reader.schema(schema)
@@ -410,7 +422,10 @@ def _compact_batch_store(
     if partition_cols:
         folded = folded.repartition(*partition_cols)
     if sort_by is not None:
-        folded = folded.sortWithinPartitions(sort_by)
+        # led by the partition columns: a partitioned write sorts by
+        # them unless its input already is, and that sort drops any
+        # order it does not start with
+        folded = folded.sortWithinPartitions(*partition_cols, sort_by)
     folded.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
     for i in olds:
         shutil.rmtree(os.path.join(store_dir, f"batch_id={i}"))
@@ -432,11 +447,106 @@ def _lww(docmeta: DataFrame) -> DataFrame:
     )
 
 
+def _lww_key(row: dict) -> tuple:
+    """_lww's order on a driver row: (ts_us, deleted, dl), null lowest."""
+    return tuple(
+        (row[c] is not None, row[c]) for c in ("ts_us", "deleted", "dl")
+    )
+
+
+def _lww_rows(rows: list[dict]) -> list[dict]:
+    """_lww on the driver: one winner row per doc_id among ledger rows
+    (_ledger_read), by the same order."""
+    best: dict = {}
+    for r in rows:
+        w = best.get(r["doc_id"])
+        if w is None or _lww_key(r) > _lww_key(w):
+            best[r["doc_id"]] = r
+    return list(best.values())
+
+
+_LEDGER_COLS = ["doc_id", "ts", "deleted", "dl"]
+
+
+def _data_files(path: str) -> list[str]:
+    """The data files of one store directory, as Spark's file index
+    sees them: names starting with '_' or '.' are metadata."""
+    return [
+        os.path.join(path, e)
+        for e in sorted(os.listdir(path))
+        if not e.startswith(("_", "."))
+    ]
+
+
+def _ledger_read(
+    state_dir: str, batches, cap: int | None = None, docs: list | None = None
+) -> list[dict] | None:
+    """The docmeta ledger rows of the batches whose id satisfies the
+    predicate `batches`, read on the driver as dicts (doc_id, ts_us,
+    deleted, dl, dp), ts as epoch microseconds, dp from the directory.
+
+    With `cap`: None, before any row is read, when the files' parquet
+    footers count more than `cap` rows. With `docs` (rows carrying
+    doc_id and dp): only the docs' dp directories and, in them, only
+    the row groups whose doc_id min/max covers one of the docs, cut to
+    those docs; in the doc_id-sorted fold that is about one row group
+    per doc, whatever the corpus size."""
+    dm_dir = f"{state_dir}/docmeta"
+    _assert_landed(dm_dir, "docmeta store dir")
+    dps = None if docs is None else {f"dp={r['dp']}" for r in docs}
+    files = []
+    for i in _batch_ids(dm_dir):
+        if not batches(i):
+            continue
+        for d in _data_files(os.path.join(dm_dir, f"batch_id={i}")):
+            name = os.path.basename(d)
+            if dps is None or name in dps:
+                dp = int(name.split("=", 1)[1])
+                files += [(dp, f) for f in _data_files(d)]
+    if cap is not None:
+        # footers only, one file open at a time, stopping at the cap
+        n = 0
+        for _, f in files:
+            n += pq.read_metadata(f).num_rows
+            if n > cap:
+                return None
+    ids = None if docs is None else sorted({r["doc_id"] for r in docs})
+    rows = []
+    for dp, path in files:
+        with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as f:
+            if ids is None:
+                t = f.read(columns=_LEDGER_COLS)
+            else:
+                groups = _covering(f, ids)
+                t = f.read_row_groups(groups, columns=_LEDGER_COLS)
+                t = t.filter(pc.is_in(t["doc_id"], value_set=pa.array(ids)))
+        us = pa.timestamp("us", t["ts"].type.tz)
+        t = t.set_column(1, "ts_us", t["ts"].cast(us).cast(pa.int64()))
+        rows += [dict(r, dp=dp) for r in t.to_pylist()]
+    return rows
+
+
+def _covering(f: pq.ParquetFile, ids: list[int]) -> list[int]:
+    """The row groups of `f` whose doc_id min/max covers one of the
+    sorted `ids`; a row group without statistics is read."""
+    col = f.schema_arrow.get_field_index("doc_id")
+    hit = []
+    for g in range(f.metadata.num_row_groups):
+        st = f.metadata.row_group(g).column(col).statistics
+        if st is None or not st.has_min_max:
+            hit.append(g)
+            continue
+        k = bisect_left(ids, st.min)
+        if k < len(ids) and ids[k] <= st.max:
+            hit.append(g)
+    return hit
+
+
 def _point_lookup(ledger: DataFrame, docs: list) -> DataFrame:
     """The dp-partitioned `ledger` cut to `docs` (rows carrying doc_id
     and dp): the dp literals prune directories, the doc_id literals
     skip row groups of the doc_id-sorted fold. Callers keep `docs`
-    bounded (the serve tail and the funnel's lookup by _LOOKUP_CAP)."""
+    bounded (the funnel's lookup by _LOOKUP_CAP)."""
     dps = sorted({r["dp"] for r in docs})
     ids = sorted({r["doc_id"] for r in docs})
     return ledger.filter(F.col("dp").isin(dps)).filter(
@@ -580,6 +690,18 @@ def _write_statsnap(
     os.rename(tmp, os.path.join(snap_dir, f"batch_id={upto - 1}"))
     for i in olds:
         shutil.rmtree(os.path.join(snap_dir, f"batch_id={i}"))
+
+
+def _statsnap_totals(state_dir: str, fold_id: int) -> tuple[int, int, int]:
+    """(n_docs, n_len, sum_dl) of the stats snapshot at `fold_id`
+    (_fold_horizon), summed on the driver over its _DOC_PREFIXES rows;
+    zeros before the first fold."""
+    if fold_id < 0:
+        return 0, 0, 0
+    snap = f"{state_dir}/statsnap/batch_id={fold_id}"
+    cols = ["n_docs", "n_len", "sum_dl"]
+    parts = [pq.read_table(f, columns=cols) for f in _data_files(snap)]
+    return tuple(sum(pc.sum(t[c]).as_py() or 0 for t in parts) for c in cols)
 
 
 def _fold_ledger(

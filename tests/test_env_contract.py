@@ -116,3 +116,16 @@ def test_layout_manifest_truncated_names_repair(tmp_path):
     (state / store._LAYOUT_FILE).write_text('{"term_prefixes": 1')
     with pytest.raises(ValueError, match="manifest .* is unreadable"):
         store._assert_layout(str(state))
+
+
+def test_default_master_fits_the_host(monkeypatch):
+    # unset: one thread per CPU the process may run on, never a fixed
+    # width wider than the host
+    from kafka_flink_slack_pipeline_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session.default_master() == (
+        f"local[{len(os.sched_getaffinity(0))}]"
+    )
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.default_master() == "local[3]"
