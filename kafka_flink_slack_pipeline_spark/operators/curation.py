@@ -31,7 +31,7 @@ funnel the whole corpus through one task.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -1440,13 +1440,12 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one corpus branch: explode, broadcast-filter to query terms, ONE
     # pinned-width exchange by term that serves BOTH the tf aggregation
     # (hashpartitioning(term) satisfies the (doc, dl, term) clustering —
-    # subset rule) and the df count window; df comes from a window over
-    # this SAME small frame (one row per (doc, term)), not a second
-    # corpus pass. r14: previously the tf groupBy and the df window each
-    # took their own exchange, AQE coalesced both to ONE partition
-    # (1.26 MB shuffle — but ~10^6-row CPU work), and the whole scoring
-    # pipeline ran single-task (measured 1.3 s of a 2.1 s query).
-    matched = (
+    # subset rule) and the kernel's df window, which runs over this SAME
+    # small frame (one row per (doc, term)), not a second corpus pass.
+    # Left to AQE, the tf groupBy and the df window each took their own
+    # exchange, both coalesced to ONE partition, and the whole scoring
+    # pipeline ran single-task.
+    postings = (
         spread(
             toked_wide.select(
                 "doc_id",
@@ -1457,47 +1456,69 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "dl", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        .withColumn(
-            "df",
-            F.count(F.lit(1)).over(Window.partitionBy("term")).cast("double"),
-        )
     )
     # corpus-level constants in ONE narrow agg scan (no explode)
     stats = d.select(F.size(F.filter(tokens_col(), lambda t: t != "")).alias("l")).agg(
         F.count(F.lit(1)).cast("double").alias("n"),
         F.avg(F.col("l").cast("double")).alias("avgdl"),
     )
-    idf = (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    tf_norm = (F.col("tf") * (_BM25_K1 + 1)) / (
-        F.col("tf")
-        + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avgdl"))
+    return bm25_topk(
+        postings, queries, F.col("n"), F.col("avgdl"), stats
+    ).orderBy("query_id", "rank")
+
+
+def bm25_topk(
+    postings: DataFrame,
+    queries: DataFrame,
+    n: Column,
+    avgdl: Column,
+    stats: DataFrame | None = None,
+) -> DataFrame:
+    """The BM25 top-k kernel, shared by bm25_keyword_search and the
+    index's serve path (streaming/retrieval_index.py): the df window,
+    the rational idf, the saturated tf, the per-(doc, term) score, its
+    (query, doc) sum and the (score DESC, doc_id) rank filter to
+    _BM25_TOPK.
+
+    `postings` holds (doc_id, dl, term, tf) as doubles, hash-clustered
+    by term, so the df window reuses that exchange; `queries` is the
+    bounded (query_id, term) workload, broadcast into the fan-out join.
+    `n` and `avgdl` are the corpus constants as Columns: literals, or
+    columns of `stats`, a one-row frame broadcast-joined after the df
+    window. Returns (query_id, rank, doc_id, score, n_matched_terms) in
+    no order; each caller orders it."""
+    matched = postings.withColumn(
+        "df",
+        F.count(F.lit(1)).over(Window.partitionBy("term")).cast("double"),
     )
-    # r14: the per-(doc, term) score is computed ONCE before the query
-    # fan-out join (it does not depend on query_id), so the fanned rows
-    # carry a ready value instead of re-evaluating the whole BM25
-    # expression per (query, doc, term).
-    # r15: the fanned rows now carry the score's UNSCALED LONG at 1e9
-    # instead of a decimal(25,12), so the ~2.5M-row aggregation is a
-    # codegen long sum, not BigDecimal adds (the measured floor of the
-    # whole retrieval family). Bit-safety: round(x, 9) yields a double
-    # whose shortest decimal repr has <= 9 fractional digits (the
-    # 9-digit value it rounded to maps back to the same double at these
-    # magnitudes), so cast to decimal(25,9) is exact and equals the old
-    # decimal(25,12) value; x1e9 -> long is that exact unscaled integer.
-    # The group sum is <= 3 terms x idf_max*2.2*1e9 — idf_max ~ corpus
-    # size N, so the long sum is overflow-safe up to N ~ 1e9 docs (vs
-    # long max 9.2e18); the back-conversion divides by 1e9 in decimal
-    # (result scale 18 >= 9: exact) and casts to double, which is the
-    # nearest double of the same exact sum the decimal path produced —
-    # bit-identical through round(.., 6). Verified: 0 mismatches over
-    # 200k random + boundary-tie values, and all 5 retrieval oracles.
+    if stats is not None:
+        matched = matched.crossJoin(F.broadcast(stats))
+    idf = (n - F.col("df") + 0.5) / (F.col("df") + 0.5)
+    tf_norm = (F.col("tf") * (_BM25_K1 + 1)) / (
+        F.col("tf") + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / avgdl)
+    )
+    # The per-(doc, term) score is computed ONCE before the query
+    # fan-out join (it does not depend on query_id), and the fanned rows
+    # carry its UNSCALED LONG at 1e9, so the fan-out aggregation is a
+    # codegen long sum, not BigDecimal adds. Bit-safety: round(x, 9)
+    # yields a double whose shortest decimal repr has <= 9 fractional
+    # digits (the 9-digit value it rounded to maps back to the same
+    # double at these magnitudes), so cast to decimal(25,9) is exact and
+    # equals the oracle's decimal(25,12) value; x1e9 -> long is that
+    # exact unscaled integer. The group sum is <= 3 terms x
+    # idf_max*2.2*1e9 — idf_max ~ corpus size N, so the long sum is
+    # overflow-safe up to N ~ 1e9 docs (vs long max 9.2e18); the
+    # back-conversion divides by 1e9 in decimal (result scale 18 >= 9:
+    # exact) and casts to double, which is the nearest double of the
+    # same exact sum the decimal path produces — bit-identical through
+    # round(.., 6). Verified: 0 mismatches over 200k random +
+    # boundary-tie values, and all 5 retrieval oracles.
     scale9 = F.lit(1000000000).cast("decimal(10,0)")
     term_score_u = (
         F.round(idf * tf_norm, 9).cast("decimal(25,9)") * scale9
     ).cast("long")
     scored = (
-        matched.crossJoin(F.broadcast(stats))
-        .withColumn("ts_u", term_score_u)
+        matched.withColumn("ts_u", term_score_u)
         .join(F.broadcast(queries), "term")
         .groupBy("query_id", "doc_id")
         .agg(
@@ -1515,7 +1536,6 @@ def bm25_keyword_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _BM25_TOPK)
         .select("query_id", "rank", "doc_id", "score", "n_matched_terms")
-        .orderBy("query_id", "rank")
     )
 
 

@@ -576,54 +576,35 @@ def _centroid_sims(model: list[tuple[int, list[float]]], emb_col, norm_col):
     return F.array(*out)
 
 
-def _assign_cid(model: list[tuple[int, list[float]]], sims_col):
-    """Nearest-centroid id from the projected sims array: first position
-    of the max (ties -> lowest cid, since the array is cid-ordered)."""
+def ivf_assign(vecs: DataFrame, model: list[tuple[int, list[float]]]) -> DataFrame:
+    """`vecs` plus `cid`, the nearest centroid of its `emb` vector under
+    `model`: the first position of the max of the projected cosine
+    array (_centroid_sims), so ties go to the lowest cid. The one
+    assignment kernel of the IVF index, SemDeDup and the hybrid and
+    semantic stores."""
+    keep = vecs.columns
     cids = F.array(*[F.lit(int(cid)) for cid, _ in model])
-    return F.element_at(
-        cids, F.array_position(sims_col, F.array_max(sims_col)).cast("int")
+    sims = F.col("csims")
+    return (
+        vecs.select(*keep, norm(F.col("emb")).alias("nrm"))
+        .select(*keep, _centroid_sims(model, F.col("emb"), F.col("nrm")).alias("csims"))
+        .select(
+            *keep,
+            F.element_at(
+                cids, F.array_position(sims, F.array_max(sims)).cast("int")
+            ).alias("cid"),
+        )
     )
 
 
-def _ivf_index(
-    spark: SparkSession,
-    sf_dir: str,
-    nprobe: int = IVF_NPROBE,
-    query_pred=None,
-    model: list[tuple[int, list[float]]] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(candidates, probes) shared by the IVF and IVF-PQ searchers:
-    inverted lists keyed by nearest centroid, and each query's NPROBE
-    nearest lists. `query_pred` overrides the default vec_id < 10 query
-    workload (hybrid_search_rrf_ivf passes the BM25 seed rule so the
-    fused retrievers share one information need per query). `model`
-    overrides the corpus-trained codebook — the retrain comparator:
-    streaming/hybrid_index's retrain test pins store-serving parity
-    under a codebook that is NOT this corpus's label centroids.
-
-    r4 rewrite: the codebook is collected once as model state and enters
-    the plan as literals. Assignment becomes argmax over a PROJECTED
-    per-centroid cosine array — no BroadcastNestedLoopJoin, no k-times
-    row amplification, and no vec_id window shuffle (the r3 form
-    shuffled every (vector, centroid) pair through a row_number window);
-    the probe branch ranks the same array with array_sort on
-    (-csim, cid) structs, so tie-breaks match the old window exactly."""
-    emb = _emb(spark, sf_dir)
-    if model is None:
-        model = _centroid_model(spark, sf_dir)
-    sims = _centroid_sims(model, F.col("emb"), F.col("nrm"))
-    # r14: the per-vector k-centroid cosine array is the compute-dense
-    # head of the candidate side — spread it off the single-task scan
-    # (the probes branch keeps reading the scan directly so its
-    # query_pred still pushes down).
-    cand = spread(emb, "vec_id").select(
-        "vec_id", "emb", norm(F.col("emb")).alias("nrm")
-    ).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"),
-        sims.alias("csims"),
-    ).select(
-        "neighbor_id", "ne", _assign_cid(model, F.col("csims")).alias("cid")
-    )
+def ivf_probes(
+    queries: DataFrame, model: list[tuple[int, list[float]]], nprobe: int
+) -> DataFrame:
+    """(query_id, qe) -> one (query_id, qe, cid) row for each of the
+    query's `nprobe` nearest centroids: array_sort on (-csim, cid)
+    structs, so ties go to the lowest cid, as in assignment. Shared by
+    the IVF searchers, the hybrid store's serve path and its probe
+    tool."""
     ranked = F.slice(
         F.array_sort(
             F.zip_with(
@@ -635,20 +616,74 @@ def _ivf_index(
         1,
         nprobe,
     )
-    probes = (
-        emb.filter(
-            F.col("vec_id") < 10 if query_pred is None else query_pred
-        )
-        .select("vec_id", "emb", norm(F.col("emb")).alias("nrm"))
+    return (
+        queries.select("query_id", "qe", norm(F.col("qe")).alias("nrm"))
         .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("emb").alias("qe"),
-            sims.alias("csims"),
+            "query_id",
+            "qe",
+            _centroid_sims(model, F.col("qe"), F.col("nrm")).alias("csims"),
         )
-        .select(
-            "query_id", "qe", F.explode(ranked).alias("probe")
-        )
+        .select("query_id", "qe", F.explode(ranked).alias("probe"))
         .select("query_id", "qe", F.col("probe.cid").alias("cid"))
+    )
+
+
+def ivf_rerank(cand: DataFrame, probes: DataFrame, topk: int) -> DataFrame:
+    """Exact re-rank inside the probed lists: candidates (neighbor_id,
+    ne, cid) join the broadcast probes (query_id, qe, cid) on cid, a
+    query's own vector is dropped, and the first `topk` by (sim DESC,
+    neighbor_id) are kept per query, as (query_id, neighbor_id, rank,
+    sim) with sim unrounded. Shared by _ivf_topk and the hybrid
+    store's serve path."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
+    return (
+        cand.join(F.broadcast(probes), "cid")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("sim", cosine(F.col("qe"), F.col("ne")))
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= topk)
+        .select("query_id", "neighbor_id", "rank", "sim")
+    )
+
+
+def _ivf_index(
+    spark: SparkSession,
+    sf_dir: str,
+    nprobe: int = IVF_NPROBE,
+    query_pred=None,
+    model: list[tuple[int, list[float]]] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(candidates, probes) shared by the IVF and IVF-PQ searchers:
+    inverted lists keyed by nearest centroid (ivf_assign), and each
+    query's NPROBE nearest lists (ivf_probes). `query_pred` overrides
+    the default vec_id < 10 query workload (hybrid_search_rrf_ivf passes
+    the BM25 seed rule so the fused retrievers share one information
+    need per query). `model` overrides the corpus-trained codebook — the
+    retrain comparator: streaming/hybrid_index's retrain test pins
+    store-serving parity under a codebook that is NOT this corpus's
+    label centroids.
+
+    The codebook is collected once as model state and enters the plan
+    as literals: assignment is an argmax over a PROJECTED per-centroid
+    cosine array and probing ranks the same array — no
+    BroadcastNestedLoopJoin, no k-times row amplification, no vec_id
+    window shuffle."""
+    emb = _emb(spark, sf_dir)
+    if model is None:
+        model = _centroid_model(spark, sf_dir)
+    # the per-vector k-centroid cosine array is the compute-dense head
+    # of the candidate side — spread it off the single-task scan (the
+    # probes branch keeps reading the scan directly so its query_pred
+    # still pushes down)
+    cand = ivf_assign(
+        spread(emb, "vec_id").select(F.col("vec_id").alias("neighbor_id"), "emb"),
+        model,
+    ).withColumnRenamed("emb", "ne")
+    probes = ivf_probes(
+        emb.filter(F.col("vec_id") < 10 if query_pred is None else query_pred)
+        .select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")),
+        model,
+        nprobe,
     )
     return cand, probes
 
@@ -674,15 +709,8 @@ def _ivf_topk(
     cand, probes = _ivf_index(
         spark, sf_dir, nprobe, query_pred=query_pred, model=model
     )
-    rescored = (
-        cand.join(F.broadcast(probes), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", cosine(F.col("qe"), F.col("ne")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
+        ivf_rerank(cand, probes, topk)
         .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
         .orderBy("query_id", "rank")
     )
@@ -1348,10 +1376,8 @@ ORDER BY radius
 # (production shrinks it with more clusters, k ~ sqrt(n)). Zero organic
 # vectors are dropped.
 #
-# Assignment is a broadcast join against the tiny centroid table followed
-# by ONE partial-aggregating groupBy (max over a (csim, -cid) struct ==
-# highest similarity, ties to lowest cid) — n*k rows combine map-side to n,
-# cheaper than the window-rank form cosine_topk_ivf uses on its query side.
+# Assignment is the IVF index's own kernel (ivf_assign): a narrow argmax
+# over literal centroids, highest similarity first, ties to lowest cid.
 
 
 def semantic_dedup(
@@ -1375,22 +1401,31 @@ def _semantic_verdicts_over(
     corpus and codebook — factored so the streaming face's
     update/delete parity test can run the IDENTICAL batch semantics
     over the LWW-current corpus (streaming/semantic_dedup.py)."""
-    # r4: centroids enter as literal model state (see _centroid_model) —
-    # assignment is a narrow argmax map over a projected per-centroid
-    # cosine array instead of a BroadcastNestedLoopJoin + k-times row
-    # amplification + groupBy(vec_id) shuffle. Tie rule unchanged
-    # (highest csim, ties to lowest cid).
-    assigned = corpus.select(
-        "vec_id", "emb", norm(F.col("emb")).alias("nrm")
-    ).select(
-        "vec_id",
-        "emb",
-        _centroid_sims(model, F.col("emb"), F.col("nrm")).alias("csims"),
-    ).select("vec_id", _assign_cid(model, F.col("csims")).alias("cid"), "emb")
+    # centroids enter as literal model state (see _centroid_model):
+    # assignment is a narrow argmax map (ivf_assign), with the highest
+    # csim winning and ties going to the lowest cid
+    assigned = ivf_assign(corpus.select("vec_id", "emb"), model)
+    return semantic_verdicts(assigned, assigned, threshold).orderBy("vec_id")
+
+
+def semantic_verdicts(
+    hist: DataFrame, arrivals: DataFrame, threshold: float
+) -> DataFrame:
+    """Keep-first verdicts for `arrivals` judged against `hist` (both
+    (vec_id, emb, cid[, ts]) frames): lower-id same-cluster pairs at
+    cosine >= threshold. The one SemDeDup verdict kernel, four faces:
+    the batch op (hist = arrivals = the assigned corpus), the stream
+    stage (hist = masked store ∪ batch, arrivals = batch), the retrain's
+    re-judgment (hist = arrivals = the folded store), and the ad-hoc
+    probe (hist = masked store, arrivals = offset-id probes), all in
+    streaming/semantic_dedup.py."""
     pairs = (
-        assigned.alias("a")
-        .join(assigned.alias("b"), "cid")
-        .filter(F.col("a.vec_id") < F.col("b.vec_id"))
+        hist.alias("a")
+        .join(
+            arrivals.alias("b"),
+            (F.col("a.cid") == F.col("b.cid"))
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        )
         .withColumn("sim", cosine(F.col("a.emb"), F.col("b.emb")))
         .filter(F.col("sim") >= threshold)
         .select(F.col("b.vec_id").alias("vec_id"), "sim")
@@ -1398,16 +1433,13 @@ def _semantic_verdicts_over(
     stats = pairs.groupBy("vec_id").agg(
         F.count(F.lit(1)).alias("n_dups"), F.max("sim").alias("best_sim")
     )
-    return (
-        assigned.join(stats, "vec_id", "left")
-        .select(
-            "vec_id",
-            "cid",
-            F.col("n_dups").isNull().alias("keep"),
-            F.coalesce("n_dups", F.lit(0).cast("long")).alias("n_dups"),
-            F.round("best_sim", 6).alias("best_sim"),
-        )
-        .orderBy("vec_id")
+    return arrivals.join(stats, "vec_id", "left").select(
+        "vec_id",
+        "cid",
+        F.col("n_dups").isNull().alias("keep"),
+        F.coalesce("n_dups", F.lit(0).cast("long")).alias("n_dups"),
+        F.round("best_sim", 6).alias("best_sim"),
+        *(["ts"] if "ts" in arrivals.columns else []),
     )
 
 

@@ -230,7 +230,6 @@ from .store import (
     _committed_horizon,
     _compact_batch_store,
     _dp_col,
-    _fold_horizon,
     _fold_ledger,
     _id_horizon,
     _ledger_write,
@@ -518,7 +517,7 @@ def funnel_sigstore_pairs(spark: SparkSession, state_dir: str) -> DataFrame:
     store = _read_store(
         spark, f"{state_dir}/sigs", _SIGS.what, _SIGS.schema
     ).select(*_cols(_SIGS.schema))
-    tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
+    tail = _tail_live(spark, state_dir)
     live = _mask_visible(store, tail).select("doc_id", "sig", "band", "bkey")
     return _banded_sig_pairs(live).orderBy("doc_a", "doc_b")
 
@@ -537,7 +536,7 @@ def landed_documents_current(
     training job that consumed the raw directory instead of this
     reader would train on deleted documents."""
     landed = _read_store(spark, out_dir, "landed documents dir")
-    tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
+    tail = _tail_live(spark, state_dir)
     return _mask_visible(
         landed.withColumn("ts", F.col("ingest_ts")), tail
     ).drop("ts")
@@ -602,7 +601,7 @@ def funnel_neardup_probe_adhoc(
             .orderBy("probe_id")
         )
     store = _pruned_store(spark, sigs_dir, _SIGS, 1 << 62, touched)
-    tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
+    tail = _tail_live(spark, state_dir)
     cols = ["doc_id", "sig", "band", "bkey"]
     keys = bands.select("band", "bkey").distinct()
     hist = (
@@ -1029,9 +1028,7 @@ def curation_funnel_stream(
             if store is None:
                 all_touched = bands_batch.select(*cols)
             else:
-                tail = _tail_live(
-                    spark, state_dir, _fold_horizon(state_dir)
-                )
+                tail = _tail_live(spark, state_dir)
                 store = _mask_visible(store, tail)
                 all_touched = store.select(*cols).join(
                     F.broadcast(batch_keys), ["band", "bkey"], "semi"

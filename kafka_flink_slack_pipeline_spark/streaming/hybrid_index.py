@@ -44,9 +44,9 @@ hybrid_index_search then serves the landed horizon:
 bm25_index_search's lexical ranks, the IVF dense ranks (probes = the
 query's nprobe nearest centroids from the same fixed codebook,
 candidates read ONLY from the probed cid partitions, exact cosine
-re-rank inside them — the _ivf_topk expressions verbatim, including
-_centroid_sims' Python-side literal norms so tie-breaks are
-bit-identical), fused by the unit-tested rrf_fuse.
+re-rank inside them — the batch op's own kernels, ivf_probes and
+ivf_rerank, so tie-breaks are bit-identical), fused by the unit-tested
+rrf_fuse.
 
 PARITY CONTRACT (tests/test_streaming_hybrid.py, across a checkpoint
 restart, pre- and post-compaction, and across a retrain): once the
@@ -73,7 +73,6 @@ from functools import partial
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..operators.curation import (
     _BM25_EVERY,
@@ -83,10 +82,9 @@ from ..operators.curation import (
 )
 from ..operators.similarity import (
     IVF_NPROBE,
-    _assign_cid,
-    _centroid_sims,
-    cosine,
-    norm,
+    ivf_assign,
+    ivf_probes,
+    ivf_rerank,
 )
 from .retrieval_index import (
     _TEXT_STORES,
@@ -124,46 +122,6 @@ _DENSE_STORES = (
 )
 
 
-def _ranked_probe_cids(model, csims_col):
-    """The query's nprobe nearest centroids — _ivf_index's probe
-    expressions verbatim (array_sort on (-csim, cid) structs, so
-    tie-breaks match the batch op exactly)."""
-    return F.slice(
-        F.array_sort(
-            F.zip_with(
-                csims_col,
-                F.array(*[F.lit(int(cid)) for cid, _ in model]),
-                lambda s, c: F.struct((-s).alias("negsim"), c.alias("cid")),
-            )
-        ),
-        1,
-        IVF_NPROBE,
-    )
-
-
-def _assigned(vecs: DataFrame, codebook) -> DataFrame:
-    """(doc_id, emb, ts) -> + cid under the given codebook — the batch
-    op's exact assignment expressions (projected norm, literal-side
-    centroid norms, argmax with lowest-cid ties)."""
-    return (
-        vecs.select("doc_id", "emb", "ts", norm(F.col("emb")).alias("nrm"))
-        .select(
-            "doc_id",
-            "emb",
-            "ts",
-            _centroid_sims(codebook, F.col("emb"), F.col("nrm")).alias(
-                "csims"
-            ),
-        )
-        .select(
-            "doc_id",
-            "emb",
-            "ts",
-            _assign_cid(codebook, F.col("csims")).alias("cid"),
-        )
-    )
-
-
 def compact_hybrid_store(
     spark: SparkSession,
     state_dir: str,
@@ -192,8 +150,8 @@ def retrain_hybrid_vector_store(
 ) -> int:
     """Re-partition the ENTIRE landed vector store under a NEW coarse
     codebook: one crash-staged rewrite in which every LWW-surviving
-    vector's cid is recomputed with the new centroids (the batch
-    assignment expressions verbatim) and the store lands in the new
+    vector's cid is recomputed with the new centroids (ivf_assign, the
+    batch op's assignment kernel) and the store lands in the new
     cid layout. Covers the full store horizon by construction — a
     partial retrain would leave two layouts and mis-prune — and the
     rails' committed-horizon guard (pass checkpoint_dir) enforces that
@@ -214,7 +172,7 @@ def retrain_hybrid_vector_store(
         partition_cols=["cid"],
         what="hybrid vector store dir",
         checkpoint_dir=checkpoint_dir,
-        transform=lambda df: _assigned(
+        transform=lambda df: ivf_assign(
             df.join(alive, ["doc_id", "ts"]).select("doc_id", "emb", "ts"),
             codebook,
         ),
@@ -236,7 +194,7 @@ def _land_hybrid(
     (hybrid_index_served_lww) — stream/certificate parity by
     construction. All five writes run at the same time."""
     live = batch.filter(~F.coalesce(F.col("deleted"), F.lit(False)))
-    vecs = _assigned(
+    vecs = ivf_assign(
         live.filter(F.col("embedding").isNotNull()).select(
             "doc_id",
             F.col("embedding").alias("emb"),
@@ -400,24 +358,7 @@ def _fused_over(
     per query vector, candidates read only from the probed cid
     partitions, tail-masked, exact cosine re-rank, rrf_fuse with the
     given lexical ranks."""
-    probes = (
-        seeds.select("query_id", "qe", norm(F.col("qe")).alias("nrm"))
-        .select(
-            "query_id",
-            "qe",
-            _centroid_sims(codebook, F.col("qe"), F.col("nrm")).alias(
-                "csims"
-            ),
-        )
-        .select(
-            "query_id",
-            "qe",
-            F.explode(
-                _ranked_probe_cids(codebook, F.col("csims"))
-            ).alias("probe"),
-        )
-        .select("query_id", "qe", F.col("probe.cid").alias("cid"))
-    )
+    probes = ivf_probes(seeds, codebook, IVF_NPROBE)
     # bounded collect: <= |queries| * nprobe cid literals for the
     # directory-pruning predicate (the store-touch discipline)
     cids = [r["cid"] for r in probes.select("cid").distinct().collect()]
@@ -428,21 +369,9 @@ def _fused_over(
         F.col("emb").alias("ne"),
         "cid",
     )
-    rescored = (
-        cand.join(F.broadcast(probes), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", cosine(F.col("qe"), F.col("ne")))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    dense = (
-        rescored.withColumn("dense_rank", F.row_number().over(w))
-        .filter(F.col("dense_rank") <= _RRF_TOPK)
-        .select(
-            "query_id",
-            F.col("neighbor_id").alias("doc_id"),
-            "dense_rank",
-        )
+    dense = ivf_rerank(cand, probes, _RRF_TOPK).select(
+        "query_id",
+        F.col("neighbor_id").alias("doc_id"),
+        F.col("rank").alias("dense_rank"),
     )
     return rrf_fuse(lex, dense)

@@ -126,7 +126,6 @@ from .store import (
     _batch_ids,
     _cols,
     _compact_lww_stores,
-    _fold_horizon,
     _ledger_write,
     _mask_visible,
     _pruned_store,
@@ -476,9 +475,7 @@ def media_dedup_stream(
                 # live history only: mask superseded/tombstoned versions
                 # against the ledger tail (bounded by compaction
                 # cadence; includes THIS batch's just-landed tombstones)
-                tail = _tail_live(
-                    spark, state_dir, _fold_horizon(state_dir)
-                )
+                tail = _tail_live(spark, state_dir)
                 store = _mask_visible(store, tail, key="doc_id")
                 all_touched = store.select(*_STORE_COLS).join(
                     F.broadcast(batch_keys), _BUCKET_KEY, "semi"
@@ -608,7 +605,7 @@ def media_dedup_probe_adhoc(
             "best_coverage double",
         )
     store = _pruned_store(spark, fp_dir, _FINGERPRINTS, 1 << 62, touched)
-    tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
+    tail = _tail_live(spark, state_dir)
     hist = _mask_visible(store, tail, key="doc_id").select(*_STORE_COLS)
     sized = hist.withColumn(
         "bsize",
@@ -683,7 +680,7 @@ def media_dedup_stream_report(
     # LWW-current verdicts only: superseded versions' and tombstoned
     # docs' verdicts are masked against the ledger tail here and
     # physically dropped at compaction
-    tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
+    tail = _tail_live(spark, state_dir)
     return (
         _mask_visible(v, tail, key="doc_id")
         .select(

@@ -94,9 +94,9 @@ tail above _LOOKUP_CAP rows (a fold cadence far above the default)
 keeps the distributed path: the tail frame is recomputed at each use
 and the stats correction is a dp-pruned scan in one Spark aggregate.
 
-Scoring uses the batch op's expressions VERBATIM (one-IEEE-op rational
-idf, exact term-score sums, round 6, (score DESC, doc_id) top-k), so
-the PARITY CONTRACT holds exactly: search-over-the-store equals
+Scoring is curation.bm25_topk, the batch op's own kernel (one-IEEE-op
+rational idf, exact term-score sums, round 6, (score DESC, doc_id)
+top-k), so the PARITY CONTRACT holds exactly: search-over-the-store equals
 bm25_keyword_search over the LWW-current corpus (updated texts in,
 tombstoned docs out), across a checkpoint restart, pre- and
 post-compaction (tests/test_streaming_index.py). Unlike the dedup
@@ -139,15 +139,12 @@ from typing import NamedTuple
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..operators.curation import (
-    _BM25_B,
     _BM25_EVERY,
-    _BM25_K1,
     _BM25_MAX_QUERIES,
     _BM25_QSLICE,
-    _BM25_TOPK,
+    bm25_topk,
 )
 from ..operators.textops import tokens_col
 from ..tables import spread
@@ -253,9 +250,12 @@ def _land_text(
     )
     _run_concurrently(
         batch.sparkSession,
+        # sorted by the partition column first: partitionBy's write
+        # sorts each task by tp alone unless the rows already are, which
+        # would drop the term order the row-group skipping relies on
         partial(
             postings.repartition("tp")
-            .sortWithinPartitions("term")
+            .sortWithinPartitions("tp", "term")
             .write.mode("overwrite")
             .partitionBy("tp")
             .parquet,
@@ -289,6 +289,8 @@ def _serve_tail(spark: SparkSession, state_dir: str) -> _Tail:
     back as a local relation, with no Spark job; above it the frame
     stays the distributed LWW, recomputed at each use."""
     _assert_layout(state_dir)
+    # read once: the corpus statistics (_live_stats) must correct the
+    # snapshot at the same horizon this tail starts after
     fold_id = _fold_horizon(state_dir)
     rows = _ledger_read(state_dir, lambda i: i > fold_id, cap=_LOOKUP_CAP)
     if rows is None:
@@ -507,8 +509,8 @@ def bm25_index_search(
 ) -> DataFrame:
     """Serve the landed horizon: BM25 top-k for the stored seed queries
     (optionally a subset — the single-query serving path the pruning
-    exists for), with the batch op's scoring expressions verbatim and
-    the update/delete tail mask applied to seeds and candidates.
+    exists for), scored by the batch op's kernel (bm25_topk) with the
+    update/delete tail mask applied to seeds and candidates.
     Output schema == bm25_keyword_search's: (query_id, rank, doc_id,
     score, n_matched_terms)."""
     tail = _serve_tail(spark, state_dir)
@@ -592,7 +594,7 @@ def _serve_workload(
 ) -> DataFrame:
     """The shared serving stage: snapshot-corrected corpus constants,
     tp-pruned + term-IN-pushed postings read, tail visibility mask,
-    and the batch op's scoring expressions verbatim over the request's
+    and the batch op's scoring kernel (bm25_topk) over the request's
     (query_id, term) pairs."""
     n, avgdl = _live_stats(state_dir, tail)
     queries = _local_frame(
@@ -601,59 +603,18 @@ def _serve_workload(
         term=pa.array([t for _, t in pairs], pa.string()),
     )
     cand = _pruned_postings(spark, f"{state_dir}/postings", terms)
-    # ONE pinned-width exchange by term feeds the df window: left to
-    # AQE, the ~1 MB by-term shuffle coalesces to one partition while
-    # the query fan-out and aggregation behind it are ~1 s of CPU (the
-    # shape bm25_keyword_search pins the same way).
-    matched = (
-        spread(
-            _mask_visible(cand, tail.frame).select(
-                "doc_id",
-                F.col("dl").cast("double").alias("dl"),
-                "term",
-                F.col("tf").cast("double").alias("tf"),
-            ),
+    # ONE pinned-width exchange by term feeds the kernel's df window:
+    # left to AQE, the by-term shuffle coalesces to one partition while
+    # the query fan-out and aggregation behind it are the CPU-heavy part
+    # (the shape bm25_keyword_search pins the same way).
+    postings = spread(
+        _mask_visible(cand, tail.frame).select(
+            "doc_id",
+            F.col("dl").cast("double").alias("dl"),
             "term",
-        )
-        .withColumn(
-            "df",
-            F.count(F.lit(1))
-            .over(Window.partitionBy("term"))
-            .cast("double"),
-        )
-    )
-    idf = (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    tf_norm = (F.col("tf") * (_BM25_K1 + 1)) / (
-        F.col("tf")
-        + _BM25_K1 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.lit(avgdl))
-    )
-    # per-(doc, term) score computed BEFORE the query fan-out join (it
-    # does not depend on query_id). The fanned rows carry the
-    # score's unscaled long at 1e9 instead of a decimal(25,12), so the
-    # fan-out aggregation is a codegen long sum — exact, commutative,
-    # and bit-identical to the decimal path through round(.., 6); see
-    # the bit-safety argument at bm25_keyword_search (curation.py),
-    # which this serve path mirrors expression-for-expression.
-    scale9 = F.lit(1000000000).cast("decimal(10,0)")
-    term_score_u = (
-        F.round(idf * tf_norm, 9).cast("decimal(25,9)") * scale9
-    ).cast("long")
-    scored = (
-        matched.withColumn("ts_u", term_score_u)
-        .join(F.broadcast(queries), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.round(
-                (F.sum("ts_u").cast("decimal(29,9)") / scale9).cast(
-                    "double"
-                ),
-                6,
-            ).alias("score"),
-            F.count(F.lit(1)).alias("n_matched_terms"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
+            F.col("tf").cast("double").alias("tf"),
+        ),
+        "term",
     )
     # the result is at most _BM25_TOPK rows per query: one partition
     # sorted locally is the global order, without the range sort's
@@ -661,9 +622,7 @@ def _serve_workload(
     # runs the window stage as one task on the bench's served rows
     # (sf0.1), so merging into it adds no exchange and costs nothing.
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _BM25_TOPK)
-        .select("query_id", "rank", "doc_id", "score", "n_matched_terms")
+        bm25_topk(postings, queries, F.lit(n), F.lit(avgdl))
         .coalesce(1)
         .sortWithinPartitions("query_id", "rank")
     )

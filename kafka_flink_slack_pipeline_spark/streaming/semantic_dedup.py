@@ -10,8 +10,8 @@ arrive as JSONL drops; every micro-batch
        the REFERENCE SET for every later judgment and from the report;
     2. assigns each live arrival to its nearest coarse-quantizer
        centroid — a pure NARROW map against the O(k*d) driver-literal
-       model (the batch op's `_centroid_sims`/`_assign_cid` expressions
-       verbatim: no broadcast join, no shuffle, whole-stage codegen) —
+       model (ivf_assign, the batch op's assignment kernel: no broadcast
+       join, no shuffle, whole-stage codegen) —
        and lands the version-stamped assignment in a cid-PARTITIONED
        parquet vector store (batch_id-scoped overwrite — the
        idempotent-replay contract every store in this package uses);
@@ -75,10 +75,8 @@ from pyspark.sql import functions as F
 
 from ..operators.similarity import (
     NEARDUP_THRESHOLD,
-    _assign_cid,
-    _centroid_sims,
-    cosine,
-    norm,
+    ivf_assign,
+    semantic_verdicts,
 )
 from .store import (
     _LwwStore,
@@ -86,7 +84,6 @@ from .store import (
     _cols,
     _compact_batch_store,
     _compact_lww_stores,
-    _fold_horizon,
     _fold_ledger,
     _id_horizon,
     _ledger_write,
@@ -120,66 +117,6 @@ _VEC_COLS = _cols(_VECTORS.schema)
 _VERDICT_COLS = _cols(_VERDICTS.schema)
 
 
-def _assigned_of(
-    vecs: DataFrame, model: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """(vec_id, emb, ts) -> + cid under the given codebook — the batch
-    op's exact assignment expressions (projected norm, literal-side
-    centroid norms, argmax with lowest-cid ties), version stamp carried.
-    Shared by the stream's landing stage and the retrain's
-    reassignment fold."""
-    return (
-        vecs.select("vec_id", "emb", "ts", norm(F.col("emb")).alias("nrm"))
-        .select(
-            "vec_id",
-            "emb",
-            "ts",
-            _centroid_sims(model, F.col("emb"), F.col("nrm")).alias("csims"),
-        )
-        .select(
-            "vec_id",
-            _assign_cid(model, F.col("csims")).alias("cid"),
-            "emb",
-            "ts",
-        )
-    )
-
-
-def _verdict_rows(
-    hist: DataFrame, arrivals: DataFrame, threshold: float
-) -> DataFrame:
-    """Keep-first verdicts for `arrivals` judged against `hist` (both
-    (vec_id, emb, cid[, ts]) frames): lower-id same-cluster pairs at
-    cosine >= threshold — _semantic_verdicts_over's pair/stats
-    expressions verbatim (operators/similarity.py). ONE kernel, three
-    faces: the stream stage (hist = masked store ∪ batch, arrivals =
-    batch), the retrain's re-judgment (hist = arrivals = the folded
-    store), and the ad-hoc probe (hist = masked store, arrivals =
-    offset-id probes)."""
-    pairs = (
-        hist.alias("a")
-        .join(
-            arrivals.alias("b"),
-            (F.col("a.cid") == F.col("b.cid"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .withColumn("sim", cosine(F.col("a.emb"), F.col("b.emb")))
-        .filter(F.col("sim") >= threshold)
-        .select(F.col("b.vec_id").alias("vec_id"), "sim")
-    )
-    stats = pairs.groupBy("vec_id").agg(
-        F.count(F.lit(1)).alias("n_dups"), F.max("sim").alias("best_sim")
-    )
-    return arrivals.join(stats, "vec_id", "left").select(
-        "vec_id",
-        "cid",
-        F.col("n_dups").isNull().alias("keep"),
-        F.coalesce("n_dups", F.lit(0).cast("long")).alias("n_dups"),
-        F.round("best_sim", 6).alias("best_sim"),
-        *(["ts"] if "ts" in arrivals.columns else []),
-    )
-
-
 def retrain_semantic_store(
     spark: SparkSession,
     state_dir: str,
@@ -201,12 +138,12 @@ def retrain_semantic_store(
 
     Three crash-staged rewrites, in a fixed repairable order:
       1. vectors fold over the FULL horizon with cid reassigned under
-         the new model (_assigned_of — the batch expressions verbatim)
+         the new model (ivf_assign, the batch op's assignment kernel)
          and the global LWW mask applied (superseded/tombstoned
          versions physically dropped; a partial retrain would leave two
          layouts and mis-prune, so the horizon is computed, not passed);
       2. verdicts REPLACED by a fresh batch judgment of the folded live
-         vectors under the new model (_verdict_rows — after this the
+         vectors under the new model (semantic_verdicts — after this the
          report equals _semantic_verdicts_over on the LWW-current
          corpus under the new model by construction);
       3. ledger fold (winners, tombstones retained, snapshot marker).
@@ -234,7 +171,7 @@ def retrain_semantic_store(
         partition_cols=_VECTORS.partition_cols,
         what=_VECTORS.what,
         checkpoint_dir=checkpoint_dir,
-        transform=lambda df: _assigned_of(
+        transform=lambda df: ivf_assign(
             df.join(alive, ["vec_id", "ts"]).select("vec_id", "emb", "ts"),
             model,
         ),
@@ -246,7 +183,7 @@ def retrain_semantic_store(
     folded = _read_store(
         spark, vectors_dir, _VECTORS.what, _VECTORS.schema
     ).select(*_VEC_COLS)
-    fresh = _verdict_rows(folded, folded, threshold)
+    fresh = semantic_verdicts(folded, folded, threshold)
     removed += _compact_batch_store(
         spark,
         verdicts_dir,
@@ -335,7 +272,7 @@ def semantic_dedup_stream(
             state_dir,
             batch_id,
         )()
-        assigned = _assigned_of(
+        assigned = ivf_assign(
             batch.filter(~deleted).select(
                 "vec_id",
                 F.col("embedding").alias("emb"),
@@ -359,9 +296,7 @@ def semantic_dedup_stream(
                 # live history only: mask superseded/tombstoned versions
                 # against the ledger tail (bounded; includes THIS batch's
                 # just-landed tombstones)
-                tail = _tail_live(
-                    spark, state_dir, _fold_horizon(state_dir)
-                )
+                tail = _tail_live(spark, state_dir)
                 store = _mask_visible(store, tail, key="vec_id")
             hist = (
                 assigned.select("vec_id", "emb", "cid")
@@ -371,7 +306,7 @@ def semantic_dedup_stream(
                 )
             )
             (
-                _verdict_rows(hist, assigned, threshold)
+                semantic_verdicts(hist, assigned, threshold)
                 .write.mode("overwrite")
                 .parquet(f"{verdicts_dir}/batch_id={batch_id}")
             )
@@ -404,8 +339,8 @@ def semantic_dedup_probe_adhoc(
     store is laid out under), the store scan prunes to the probes' own
     cid partitions (bounded literal list), history is masked against
     the ledger tail (a tombstoned or superseded vector has stopped
-    being a reference), and the verdict kernel is the stream's own
-    _verdict_rows, shared VERBATIM. Every live landed vector plays the
+    being a reference), and the verdict kernel is semantic_verdicts,
+    the batch op's and the stream's. Every live landed vector plays the
     reference (lower-id) role regardless of the probe's id: probe ids
     are offset above the landed horizon internally (one bounded max()
     over the pruned masked slice — only same-cluster vectors can ever
@@ -422,7 +357,7 @@ def semantic_dedup_probe_adhoc(
         [(pid, [float(x) for x in probes[pid]]) for pid in ids],
         "probe_id bigint, emb array<double>",
     )
-    assigned = _assigned_of(
+    assigned = ivf_assign(
         pdf.select(
             F.col("probe_id").alias("vec_id"),
             "emb",
@@ -440,7 +375,7 @@ def semantic_dedup_probe_adhoc(
             f"no vector store under {state_dir!r}: nothing has landed "
             "yet (run semantic_dedup_stream first)"
         )
-    tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
+    tail = _tail_live(spark, state_dir)
     hist = _mask_visible(store, tail, key="vec_id").select(
         "vec_id", "emb", "cid"
     )
@@ -457,7 +392,7 @@ def semantic_dedup_probe_adhoc(
         .select("vec_id", "emb", "cid")
     )
     return (
-        _verdict_rows(hist, arrivals, threshold)
+        semantic_verdicts(hist, arrivals, threshold)
         .join(F.broadcast(idmap), "vec_id")
         .select("probe_id", "cid", "keep", "n_dups", "best_sim")
         .orderBy("probe_id")
@@ -475,7 +410,7 @@ def semantic_dedup_stream_report(
     v = _read_store(
         spark, f"{state_dir}/verdicts", _VERDICTS.what, _VERDICTS.schema
     ).select(*_VERDICT_COLS)
-    tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
+    tail = _tail_live(spark, state_dir)
     return (
         _mask_visible(v, tail, key="vec_id")
         .select("vec_id", "cid", "keep", "n_dups", "best_sim")

@@ -585,11 +585,12 @@ def _fold_horizon(state_dir: str) -> int:
     return max(_batch_ids(snap_dir), default=-1)
 
 
-def _tail_live(spark: SparkSession, state_dir: str, fold_id: int):
-    """LWW winners among docmeta batches NEWER than the last fold: the
-    read-time visibility mask. Everything older was masked physically
-    by the fold; before the first fold it is the global LWW (exact for
-    any arrival order)."""
+def _tail_live(spark: SparkSession, state_dir: str):
+    """LWW winners among docmeta batches NEWER than the last fold
+    (_fold_horizon, read here): the read-time visibility mask.
+    Everything older was masked physically by the fold; before the
+    first fold it is the global LWW (exact for any arrival order)."""
+    fold_id = _fold_horizon(state_dir)
     dm = _read_store(
         spark, f"{state_dir}/docmeta", "docmeta store dir", _DOCMETA_SCHEMA
     )

@@ -370,34 +370,35 @@ def test_hybrid_fold_crash_keeps_the_horizon(
     assert serve() == want
 
 
-def test_hybrid_update_delete_parity_postcompaction(spark, hybrid_lww_dirs):
+def test_hybrid_update_delete_parity_postcompaction(
+    spark, hybrid_lww_dirs, tmp_path
+):
     """compact_hybrid_store folds all six stores; superseded vectors
     are physically dropped (doc 7 keeps ONE version, in the cid its
-    NEW embedding assigns to); serving is unchanged."""
+    NEW embedding assigns to); serving is unchanged. Folds a copy of
+    the fixture's state and checkpoint, so later tests still see the
+    unfolded store with its tail."""
     from kafka_flink_slack_pipeline_spark.streaming.hybrid_index import (
         compact_hybrid_store,
     )
     from kafka_flink_slack_pipeline_spark.streaming.store import _read_store
 
     d = hybrid_lww_dirs
+    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    shutil.copytree(d["state"], state)
+    shutil.copytree(d["ckpt"], ckpt)
     before = [
         tuple(r)
-        for r in hybrid_index_search(
-            spark, d["state"], d["codebook"]
-        ).collect()
+        for r in hybrid_index_search(spark, state, d["codebook"]).collect()
     ]
-    compact_hybrid_store(spark, d["state"], upto=2, checkpoint_dir=d["ckpt"])
+    compact_hybrid_store(spark, state, upto=2, checkpoint_dir=ckpt)
     after = [
         tuple(r)
-        for r in hybrid_index_search(
-            spark, d["state"], d["codebook"]
-        ).collect()
+        for r in hybrid_index_search(spark, state, d["codebook"]).collect()
     ]
     assert after == before
 
-    vectors = _read_store(
-        spark, f"{d['state']}/vectors", "hybrid vector store dir"
-    )
+    vectors = _read_store(spark, f"{state}/vectors", "hybrid vector store dir")
     doc7 = vectors.filter(F.col("doc_id") == 7).select("ts", "cid").collect()
     assert len(doc7) == 1, "superseded vector not physically dropped"
     assert (
@@ -414,12 +415,15 @@ def test_hybrid_retrain_under_new_codebook(
     """retrain_hybrid_vector_store re-partitions the WHOLE store under
     a codebook trained elsewhere (here: the half-corpus centroids);
     serving under the new codebook equals the batch op given the same
-    model — and the store's layout is entirely the new one."""
+    model — and the store's layout is entirely the new one. Retrains
+    the fixture's unfolded store, tail included."""
+    from kafka_flink_slack_pipeline_spark.streaming import store
     from kafka_flink_slack_pipeline_spark.streaming.hybrid_index import (
         retrain_hybrid_vector_store,
     )
 
     d = hybrid_lww_dirs
+    assert store._fold_horizon(d["state"]) == -1, "fixture already folded"
     half = str(tmp_path / "half")
     os.makedirs(half)
     spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(

@@ -833,7 +833,13 @@ def test_land_computes_the_persisted_batch_once(spark, tmp_path):
     """The three concurrent writers of a land read the persisted
     micro-batch, not its source: every source row is computed exactly
     once (a counting UDF in the batch's lineage), as the stream runs
-    it (persist, land, unpersist)."""
+    it (persist, land, unpersist). The landed postings are term-sorted
+    within each tp file, the order the term IN predicate's row-group
+    skipping relies on."""
+    import glob
+
+    import pyarrow.parquet as pq
+
     seen = spark.sparkContext.accumulator(0)
 
     def count(doc_id):
@@ -857,6 +863,11 @@ def test_land_computes_the_persisted_batch_once(spark, tmp_path):
         spark, str(tmp_path / "state/docmeta"), "docmeta", _DOCMETA_SCHEMA
     )
     assert docmeta.count() == len(recs)
+    files = glob.glob(f"{tmp_path}/state/postings/batch_id=0/tp=*/*.parquet")
+    assert files
+    for f in files:
+        terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+        assert terms == sorted(terms), f"{f}: terms out of order {terms}"
 
 
 def test_driver_lww_matches_spark_lww(spark, tmp_path):

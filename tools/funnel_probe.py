@@ -100,7 +100,6 @@ from kafka_flink_slack_pipeline_spark.streaming.curation_funnel import (  # noqa
     landed_documents_current,
 )
 from kafka_flink_slack_pipeline_spark.streaming.store import (  # noqa: E402
-    _fold_horizon,
     _ledger_write,
     _mask_visible,
     _pruned_store,
@@ -215,7 +214,7 @@ def _neardup_count(
     INCLUDING the live update/delete tail mask (r12: the shipped judging
     path masks the store side against the ledger before pairing)."""
     sigs_dir = f"{state_dir}/sigs"
-    tail = _tail_live(spark, state_dir, _fold_horizon(state_dir))
+    tail = _tail_live(spark, state_dir)
     if pruned:
         touched = [
             (r["band"], r["bprefix"])

@@ -61,9 +61,10 @@ from pyspark.sql import functions as F  # noqa: E402
 import index_probe as ip  # noqa: E402  (shared lexical-face builders)
 
 from kafka_flink_slack_pipeline_spark.operators.similarity import (  # noqa: E402
+    IVF_NPROBE,
     _centroid_model,
-    _centroid_sims,
-    norm,
+    ivf_assign,
+    ivf_probes,
 )
 from kafka_flink_slack_pipeline_spark.session import get_spark  # noqa: E402
 from kafka_flink_slack_pipeline_spark.streaming import hybrid_index as hi  # noqa: E402
@@ -79,7 +80,7 @@ def _base_vectors(spark, corpus_dir, codebook):
         F.col("vec_id").alias("doc_id"),
         F.col("embedding").cast("array<double>").alias("emb"),
     )
-    return hi._assigned(
+    return ivf_assign(
         emb.withColumn(
             "ts", F.lit(ip._TS1).cast("timestamp")
         ).select("doc_id", "emb", "ts"),
@@ -100,25 +101,8 @@ def _probe_cids(spark, state_dir, codebook, qids):
     ).parquet(f"{state_dir}/vecseeds").filter(
         F.col("query_id").isin(qids)
     )
-    probes = (
-        seeds.select("query_id", "qe", norm(F.col("qe")).alias("nrm"))
-        .select(
-            "query_id",
-            "qe",
-            _centroid_sims(codebook, F.col("qe"), F.col("nrm")).alias(
-                "csims"
-            ),
-        )
-        .select(
-            F.explode(
-                hi._ranked_probe_cids(codebook, F.col("csims"))
-            ).alias("probe")
-        )
-        .select(F.col("probe.cid").alias("cid"))
-    )
-    return sorted(
-        {r["cid"] for r in probes.distinct().collect()}
-    )
+    probes = ivf_probes(seeds, codebook, IVF_NPROBE)
+    return sorted({r["cid"] for r in probes.select("cid").distinct().collect()})
 
 
 def _serve_flat(spark, state_dir, flat_vectors_dir, codebook, qids):
