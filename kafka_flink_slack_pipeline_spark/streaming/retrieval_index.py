@@ -84,15 +84,26 @@ parquet files (the store is driver-local):
     2. the corpus statistics: the snapshot totals, minus the fold-side
        contribution of the tail's docs (a point lookup that reads only
        their dp directories and the row groups whose doc_id range covers
-       one), plus the tail winners' own contribution.
+       one), plus the tail winners' own contribution;
+    3. the postings (_driver_postings): the query terms' tp directories
+       in every batch and, in them, the row groups whose term min/max
+       covers a query term, when their footers count at most
+       _POSTINGS_BUDGET rows. They are cut to the query terms and masked
+       against the tail winners on the driver (_visible_rows).
 
-The tail winners and the request's (query_id, term) pairs go to Spark
-as local relations built from Arrow tables: they run no job when used,
-and caller strings travel as data, never as SQL text. Every store read
-declares its schema, so no read runs a parquet footer-inference job. A
-tail above _LOOKUP_CAP rows (a fold cadence far above the default)
-keeps the distributed path: the tail frame is recomputed at each use
-and the stats correction is a dp-pruned scan in one Spark aggregate.
+The tail winners, the request's (query_id, term) pairs and the visible
+postings go to Spark as local relations built from Arrow tables: they
+run no job when used, and caller strings travel as data, never as SQL
+text. The postings relation is one partition, which satisfies every
+distribution the kernel asks for, so the scoring query plans no
+exchange and runs two jobs (the request frame's broadcast and the
+collect). Every store read declares its schema, so no read runs a
+parquet footer-inference job. Above _POSTINGS_BUDGET the postings are
+a pruned Spark scan (_pruned_postings), masked against the tail frame
+and spread by term; a tail above _LOOKUP_CAP rows (a fold cadence far
+above the default) keeps the distributed path for all three: the tail
+frame is recomputed at each use, the stats correction is a dp-pruned
+scan in one Spark aggregate, and the postings are the Spark scan.
 
 Scoring is curation.bm25_topk, the batch op's own kernel (one-IEEE-op
 rational idf, exact term-score sums, round 6, (score DESC, doc_id)
@@ -151,11 +162,14 @@ from ..tables import spread
 from .store import (
     _DOCMETA_SCHEMA,
     _LOOKUP_CAP,
+    _POSTINGS_BUDGET,
     _LwwStore,
     _assert_layout,
     _cols,
     _compact_lww_stores,
     _dp_col,
+    _driver_files,
+    _driver_read,
     _fold_horizon,
     _ledger_read,
     _ledger_write,
@@ -166,6 +180,7 @@ from .store import (
     _run_concurrently,
     _statsnap_totals,
     _tp_col,
+    _visible_rows,
 )
 
 INDEX_DROP_SCHEMA = (
@@ -180,6 +195,16 @@ _POSTING_SCHEMA = (
 )
 _SEED_SCHEMA = (
     "query_id bigint, term string, tp bigint, ts timestamp, batch_id int"
+)
+# _POSTING_SCHEMA's data columns as the driver reads them (_driver_read)
+_POSTING_ARROW = pa.schema(
+    [
+        ("term", pa.string()),
+        ("doc_id", pa.int64()),
+        ("tf", pa.int64()),
+        ("dl", pa.int64()),
+        ("ts_us", pa.int64()),
+    ]
 )
 
 
@@ -381,7 +406,10 @@ def _live_stats(state_dir: str, tail: _Tail) -> tuple[float, float]:
 
 
 _TEXT_STORES = (
-    _LwwStore("postings", _POSTING_SCHEMA, ["tp"], "postings index store dir"),
+    _LwwStore(
+        "postings", _POSTING_SCHEMA, ["tp"], "postings index store dir",
+        sort_by="term",
+    ),
     _LwwStore("seeds", _SEED_SCHEMA, [], "seed sidecar dir", "query_id"),
 )
 
@@ -403,11 +431,10 @@ def compact_retrieval_store(
     ledger. The postings and seeds folds run at the same time; the fold
     order is data stores -> stats snapshot -> docmeta
     (_compact_lww_stores says why). The folded postings hold one file
-    per tp directory. Term order within them follows the kernel's read
-    order and is NOT guaranteed sorted — the search face never relies
-    on sortedness for correctness (the IN predicate is exact either
-    way; sortedness only sharpens row-group skipping on freshly-landed
-    batches).
+    per tp directory, sorted by term like a landed batch's, so
+    row-group skipping by term (the Spark scan's IN predicate, the
+    driver read's footer budget) works on the folded base too; the
+    search face never relies on the order for correctness.
     Returns directories removed."""
     return _compact_lww_stores(
         spark, state_dir, upto, checkpoint_dir, _TEXT_STORES
@@ -487,12 +514,13 @@ def _pruned_postings(
     postings_dir: str,
     terms: list[tuple[str, int]],
 ):
-    """Landed posting rows pruned to the query terms: tp literals prune
-    partitions at the directory level, the term IN-list pushes to the
-    parquet scan (row-group min/max skipping against the term-sorted
-    files). `terms` is bounded (the seed workload), so both predicates
-    are static literals. Rows are version-stamped; callers mask
-    visibility with _mask_visible."""
+    """Above _POSTINGS_BUDGET (or without a driver-read tail): landed
+    posting rows pruned to the query terms, as a Spark scan. tp literals
+    prune partitions at the directory level, the term IN-list pushes to
+    the parquet scan (row-group min/max skipping against the
+    term-sorted files). `terms` is bounded (the seed workload), so both
+    predicates are static literals. Rows are version-stamped; callers
+    mask visibility with _mask_visible."""
     store = _read_store(
         spark, postings_dir, "postings index store dir", _POSTING_SCHEMA
     )
@@ -502,6 +530,31 @@ def _pruned_postings(
         .filter(F.col("term").isin(sorted({t for t, _ in terms})))
         .select(*_cols(_POSTING_SCHEMA))
     )
+
+
+def _driver_postings(
+    postings_dir: str, terms: list[tuple[str, int]], tail: list[dict]
+) -> pa.Table | None:
+    """The query terms' visible posting rows, read on the driver: the
+    terms' tp directories in every batch, in them only the row groups
+    whose term min/max covers a query term, cut to the terms and masked
+    against the driver-read tail winners (_visible_rows). None, before
+    any row is read, when the footers count more than _POSTINGS_BUDGET
+    rows in those row groups."""
+    files = _driver_files(
+        postings_dir,
+        "postings index store dir",
+        lambda i: True,
+        {tp for _, tp in terms},
+    )
+    rows = _driver_read(
+        files,
+        _POSTING_ARROW,
+        "term",
+        sorted({t for t, _ in terms}),
+        cap=_POSTINGS_BUDGET,
+    )
+    return None if rows is None else _visible_rows(rows, tail)
 
 
 def bm25_index_search(
@@ -593,29 +646,49 @@ def _serve_workload(
     terms: list[tuple[str, int]],
 ) -> DataFrame:
     """The shared serving stage: snapshot-corrected corpus constants,
-    tp-pruned + term-IN-pushed postings read, tail visibility mask,
-    and the batch op's scoring kernel (bm25_topk) over the request's
-    (query_id, term) pairs."""
+    the query terms' visible postings, and the batch op's scoring
+    kernel (bm25_topk) over the request's (query_id, term) pairs. Under
+    _POSTINGS_BUDGET the postings are a driver read scored on one
+    partition; above it, a pruned Spark scan masked against the tail
+    and spread by term."""
     n, avgdl = _live_stats(state_dir, tail)
     queries = _local_frame(
         spark,
         query_id=pa.array([q for q, _ in pairs], pa.int64()),
         term=pa.array([t for _, t in pairs], pa.string()),
     )
-    cand = _pruned_postings(spark, f"{state_dir}/postings", terms)
-    # ONE pinned-width exchange by term feeds the kernel's df window:
-    # left to AQE, the by-term shuffle coalesces to one partition while
-    # the query fan-out and aggregation behind it are the CPU-heavy part
-    # (the shape bm25_keyword_search pins the same way).
-    postings = spread(
-        _mask_visible(cand, tail.frame).select(
-            "doc_id",
-            F.col("dl").cast("double").alias("dl"),
+    postings_dir = f"{state_dir}/postings"
+    rows = None
+    if tail.rows is not None:
+        rows = _driver_postings(postings_dir, terms, tail.rows)
+    if rows is not None:
+        # one partition satisfies the distribution of the kernel's df
+        # window, aggregate and rank window alike, so it plans no
+        # exchange: the scoring query runs the queries' broadcast and
+        # the collect
+        postings = _local_frame(
+            spark,
+            doc_id=rows["doc_id"],
+            dl=rows["dl"].cast(pa.float64()),
+            term=rows["term"],
+            tf=rows["tf"].cast(pa.float64()),
+        ).coalesce(1)
+    else:
+        cand = _pruned_postings(spark, postings_dir, terms)
+        # ONE pinned-width exchange by term feeds the kernel's df
+        # window: left to AQE, the by-term shuffle coalesces to one
+        # partition while the query fan-out and aggregation behind it
+        # are the CPU-heavy part (the shape bm25_keyword_search pins
+        # the same way).
+        postings = spread(
+            _mask_visible(cand, tail.frame).select(
+                "doc_id",
+                F.col("dl").cast("double").alias("dl"),
+                "term",
+                F.col("tf").cast("double").alias("tf"),
+            ),
             "term",
-            F.col("tf").cast("double").alias("tf"),
-        ),
-        "term",
-    )
+        )
     # the result is at most _BM25_TOPK rows per query: one partition
     # sorted locally is the global order, without the range sort's
     # sampling job and exchange. coalesce, not repartition: AQE already

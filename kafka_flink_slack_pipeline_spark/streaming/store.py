@@ -25,6 +25,13 @@ nondecreasing, distinct ts; a fold repairs violations globally.
     _LOOKUP_CAP ledger rows, a serve reads the tail and its fold-side
     point lookup on the driver (_ledger_read, _lww_rows) and runs no
     Spark job for them; the store is driver-local (_assert_local_dir).
+    The same driver reader (_driver_files, _driver_read) serves the
+    index's postings under _POSTINGS_BUDGET, masked by the driver twin
+    of the tail mask (_visible_rows). It reads only the row groups
+    whose min/max covers a requested key and decides every cap from
+    the parquet footers before it reads a row, so the folds keep each
+    file sorted by its lookup key (_LwwStore.sort_by; doc_id in the
+    ledger).
   - Fold time: data stores drop non-live rows physically
     (_compact_lww_stores), the per-dp stats snapshot is written, and
     docmeta folds to one winner row per doc with tombstones retained
@@ -101,6 +108,16 @@ _COMPACT_TMP_PREFIX = "_compact_tmp."
 # doc_id IN literals, whose planning time the cap bounds. Above it, a
 # dp-pruned scan plus a semi-join, which grows with the folded corpus.
 _LOOKUP_CAP = 8192
+# Driver postings-read budget: a serve whose query terms' covering row
+# groups (term min/max, footer counts) hold at most this many rows reads
+# them on the driver and scores them on one partition; above it, a
+# pruned Spark scan spread by term. The one partition wins while the
+# scoring is small: measured on a 4-core host, the crossover lies near
+# 60k covering rows when nearly every covering row matches a common
+# query term (the seed workload of tools/index_probe.py), far higher
+# when few do (rare terms, as ad-hoc marker queries are); CHANGES.md
+# has the table. The budget sits below the lower crossover.
+_POSTINGS_BUDGET = 50_000
 # Declared schemas: a read that names its schema runs no parquet
 # footer-inference job. Partition columns keep the types Spark infers
 # from directory names (batch_id, dp: int).
@@ -320,6 +337,7 @@ class _LwwStore(NamedTuple):
     partition_cols: list[str]
     what: str
     key: str = "doc_id"  # the doc column; query_id in a seed sidecar
+    sort_by: str | None = None  # the order of each folded file
 
 
 def _pruned_store(
@@ -465,7 +483,36 @@ def _lww_rows(rows: list[dict]) -> list[dict]:
     return list(best.values())
 
 
-_LEDGER_COLS = ["doc_id", "ts", "deleted", "dl"]
+def _visible_rows(rows: pa.Table, tail: list[dict]) -> pa.Table:
+    """_mask_visible on the driver: `rows` (carrying doc_id and ts_us)
+    against the tail's driver winners (_lww_rows), by the same
+    three-valued logic, so a null ts or deleted flag decides alike."""
+    t = pa.table(
+        {
+            "doc_id": pa.array([r["doc_id"] for r in tail], pa.int64()),
+            "_t_ts": pa.array([r["ts_us"] for r in tail], pa.int64()),
+            "_t_del": pa.array([r["deleted"] for r in tail], pa.bool_()),
+        }
+    )
+    j = rows.join(t, "doc_id", join_type="left outer")
+    keep = pc.or_kleene(
+        pc.is_null(j["_t_ts"]),
+        pc.and_kleene(
+            pc.equal(j["ts_us"], j["_t_ts"]), pc.invert(j["_t_del"])
+        ),
+    )
+    return j.filter(keep).drop_columns(["_t_ts", "_t_del"])
+
+
+# The ledger's data columns as the driver reads them (_driver_read).
+_LEDGER_ARROW = pa.schema(
+    [
+        ("doc_id", pa.int64()),
+        ("ts_us", pa.int64()),
+        ("deleted", pa.bool_()),
+        ("dl", pa.int64()),
+    ]
+)
 
 
 def _data_files(path: str) -> list[str]:
@@ -476,6 +523,76 @@ def _data_files(path: str) -> list[str]:
         for e in sorted(os.listdir(path))
         if not e.startswith(("_", "."))
     ]
+
+
+def _driver_files(
+    store_dir: str, what: str, batches, parts: set[int] | None = None
+) -> list[tuple[int, str]]:
+    """(partition value, path) of the data files of a store partitioned
+    one level below its batches (dp=<k>, tp=<k>), in the batch_id=<i>
+    directories whose id satisfies the predicate `batches` and, with
+    `parts`, in the partition directories whose value is in it. Guarded
+    like every store read (_assert_landed)."""
+    _assert_landed(store_dir, what)
+    files = []
+    for i in _batch_ids(store_dir):
+        if not batches(i):
+            continue
+        for d in _data_files(os.path.join(store_dir, f"batch_id={i}")):
+            k = int(os.path.basename(d).split("=", 1)[1])
+            if parts is None or k in parts:
+                files += [(k, f) for f in _data_files(d)]
+    return files
+
+
+def _driver_read(
+    files: list[tuple[int, str]],
+    schema: pa.Schema,
+    key: str | None = None,
+    values: list | None = None,
+    cap: int | None = None,
+    part: str | None = None,
+) -> pa.Table | None:
+    """The rows of `files` (_driver_files) read on the driver with
+    pyarrow as one table of `schema`, whose ts_us column carries the
+    files' ts as epoch microseconds (INT96 as Spark writes it). Each
+    file is cast to `schema`, so files that declare a column not null
+    (a fold's output) and files that do not (a land's) read alike.
+
+    With `values` (sorted): only the row groups whose `key` min/max
+    covers one of them (_covering), cut to those rows. With `cap`:
+    None, before any row is read, when the footers count more than
+    `cap` rows in the row groups to read. With `part`: the partition
+    value as an int column of that name."""
+    plan, n = [], 0
+    for k, path in files:
+        meta = pq.read_metadata(path)
+        groups = (
+            list(range(meta.num_row_groups))
+            if values is None
+            else _covering(meta, values, key)
+        )
+        n += sum(meta.row_group(g).num_rows for g in groups)
+        if cap is not None and n > cap:
+            return None
+        if groups:
+            plan.append((k, path, meta, groups))
+    out = schema if part is None else schema.append(pa.field(part, pa.int32()))
+    names = ["ts" if c == "ts_us" else c for c in schema.names]
+    tables = []
+    for k, path, meta, groups in plan:
+        with pq.ParquetFile(
+            path, metadata=meta, coerce_int96_timestamp_unit="us"
+        ) as f:
+            t = f.read_row_groups(groups, columns=names)
+        if values is not None:
+            t = t.filter(pc.is_in(t[key], value_set=pa.array(values)))
+        ts = t["ts"].cast(pa.timestamp("us", t["ts"].type.tz))
+        t = t.set_column(names.index("ts"), "ts_us", ts.cast(pa.int64()))
+        if part is not None:
+            t = t.append_column(part, pa.array([k] * len(t), pa.int32()))
+        tables.append(t.cast(out))
+    return pa.concat_tables(tables) if tables else out.empty_table()
 
 
 def _ledger_read(
@@ -491,53 +608,28 @@ def _ledger_read(
     the row groups whose doc_id min/max covers one of the docs, cut to
     those docs; in the doc_id-sorted fold that is about one row group
     per doc, whatever the corpus size."""
-    dm_dir = f"{state_dir}/docmeta"
-    _assert_landed(dm_dir, "docmeta store dir")
-    dps = None if docs is None else {f"dp={r['dp']}" for r in docs}
-    files = []
-    for i in _batch_ids(dm_dir):
-        if not batches(i):
-            continue
-        for d in _data_files(os.path.join(dm_dir, f"batch_id={i}")):
-            name = os.path.basename(d)
-            if dps is None or name in dps:
-                dp = int(name.split("=", 1)[1])
-                files += [(dp, f) for f in _data_files(d)]
-    if cap is not None:
-        # footers only, one file open at a time, stopping at the cap
-        n = 0
-        for _, f in files:
-            n += pq.read_metadata(f).num_rows
-            if n > cap:
-                return None
+    dps = None if docs is None else {r["dp"] for r in docs}
+    files = _driver_files(
+        f"{state_dir}/docmeta", "docmeta store dir", batches, dps
+    )
     ids = None if docs is None else sorted({r["doc_id"] for r in docs})
-    rows = []
-    for dp, path in files:
-        with pq.ParquetFile(path, coerce_int96_timestamp_unit="us") as f:
-            if ids is None:
-                t = f.read(columns=_LEDGER_COLS)
-            else:
-                groups = _covering(f, ids)
-                t = f.read_row_groups(groups, columns=_LEDGER_COLS)
-                t = t.filter(pc.is_in(t["doc_id"], value_set=pa.array(ids)))
-        us = pa.timestamp("us", t["ts"].type.tz)
-        t = t.set_column(1, "ts_us", t["ts"].cast(us).cast(pa.int64()))
-        rows += [dict(r, dp=dp) for r in t.to_pylist()]
-    return rows
+    t = _driver_read(files, _LEDGER_ARROW, "doc_id", ids, cap, part="dp")
+    return None if t is None else t.to_pylist()
 
 
-def _covering(f: pq.ParquetFile, ids: list[int]) -> list[int]:
-    """The row groups of `f` whose doc_id min/max covers one of the
-    sorted `ids`; a row group without statistics is read."""
-    col = f.schema_arrow.get_field_index("doc_id")
+def _covering(meta: pq.FileMetaData, values: list, key: str) -> list[int]:
+    """The row groups of a parquet file (its footer `meta`) whose `key`
+    min/max covers one of the sorted `values`; a row group without
+    statistics is read."""
+    col = meta.schema.names.index(key)
     hit = []
-    for g in range(f.metadata.num_row_groups):
-        st = f.metadata.row_group(g).column(col).statistics
+    for g in range(meta.num_row_groups):
+        st = meta.row_group(g).column(col).statistics
         if st is None or not st.has_min_max:
             hit.append(g)
             continue
-        k = bisect_left(ids, st.min)
-        if k < len(ids) and ids[k] <= st.max:
+        k = bisect_left(values, st.min)
+        if k < len(values) and values[k] <= st.max:
             hit.append(g)
     return hit
 
@@ -765,6 +857,7 @@ def _lww_fold(
         transform=lambda df: df.join(mask, [store.key, "ts"]),
         force=True,
         schema=store.schema,
+        sort_by=store.sort_by,
     )
 
 

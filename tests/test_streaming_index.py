@@ -322,37 +322,60 @@ def test_index_update_delete_parity_precompaction(spark, lww_dirs):
 def test_index_above_cap_path_serves_identically(
     spark, lww_dirs, tmp_path, monkeypatch
 ):
-    """A tail above _LOOKUP_CAP keeps the distributed path (tail
-    frame recomputed per use, dp-pruned stats correction): both search
-    faces serve the same rows as the collected-tail path, before and
-    after a fold. Runs on a copy, so the shared fixture stays as is."""
+    """Every serving branch serves the same rows through both search
+    faces, before and after a fold: the driver postings read under
+    _POSTINGS_BUDGET, the pruned Spark scan above it (forced with a
+    budget of 1), and the distributed tail above _LOOKUP_CAP (tail
+    frame recomputed per use, dp-pruned stats correction), which also
+    reads the postings through Spark. Runs on a copy, so the shared
+    fixture stays as is."""
     state = str(tmp_path / "state")
     shutil.copytree(lww_dirs["state"], state)
     words = lww_dirs["texts"][1].split()
     adhoc = {0: "juliett kilo lima", 1: " ".join(words[:3]), 2: "revised"}
+    ran = []
+    driver, scan = ri._driver_postings, ri._pruned_postings
 
-    def serve():
-        return (
+    def spy_driver(*args):
+        rows = driver(*args)
+        ran.append("over budget" if rows is None else "driver read")
+        return rows
+
+    def spy_scan(*args):
+        ran.append("spark scan")
+        return scan(*args)
+
+    monkeypatch.setattr(ri, "_driver_postings", spy_driver)
+    monkeypatch.setattr(ri, "_pruned_postings", spy_scan)
+
+    def serve(branch):
+        ran.clear()
+        got = (
             [tuple(r) for r in bm25_index_search(spark, state).collect()],
             [
                 tuple(r)
                 for r in bm25_index_search_adhoc(spark, state, adhoc).collect()
             ],
         )
+        assert ran == branch * 2, f"ran {ran}, not {branch} per face"
+        return got
 
     for fold in (False, True):
         if fold:  # fold all but the newest batch, which stays the tail
             newest = max(_batch_ids(f"{state}/docmeta"))
             compact_retrieval_store(spark, state, upto=newest)
             assert _fold_horizon(state) >= 0
-        want = serve()
+        want = serve(["driver read"])
         assert want[0] and want[1], "empty workload — comparison vacuous"
+        with monkeypatch.context() as m:
+            m.setattr(ri, "_POSTINGS_BUDGET", 1)
+            assert serve(["over budget", "spark scan"]) == want
         with monkeypatch.context() as m:
             m.setattr(ri, "_LOOKUP_CAP", 1)
             assert ri._serve_tail(spark, state).rows is None, (
                 "tail within the patched cap — branch not exercised"
             )
-            assert serve() == want
+            assert serve(["spark scan"]) == want
 
 
 def test_index_update_delete_parity_postcompaction(spark, lww_dirs):
@@ -615,14 +638,14 @@ def test_adhoc_request_frame_odd_tokens_and_job_budget(spark, tmp_path):
     ]
     assert got == want
     assert {q for q, *_ in got} == set(_ODD_QUERIES)
-    # measured 6 at 2, 4 and 8 cores: the scoring query alone, since
-    # the tail, the snapshot totals and the fold-side correction are
-    # driver reads (11 when the tail was a Spark collect and the
-    # statistics a Spark aggregate). A Spark read reintroduced for the
-    # tail or the statistics, a store read without its schema, a
-    # request frame that is an RDD or a global range sort at the end
-    # adds a job
-    assert len(jobs) <= 6, f"ad-hoc serve ran {len(jobs)} Spark jobs"
+    # measured 2 at 2, 4 and 8 cores: the scoring query's broadcast of
+    # the request frame and its collect, since the tail, the statistics
+    # and the postings are driver reads scored on one partition (6 with
+    # the postings a Spark scan spread by term, 11 when the tail was
+    # also a Spark collect and the statistics a Spark aggregate). A
+    # Spark read reintroduced for any of them, a request frame that is
+    # an RDD or a global range sort at the end adds a job
+    assert len(jobs) <= 2, f"ad-hoc serve ran {len(jobs)} Spark jobs"
 
 
 def test_run_concurrently_reraises_after_every_write(spark):
@@ -870,6 +893,149 @@ def test_land_computes_the_persisted_batch_once(spark, tmp_path):
         assert terms == sorted(terms), f"{f}: terms out of order {terms}"
 
 
+def test_folded_postings_keep_term_order(spark, tmp_path):
+    """A fold writes each tp file of the postings store term-sorted, as
+    the land does, so row-group skipping by term (the Spark scan's IN
+    predicate and the driver read's footer budget) works on the folded
+    base too."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    state = str(tmp_path / "state")
+    _tail_store(spark, state)
+    compact_retrieval_store(spark, state, upto=3)
+    assert _batch_ids(f"{state}/postings") == [2]
+    files = glob.glob(f"{state}/postings/batch_id=2/tp=*/*.parquet")
+    distinct = 0
+    for f in files:
+        terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+        assert terms == sorted(terms), f"{f}: terms out of order {terms}"
+        distinct = max(distinct, len(set(terms)))
+    assert distinct > 2, "no folded file holds enough terms to show an order"
+
+
+def test_driver_visibility_matches_spark_mask(spark):
+    """The driver mask (_visible_rows) keeps the same rows as Spark's
+    _mask_visible against the same tail winners: a doc absent from the
+    tail, a superseded version, a tombstone winner, an exact-ts tie
+    (resolved delete-over-update by the LWW), null dl, a null ts on
+    either side."""
+    import pyarrow as pa
+
+    t1, t2 = 1_000_000, 2_000_000
+    ledger = [
+        # doc 1 is absent from the tail
+        {"doc_id": 2, "ts_us": t1, "deleted": False, "dl": 3},
+        {"doc_id": 2, "ts_us": t2, "deleted": False, "dl": 4},  # winner
+        {"doc_id": 3, "ts_us": t2, "deleted": True, "dl": None},  # tombstone
+        {"doc_id": 4, "ts_us": t1, "deleted": False, "dl": 2},  # exact-ts
+        {"doc_id": 4, "ts_us": t1, "deleted": True, "dl": None},  # tie
+        {"doc_id": 5, "ts_us": t2, "deleted": False, "dl": None},  # null dl
+        {"doc_id": 6, "ts_us": None, "deleted": False, "dl": 1},  # null ts
+    ]
+    tail = _lww_rows(ledger)
+    assert {r["doc_id"]: r["deleted"] for r in tail}[4] is True
+    rows = [
+        (1, t1, 5, "a"),
+        (1, None, 5, "b"),
+        (2, t1, 3, "a"),  # superseded
+        (2, t2, 4, "a"),
+        (2, None, 4, "b"),
+        (3, t1, 2, "a"),
+        (3, t2, 2, "b"),
+        (4, t1, 2, "a"),
+        (5, t2, None, "a"),
+        (5, t1, None, "b"),
+        (6, t1, 1, "a"),
+        (7, t2, None, "c"),
+    ]
+    table = pa.table(
+        {
+            "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts_us": pa.array([r[1] for r in rows], pa.int64()),
+            "dl": pa.array([r[2] for r in rows], pa.int64()),
+            "term": pa.array([r[3] for r in rows], pa.string()),
+        }
+    )
+    got = Counter(
+        tuple(r.values()) for r in store._visible_rows(table, tail).to_pylist()
+    )
+
+    def frame(t):
+        return spark.createDataFrame(t).withColumn(
+            "ts", F.timestamp_micros("ts_us")
+        )
+
+    tail_frame = frame(
+        pa.table(
+            {
+                "doc_id": pa.array([r["doc_id"] for r in tail], pa.int64()),
+                "ts_us": pa.array([r["ts_us"] for r in tail], pa.int64()),
+                "deleted": pa.array([r["deleted"] for r in tail]),
+            }
+        )
+    )
+    want = Counter(
+        tuple(r)
+        for r in store._mask_visible(frame(table), tail_frame)
+        .select("doc_id", "ts_us", "dl", "term")
+        .collect()
+    )
+    assert got == want
+    assert want == Counter(
+        [
+            (1, t1, 5, "a"),
+            (1, None, 5, "b"),
+            (2, t2, 4, "a"),
+            (5, t2, None, "a"),
+            (6, t1, 1, "a"),
+            (7, t2, None, "c"),
+        ]
+    )
+
+
+def test_driver_postings_read_equals_the_spark_scan(spark, tmp_path):
+    """On a store that holds a folded batch beside a landed one, the
+    driver postings read equals the masked Spark scan of the same
+    terms. A fold's files declare term and tf not null and a land's do
+    not; the read casts each file to the declared types, so the two
+    concatenate."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    state = str(tmp_path / "state")
+    _tail_store(spark, state)
+    compact_retrieval_store(spark, state, upto=2)
+    nullable = {
+        pq.read_schema(f).field("term").nullable
+        for f in glob.glob(f"{state}/postings/*/tp=*/*.parquet")
+    }
+    assert nullable == {False, True}, "store does not mix the two schemas"
+    words = sorted({t for q in _ODD_QUERIES.values() for t in q.split()})
+    terms = [
+        (r["term"], r["tp"])
+        for r in spark.createDataFrame([(w,) for w in words], "term string")
+        .select("term", store._tp_col().alias("tp"))
+        .collect()
+    ]
+    tail = ri._serve_tail(spark, state)
+    assert tail.rows, "empty tail — mask not exercised"
+    got = ri._driver_postings(f"{state}/postings", terms, tail.rows)
+    assert got is not None
+    want = Counter(
+        tuple(r)
+        for r in store._mask_visible(
+            ri._pruned_postings(spark, f"{state}/postings", terms), tail.frame
+        )
+        .select("term", "doc_id", "tf", "dl", F.unix_micros("ts"))
+        .collect()
+    )
+    assert Counter(tuple(r.values()) for r in got.to_pylist()) == want
+    assert want
+
+
 def test_driver_lww_matches_spark_lww(spark, tmp_path):
     """The driver ledger read and LWW (_ledger_read, _lww_rows) equal
     Spark's _lww over the same landed ledger on adversarial versions,
@@ -1076,8 +1242,8 @@ def test_ledger_point_lookup_reads_only_covering_row_groups(
     read = []
     covering = store._covering
 
-    def recording(f, ids):
-        groups = covering(f, ids)
+    def recording(*args):
+        groups = covering(*args)
         read.extend(groups)
         return groups
 
@@ -1094,8 +1260,74 @@ def test_ledger_point_lookup_reads_only_covering_row_groups(
     ]
     assert all(r["dp"] == 3 for r in got)
 
-    monkeypatch.setattr(
-        pq.ParquetFile, "read", lambda *a, **k: pytest.fail("rows read")
-    )
+    for reader in ("read", "read_row_groups"):
+        monkeypatch.setattr(
+            pq.ParquetFile, reader, lambda *a, **k: pytest.fail("rows read")
+        )
     junk.unlink()
     assert _ledger_read(str(state), lambda i: True, cap=11) is None
+
+
+def test_postings_driver_read_reads_only_covering_row_groups(
+    tmp_path, monkeypatch
+):
+    """The driver postings read opens only the query terms' tp
+    directories and, in them, reads only the row groups whose term
+    min/max covers a query term (a term equal to a group's max
+    included) and every row group without statistics; over
+    _POSTINGS_BUDGET the footers decide before any row is read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    postings = tmp_path / "postings"
+    part = postings / "batch_id=0" / "tp=3"
+    part.mkdir(parents=True)
+    terms = ["a", "b", "c", "d", "e", "f", "g", "h"]
+
+    def write(name, words, **kw):
+        pq.write_table(
+            pa.table(
+                {
+                    "term": pa.array(words),
+                    "doc_id": pa.array(range(len(words)), pa.int64()),
+                    "tf": pa.array([1] * len(words), pa.int64()),
+                    "dl": pa.array([2] * len(words), pa.int64()),
+                    "ts": pa.array(range(len(words)), pa.timestamp("us")),
+                }
+            ),
+            part / name,
+            row_group_size=2,
+            **kw,
+        )
+
+    write("part-0.parquet", terms)
+    write("part-1.parquet", ["b", "x"], write_statistics=False)
+    # a tp directory no query term hashes to holds a file that is not
+    # parquet: opening it would fail the read
+    junk = postings / "batch_id=0" / "tp=4" / "part-0.parquet"
+    junk.parent.mkdir()
+    junk.write_text("not parquet")
+    read = []
+    covering = store._covering
+
+    def recording(meta, *args):
+        groups = covering(meta, *args)
+        read.append((meta.num_rows, groups))
+        return groups
+
+    monkeypatch.setattr(store, "_covering", recording)
+    query = [("b", 3), ("cc", 3), ("f", 3)]
+    got = ri._driver_postings(str(postings), query, [])
+    assert sorted(read) == [(2, [0]), (8, [0, 1, 2])], (
+        "read row groups that cover no query term"
+    )
+    assert sorted(
+        (r["term"], r["doc_id"], r["ts_us"]) for r in got.to_pylist()
+    ) == [("b", 0, 0), ("b", 1, 1), ("f", 5, 5)]
+
+    for reader in ("read", "read_row_groups"):
+        monkeypatch.setattr(
+            pq.ParquetFile, reader, lambda *a, **k: pytest.fail("rows read")
+        )
+    monkeypatch.setattr(ri, "_POSTINGS_BUDGET", 7)
+    assert ri._driver_postings(str(postings), query, []) is None

@@ -14,14 +14,19 @@ empty-tail fast path.
 Layouts compared at each size:
 
   pruned        — the shipped path: (tp)-partitioned, term-sorted-
-                  within-files postings + tp literals + term IN
-                  pushdown (bm25_index_search verbatim)
+                  within-files postings read through the query terms'
+                  tp directories and covering row groups
+                  (bm25_index_search verbatim): on the driver while
+                  the footers count at most ri._POSTINGS_BUDGET rows,
+                  else a Spark scan with tp literals + term IN
+                  pushdown; each size records which path it timed
   unpartitioned — the naive layout counterfactual: identical posting
                   rows landed flat and UNSORTED (doc order), term
                   filter still applied but nothing for the scan to
                   skip with; docmeta/seeds/statsnap/tail identical
                   (the funnel/media probes' honest rule: the engine
-                  can rescue a lazy plan, not a lazy layout)
+                  can rescue a lazy plan, not a lazy layout); always
+                  served by the Spark scan (asserted)
 
 Store growth: the decade points add 9 / 99 / 999 replicas of every
 base posting row with REMAPPED terms (term || '#r<i>' — distinct
@@ -258,13 +263,13 @@ def _add_tail(spark, corpus_dir, state_dir, flat_postings_dir, tail_id):
 _FLAT_SCHEMA = ri._POSTING_SCHEMA.replace("tp int", "tp bigint")
 
 
-def _serve_flat(spark, state_dir, flat_postings_dir):
-    """bm25_index_search with ONLY the postings read swapped for the
-    flat layout (no tp pruning, nothing sorted) — every other stage
-    (seed mask, snapshot-corrected stats, tail mask, scoring) is the
-    module's real code, so the delta is pure postings layout."""
+def _flat_postings(flat_postings_dir):
+    """The postings read of the flat layout (no tp pruning, nothing
+    sorted), in place of ri._pruned_postings: every other stage of the
+    serve (seed mask, snapshot-corrected stats, tail mask, scoring) is
+    the module's real code, so the delta is pure postings layout."""
 
-    def flat_postings(spark, _postings_dir, terms):
+    def read(spark, _postings_dir, terms):
         return (
             spark.read.option("basePath", flat_postings_dir)
             .schema(_FLAT_SCHEMA)
@@ -273,18 +278,37 @@ def _serve_flat(spark, state_dir, flat_postings_dir):
             .select(*store._cols(ri._POSTING_SCHEMA))
         )
 
-    real = ri._pruned_postings
-    ri._pruned_postings = flat_postings  # the plan is built in the call
-    try:
-        return ri.bm25_index_search(spark, state_dir)
-    finally:
-        ri._pruned_postings = real
+    return read
 
 
 def _serve(spark, state_dir, flat_postings_dir, pruned):
-    if pruned:
-        return ri.bm25_index_search(spark, state_dir).collect()
-    return _serve_flat(spark, state_dir, flat_postings_dir).collect()
+    """(rows, postings path) of one bm25_index_search: "driver read"
+    when the postings came from the driver read under
+    ri._POSTINGS_BUDGET, "spark scan" when a Spark scan read them. The
+    flat layout has no tp directories for the driver read, so its serve
+    always takes the Spark scan."""
+    ran = []
+    scan = ri._pruned_postings if pruned else _flat_postings(flat_postings_dir)
+    driver = ri._driver_postings if pruned else (lambda *args: None)
+
+    def spy_driver(*args):
+        rows = driver(*args)
+        if rows is not None:
+            ran.append("driver read")
+        return rows
+
+    def spy_scan(*args):
+        ran.append("spark scan")
+        return scan(*args)
+
+    real = ri._pruned_postings, ri._driver_postings
+    ri._pruned_postings, ri._driver_postings = spy_scan, spy_driver
+    try:  # the plan is built in the call
+        rows = ri.bm25_index_search(spark, state_dir).collect()
+    finally:
+        ri._pruned_postings, ri._driver_postings = real
+    assert len(ran) == 1, f"one postings read per serve, got {ran}"
+    return rows, ran[0]
 
 
 def main() -> None:
@@ -346,8 +370,13 @@ def main() -> None:
         for shape in ("pruned", "unpartitioned"):
             pruned = shape == "pruned"
             times: dict[str, float] = {}
+            paths: dict[str, str] = {}
             for name, (state, flat) in stores.items():
-                rows = _serve(spark, state, flat, pruned)
+                rows, paths[name] = _serve(spark, state, flat, pruned)
+                if not pruned:
+                    assert paths[name] == "spark scan", (
+                        f"flat layout served by {paths[name]} at {name}"
+                    )
                 canon = sorted(tuple(r) for r in rows)
                 if name in reference:
                     assert reference[name] == canon, (
@@ -358,17 +387,20 @@ def main() -> None:
                 samples = []
                 for _ in range(2):
                     t0 = time.time()
-                    r2 = _serve(spark, state, flat, pruned)
+                    r2, path = _serve(spark, state, flat, pruned)
                     samples.append(time.time() - t0)
                     assert sorted(tuple(r) for r in r2) == canon
+                    assert path == paths[name], f"path changed at {name}"
                 times[name] = round(min(samples), 3)
-            growth = store_rows["x1000"] / store_rows["base"]
+            big = list(STORE_REPLICAS)[-1]
+            growth = store_rows[big] / store_rows["base"]
             exponent = round(
-                math.log(times["x1000"] / times["base"]) / math.log(growth),
+                math.log(times[big] / times["base"]) / math.log(growth),
                 3,
             )
             results[shape] = {
                 "times_by_store": times,
+                "postings_path_by_store": paths,
                 "store_size_exponent": exponent,
             }
 
@@ -385,7 +417,10 @@ def main() -> None:
                 "workload's own lists fixed, stats ledger growing); "
                 "every store carries a live one-batch update tail so "
                 "the mask does real work; warmup + 2 passes, min; "
-                "identical rows asserted across layouts and sizes"
+                "identical rows asserted across layouts and sizes; the "
+                "pruned layout's postings path (driver read under "
+                "ri._POSTINGS_BUDGET, else Spark scan) recorded per "
+                "store, the flat layout always a Spark scan"
             ),
             "shapes": results,
         }
